@@ -1802,7 +1802,13 @@ object Pipeline {
     * SAME token array, cell-identical to what gopherQuality re-derives
     * through the aggregation (the scalars are per-doc constants), and
     * every doc appears exactly once on both paths (explode_outer keeps
-    * bigram-less docs there; no explode exists here). */
+    * bigram-less docs there; no explode exists here).
+    *
+    * Assumes `doc_id` is unique in the documents table: this path emits
+    * one row per documents ROW, while gopherQuality collapses through two
+    * doc_id-keyed aggregations, so a duplicated doc_id would give
+    * duplicate rows here only (SelectionSpec asserts the uniqueness on
+    * the fixture). */
   private[graft] def distinctFracs(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"),
       filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
@@ -3285,15 +3291,26 @@ object Pipeline {
 
   private val SpanTokens = 20
 
+  /** Raw-text test for "at least [[SpanTokens]] tokens": 19 (letter-run,
+    * separator) pairs then a 20th run start. Valid only for the ASCII
+    * [[Fns.TokenPattern]] tokenizer (tokens are exactly the maximal
+    * [a-zA-Z] runs); a query that switches to `tokensArrUnicode` must
+    * change the letter class here too. The possessive runs never give
+    * back letters, and the lookbehind starts a match only at a run start,
+    * so `find` is linear: without it every offset inside a long letter
+    * run rescans the rest of the run (3 runs of 10⁵ letters: 76 s
+    * possessive, 37 ms anchored, JDK 17 on one Xeon vCPU). The match
+    * from a run start covers whole runs, so the row set is the same. */
+  private[graft] val SpanPrefilter =
+    s"(?<![a-zA-Z])(?:[a-zA-Z]++[^a-zA-Z]++){${SpanTokens - 1}}[a-zA-Z]"
+
   def substringDedup(s: SparkSession, dir: String): DataFrame = {
-    // span-less docs drop on the RAW text (round 18): ≥20 tokens ⟺ 19
-    // (letter-run, separator) pairs then a 20th run start — one regex
-    // find with an early exit on long docs, instead of the pushed-down
-    // `size(t) >= 20` re-tokenizing every row a second time below the
-    // span projection. Tokens are exactly the maximal [a-zA-Z] runs, so
-    // the row set is identical.
+    // span-less docs drop on the RAW text (round 18): one regex find with
+    // an early exit on long docs ([[SpanPrefilter]]), instead of the
+    // pushed-down `size(t) >= 20` re-tokenizing every row a second time
+    // below the span projection; the row set is identical.
     val d = Tables.documents(s, dir)
-      .filter(col("text").rlike(s"([a-zA-Z]+[^a-zA-Z]+){${SpanTokens - 1}}[a-zA-Z]"))
+      .filter(col("text").rlike(SpanPrefilter))
       .select(col("doc_id"),
         filter(tokensArr(col("text")), t => t =!= lit("")).as("t"))
     val spans = d

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.Fns
 import graft.operators.{Graph, Pipeline, Relational, Temporal}
 
 /** Behavior tests for the round-5 analytics operators: integer-exact
@@ -179,6 +180,35 @@ class AnalyticsSpec extends AnyFunSuite {
     val minDoc = spark.read.parquet(s"$sf/documents.parquet")
       .agg(min("doc_id")).collect()(0).getLong(0)
     assert(!out.map(_.getLong(0)).contains(minDoc))
+  }
+
+  test("substring_dedup: the raw-text prefilter keeps exactly the docs with 20+ tokens") {
+    val docs = Tables.documents(spark, sf)
+    val nTokens = size(filter(Fns.tokensArr(col("text")), t => t =!= lit("")))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).toSet
+    val kept = ids(docs.filter(col("text").rlike(Pipeline.SpanPrefilter)))
+    assert(kept.nonEmpty)
+    assert(kept === ids(docs.filter(nTokens >= 20)))
+    // the round-18 backtracking form selected the same fixture rows
+    assert(kept === ids(docs.filter(
+      col("text").rlike("([a-zA-Z]+[^a-zA-Z]+){19}[a-zA-Z]"))))
+  }
+
+  test("substring_dedup: a document of a few 10^5-letter runs finishes quickly") {
+    import spark.implicits._
+    val tmp = graft.util.TempDirs.create("graft_hostile").toString
+    val words = (1 to 25).map(i => s"w${"x" * (i % 5)}").mkString(" ")
+    val hostile = Seq("a", "b", "c").map(_ * 100000).mkString(" ", " ", " ")
+    Seq((1L, hostile), (2L, words), (3L, s"$words!"))
+      .toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+    val t0 = System.nanoTime()
+    val out = Pipeline.substringDedup(spark, tmp).collect()
+    val secs = (System.nanoTime() - t0) / 1e9
+    // an unanchored prefilter rescans the rest of a run from every offset
+    // in it: over a minute on the hostile row, possessive or not
+    assert(secs < 30.0, s"substringDedup took $secs s on the hostile doc")
+    assert(out.map(r => (r.getLong(0), r.getLong(2))).toSeq === Seq((3L, 2L)))
   }
 
   test("profile: census matches direct per-column aggregates in one scan") {

@@ -47,6 +47,15 @@ class SelectionSpec extends AnyFunSuite {
     assert(fused.head.getDouble(3) >= fused.last.getDouble(3))
   }
 
+  test("distinctFracs: one row per doc_id, which the fixture keeps unique") {
+    // distinctFracs emits one row per documents row; gopherQuality, the
+    // path it stands in for, groups by doc_id
+    val docs = Tables.documents(spark, sf)
+    val n = docs.count()
+    assert(n === docs.agg(countDistinct(col("doc_id"))).collect()(0).getLong(0))
+    assert(Pipeline.distinctFracs(spark, sf).count() === n)
+  }
+
   test("source_similarity: pairs are complete, ordered, and bounded") {
     val rows = Selection.sourceSimilarity(spark, sf).collect()
     val nSrc = Tables.documents(spark, sf).select("source").distinct().count()
