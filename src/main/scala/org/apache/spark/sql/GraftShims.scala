@@ -20,6 +20,26 @@ object GraftShims {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
+  /** Create Spark's JVM-wide cache of compiled generated classes (the
+    * Janino LRU in `CodeGenerator`) with capacity `entries(explicit)`,
+    * where `explicit` is the session's explicitly set
+    * `spark.sql.codegen.cache.maxEntries`. That static conf is read only
+    * by the `CodeGenerator` object's initializer, so the object is
+    * initialized here under a clone of the session conf carrying the
+    * capacity; the session's own conf is never written. If code
+    * generation already ran in this JVM the cache keeps its size. */
+  def sizeCodegenCache(spark: SparkSession, entries: Option[Int] => Int): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
+    val conf = spark.sessionState.conf
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
+    val explicit = if (conf.contains(key.key)) Some(conf.getConf(key)) else None
+    val sized = conf.clone()
+    sized.setConf(key, entries(explicit))
+    // any member access runs the object's initializer
+    SQLConf.withExistingConf(sized)(CodeGenerator.compileTime)
+  }
+
   /** Presentation-sort elision at the declared-query seam (optimization
     * round 17, guide §2.4 "an orderBy used only to make output
     * deterministic").

@@ -16,6 +16,9 @@ object SparkTestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    // before any spec generates code, or whichever spec compiles first
+    // fixes this JVM's generated-class cache at Spark's default size
+    Engine.sizeCodegenCache(s)
     s
   }
   val Sf = "/root/testdata/sf0.001"
