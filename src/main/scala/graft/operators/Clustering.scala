@@ -1,10 +1,12 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.util.Checkpoints.StableOps
+import graft.util.CorpusMemo
 import graft.functions.Fns
 
 /** Embedding-space clustering: integer-exact Lloyd k-means (the codebook
@@ -81,19 +83,14 @@ object Clustering {
 
   // final (centroids, assignment) memoized per (session, corpus) — the
   // trained codebook is computed once and shared by kmeans/semDedup.
-  // Lifecycle: see the note at Pipeline.pairCache — one session per run.
-  private val modelCache = graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame)]())
+  private val modelCache = CorpusMemo[(DataFrame, DataFrame)]()
 
   // the quantized corpus, materialized once per (session, corpus) — the
   // trainer and the persisted-model assignment pass share it instead of
   // each checkpointing their own copy (corpus-sized at scale)
-  private val qVecsCache = graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), DataFrame]())
+  private val qVecsCache = CorpusMemo[DataFrame]()
   private def qVecsStable(s: SparkSession, dir: String): DataFrame =
-    qVecsCache.computeIfAbsent((s, dir), _ => qVecs(s, dir).stable)
+    qVecsCache(s, dir)(qVecs(s, dir).stable)
 
   /** PERSISTED ANN MODELS (round 15, VERDICT r14 #5): with
     * `spark.graft.ann.modelPath` set, each trained model table — the
@@ -118,38 +115,30 @@ object Clustering {
     * (vec_id, embedding.list.element) — the exact inputs the models
     * derive from. Default-off: declared hashes untouched. */
   private def persistedGen(s: SparkSession, dir: String, family: String,
-                           table: String,
-                           cache: java.util.concurrent.ConcurrentHashMap[
-                             (SparkSession, String), org.apache.hadoop.fs.Path],
+                           table: String, cache: CorpusMemo[Path],
                            train: (SparkSession, String) => DataFrame)
-      : Option[org.apache.hadoop.fs.Path] =
+      : Option[Path] =
     s.conf.getOption("spark.graft.ann.modelPath").map { p =>
-      cache.computeIfAbsent((s, dir), _ =>
-        graft.util.GenStore.resolveOrBuild(s,
-          new org.apache.hadoop.fs.Path(p, family).toString,
+      cache(s, dir) {
+        graft.util.GenStore.resolveOrBuild(s, new Path(p, family).toString,
           fingerprint(s, dir), Seq(table)) { tmp =>
           train(s, dir).write.mode("overwrite")
-            .parquet(new org.apache.hadoop.fs.Path(tmp, table).toString)
-        })
+            .parquet(new Path(tmp, table).toString)
+        }
+      }
     }
 
   private def fingerprint(s: SparkSession, dir: String): String =
-    fpCache.computeIfAbsent((s, dir), _ => {
+    fpCache(s, dir) {
       val (n, digest) = graft.util.FooterStats.digest(s,
         s"$dir/embeddings.parquet",
         Seq("vec_id", "embedding.list.element"))
       s"graft-annmodel-v1|$dir|n=$n|stats=$digest"
-    })
+    }
 
-  private val fpCache = graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), String]())
-  private val kmGenCache = graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), org.apache.hadoop.fs.Path]())
-  private val pqGenCache = graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), org.apache.hadoop.fs.Path]())
+  private val fpCache = CorpusMemo[String]()
+  private val kmGenCache = CorpusMemo[Path]()
+  private val pqGenCache = CorpusMemo[Path]()
 
   /** Iters Lloyd rounds from the deterministic seed (vectors 0..k−1) —
     * the training loop alone; [[model]] derives the final assignment. */
@@ -169,15 +158,14 @@ object Clustering {
     * one-pass broadcast scoring of the corpus against those centroids
     * (identical either way — see [[persistedGen]]). */
   private def model(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    modelCache.computeIfAbsent((s, dir), _ => {
+    modelCache(s, dir) {
       val cents = persistedGen(s, dir, "kmeans", "kmeans_centroids",
         kmGenCache, trainCentroids) match {
-        case Some(g) => s.read.parquet(
-          new org.apache.hadoop.fs.Path(g, "kmeans_centroids").toString)
+        case Some(g) => s.read.parquet(new Path(g, "kmeans_centroids").toString)
         case None => trainCentroids(s, dir)
       }
       (cents, assign(qVecsStable(s, dir), cents).stable)
-    })
+    }
 
   /** k-means training summary: per final cluster, member count, exact
     * within-cluster squared-distance sum, the first two centroid
@@ -361,17 +349,13 @@ object Clustering {
 
   // trained (codebooks, final assignment) memoized per (session, corpus)
   // like modelCache — shared by the encoder summary and the ADC search.
-  private val pqCache = graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame)]())
+  private val pqCache = CorpusMemo[(DataFrame, DataFrame)]()
 
   // per-(session, corpus) materialized subvector table — shared by the
   // trainer and the persisted-model encoding pass (see qVecsCache)
-  private val subVecsCache = graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), DataFrame]())
+  private val subVecsCache = CorpusMemo[DataFrame]()
   private def subVecsStable(s: SparkSession, dir: String): DataFrame =
-    subVecsCache.computeIfAbsent((s, dir), _ => subVecs(s, dir).stable)
+    subVecsCache(s, dir)(subVecs(s, dir).stable)
 
   /** The PQ Lloyd loop alone — all [[PqM]] codebooks trained
     * simultaneously; [[pqModel]] derives the final encoding. */
@@ -391,15 +375,14 @@ object Clustering {
     * trained in-session otherwise; the encoding is always the
     * deterministic one-pass broadcast scoring against those codebooks. */
   private def pqModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pqCache.computeIfAbsent((s, dir), _ => {
+    pqCache(s, dir) {
       val cents = persistedGen(s, dir, "pq", "pq_codebooks",
         pqGenCache, trainPqCodebooks) match {
-        case Some(g) => s.read.parquet(
-          new org.apache.hadoop.fs.Path(g, "pq_codebooks").toString)
+        case Some(g) => s.read.parquet(new Path(g, "pq_codebooks").toString)
         case None => trainPqCodebooks(s, dir)
       }
       (cents, pqAssign(subVecsStable(s, dir), cents).stable)
-    })
+    }
 
   /** Product-quantization encoder: every vector compressed to [[PqM]]
     * codebook ids — 64 dims × 8 bytes down to 4 single-byte codes, the

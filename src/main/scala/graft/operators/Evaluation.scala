@@ -77,12 +77,10 @@ object Evaluation {
     * ride this subtree, and the table is corpus × k fixed-width rows —
     * exactly what a production eval job materializes once per corpus
     * snapshot. */
-  private val protoCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val protoCache = graft.util.CorpusMemo[DataFrame]()
 
   private[operators] def protoDistances(s: SparkSession, dir: String): DataFrame =
-    protoCache.computeIfAbsent((s, dir), _ => computeProtoDistances(s, dir).stable)
+    protoCache(s, dir)(computeProtoDistances(s, dir).stable)
 
   private def computeProtoDistances(s: SparkSession, dir: String): DataFrame = {
     val q = Clustering.labeledQVecs(s, dir)

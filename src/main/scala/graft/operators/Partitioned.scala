@@ -3,29 +3,27 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.CorpusMemo
 
 /** Hive-style partitioned layout: documents written `partitionBy(lang)` so
   * language-filtered scans touch only their directories. Static partition
   * pruning (literal filter → PartitionFilters) and dynamic partition
   * pruning (join-derived filter → runtime subquery on the scan) are both
   * declared queries, with the plan shapes asserted in `PartitionedSpec`.
-  * The layout is built once per (session, corpus dir), like the bucketed
-  * tables — an investment reused across queries.
+  * The layout is built once per (session, corpus dir) — an investment
+  * reused across queries.
   */
 object Partitioned {
 
-  private def layout(s: SparkSession, dir: String): String = {
-    val marker = "graft.partitioned.dir"
-    val pathKey = "graft.partitioned.path"
-    if (!s.conf.getOption(marker).contains(dir)) {
-      val tmp = graft.util.TempDirs.create("graft_part").toString
+  private val layouts = CorpusMemo[String]()
+
+  private[graft] def layout(s: SparkSession, dir: String): String =
+    layouts(s, dir) {
+      val docs = s"${graft.util.TempDirs.create("graft_part")}/docs"
       Tables.documents(s, dir)
-        .write.partitionBy("lang").mode("overwrite").parquet(s"$tmp/docs")
-      s.conf.set(pathKey, s"$tmp/docs")
-      s.conf.set(marker, dir)
+        .write.partitionBy("lang").mode("overwrite").parquet(docs)
+      docs
     }
-    s.conf.get(pathKey)
-  }
 
   /** Static partition pruning: a literal `lang = 'en'` reaches the scan as
     * a PartitionFilter, so only the en/ directory is read. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.util.Checkpoints.StableOps
+import graft.util.CorpusMemo
 import graft.functions.Fns
 import graft.functions.Fns._
 
@@ -77,14 +78,13 @@ object Pipeline {
     * Jaccard) stays on shingle STRINGS — the oracle joins on `sh`
     * there, and hash-join semantics would diverge on a hash collision. */
   private[graft] def hashedShingles(s: SparkSession, dir: String): DataFrame =
-    hashedShingleCache.computeIfAbsent((s, dir), _ =>
+    hashedShingleCache(s, dir) {
       shingles(s, dir).select(col("doc_id"),
         Fns.polyHash(col("sh")).as("h1"),
-        Fns.polyHash2(col("sh")).as("h2")).stable)
+        Fns.polyHash2(col("sh")).as("h2")).stable
+    }
 
-  private val hashedShingleCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val hashedShingleCache = CorpusMemo[DataFrame]()
 
   /** Stop-shingle df cap, tunable via `spark.graft.ngram.dfCap`
     * (default 100 — the declared queries' hashes are pinned to the
@@ -122,7 +122,7 @@ object Pipeline {
     * shingles identically, so the rare hash collisions are reproduced
     * bit-for-bit on both sides. */
   private def pairStats(s: SparkSession, dir: String): DataFrame =
-    pairCache.computeIfAbsent((s, dir), _ => {
+    pairCache(s, dir) {
       val ps = computePairStats(s, dir).stable
       // SELF-FLAG at the build, not only in the separate census query
       // (round 16, VERDICT r15 #3): a df-saturated corpus silently
@@ -138,16 +138,9 @@ object Pipeline {
           s"[graft][WARN] df-cap observation failed on $dir " +
             s"(dedup results unaffected): ${e.getMessage}"))
       ps
-    })
+    }
 
-  // Lifecycle note (applies to every (session, dir) memo cache here): an
-  // entry lives as long as its session — fixture corpora are immutable
-  // snapshots, and the driver/test/bench entry points each use one session
-  // for one run, so there is no eviction path; a long-lived multi-corpus
-  // service would add unpersist-on-evict here.
-  private val pairCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val pairCache = CorpusMemo[DataFrame]()
 
   private def computePairStats(s: SparkSession, dir: String): DataFrame =
     // fed from the memoized distinct-shingle frame (r14): collect_set
@@ -195,7 +188,7 @@ object Pipeline {
     * more storage than re-aggregating the memo with the lighter
     * countDistinct. */
   private def censusStats(s: SparkSession, dir: String): DataFrame =
-    censusCache.computeIfAbsent((s, dir), _ =>
+    censusCache(s, dir) {
       hashedShingles(s, dir)
         .select(col("doc_id"), col("h1").as("h"))
         .groupBy("h").agg(countDistinct(col("doc_id")).as("ndocs"))
@@ -203,7 +196,8 @@ object Pipeline {
           sum(when(col("ndocs") >= 2, 1L).otherwise(0L)).as("n_multi"),
           sum(when(col("ndocs") > maxShingleDf(s), 1L).otherwise(0L))
             .as("n_capped"))
-        .stable)
+        .stable
+    }
 
   /** Conf key the pair-memo build publishes its measured capped
     * fraction to (integer ppm of pairable shingle keys dropped by the
@@ -294,9 +288,7 @@ object Pipeline {
     * sit at 0; the 100× clone stress at 992,393). */
   private val CensusAdvisoryPpm = 100000L
 
-  private val censusCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val censusCache = CorpusMemo[DataFrame]()
 
   /** Near-dup detection via exact n-gram Jaccard with shared-shingle
     * blocking: docs pair only if they share a (non-stop) shingle; Jaccard
@@ -374,13 +366,11 @@ object Pipeline {
     * persists next to its corpus snapshot. (Earlier rounds measured
     * `.cache()` of the DOWNSTREAM band fan-out as a 3× loss for a single
     * query; the memo here is the narrow upstream aggregate, amortized
-    * across four consumers.) Lifecycle: see the note at pairCache. */
-  private val sigsCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+    * across four consumers.) */
+  private val sigsCache = CorpusMemo[DataFrame]()
 
   private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    sigsCache.computeIfAbsent((s, dir), _ =>
+    sigsCache(s, dir) {
       s.conf.getOption("spark.graft.minhash.sigsPath") match {
         // PERSISTED-INDEX path (`spark.graft.minhash.sigsPath`, set per
         // corpus run): production keeps the signature table NEXT TO the
@@ -572,7 +562,8 @@ object Pipeline {
               s.read.parquet(g.toString)
           }
         case None => computeMinhashSigs(s, dir).stable
-      })
+      }
+    }
 
   /** Cheap identity of the corpus a persisted index was built from:
     * source dir + doc count + max doc_id (parquet column stats make the
@@ -729,13 +720,11 @@ object Pipeline {
   // memo each consumer re-ran the band self-join + candidate-restricted
   // exact verify end to end (and, worse, through dedupMinhash's
   // presentation sort). Tiny like the ngram table (one row per candidate
-  // pair). Lifecycle: see the note at pairCache.
-  private val mhPairCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  // pair).
+  private val mhPairCache = CorpusMemo[DataFrame]()
 
   private[graft] def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    mhPairCache.computeIfAbsent((s, dir), _ => {
+    mhPairCache(s, dir) {
       val sh = shingles(s, dir)
       val bands = minhashBands(s, dir)
       val cand = bands.select(col("b"), col("key"),
@@ -763,7 +752,7 @@ object Pipeline {
           (coalesce(col("common"), lit(0L)).cast("double") /
             (col("sz_a") + col("sz_b") - coalesce(col("common"), lit(0L))).cast("double")).as("jaccard"))
         .stable
-    })
+    }
 
   /** INCREMENTAL near-dup detection — the production form of minhash
     * dedup: a crawl pipeline doesn't re-pair the whole corpus per
@@ -855,16 +844,10 @@ object Pipeline {
   // per (session, dir) and reused by dedupApply / curationPipeline, the way
   // a production pipeline materializes it once per corpus snapshot. The
   // table is tiny (one row per doc that appears in any near-dup pair).
-  // Lifecycle: see the note at pairCache — one session per run, no
-  // eviction needed; a long-lived service would unpersist-on-evict.
-  private val clustersCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val clustersCache = CorpusMemo[DataFrame]()
 
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    clustersCache.computeIfAbsent((s, dir), _ =>
-      computeClusters(s, dir).stable)
-      .orderBy("doc_id")
+    clustersCache(s, dir)(computeClusters(s, dir).stable).orderBy("doc_id")
 
   private def computeClusters(s: SparkSession, dir: String): DataFrame =
     minLabelComponents(ngramJaccard(s, dir).select(col("doc_a"), col("doc_b")))
@@ -2544,10 +2527,8 @@ object Pipeline {
 
   // trained model memoized per (session, corpus): the loop is eager
   // (per-round localCheckpoints), so q_bpe_train and q_bpe_apply share
-  // one training run. Lifecycle: see the note at pairCache.
-  private val bpeCache = graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame)]())
+  // one training run.
+  private val bpeCache = CorpusMemo[(DataFrame, DataFrame)]()
 
   def bpeTrain(s: SparkSession, dir: String): DataFrame =
     bpeModel(s, dir)._1.orderBy("round")
@@ -2572,7 +2553,7 @@ object Pipeline {
   }
 
   private def bpeModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeCache.computeIfAbsent((s, dir), _ => trainBpe(s, dir))
+    bpeCache(s, dir)(trainBpe(s, dir))
 
   private def trainBpe(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val W = org.apache.spark.sql.expressions.Window
@@ -2862,20 +2843,17 @@ object Pipeline {
   // index-build-once / probe-many shape a production vector store uses.
   // Size is vectors × tables rows (tiny next to the corpus); at 100 TB the
   // same table persists as a bucketed parquet layout instead.
-  // Lifecycle: see the note at pairCache — one session per run, no
-  // eviction needed; a long-lived service would unpersist-on-evict.
-  private val lshIndexCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val lshIndexCache = CorpusMemo[DataFrame]()
 
   private def lshIndex(s: SparkSession, dir: String): DataFrame =
-    lshIndexCache.computeIfAbsent((s, dir), _ =>
+    lshIndexCache(s, dir) {
       embDouble(s, dir).withColumn("nrm", normD(col("v")))
         .select(col("vec_id"), col("v"), col("nrm"),
           explode(LshPlanes.tableBuckets(col("v"))).as("tb"))
         .select(col("vec_id"), col("v"), col("nrm"),
                 col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-        .stable)
+        .stable
+    }
 
   /** Brute-force cosine top-k: probes (vec_id < 5) broadcast against the
     * full corpus, per-probe top-10 via window rank. The exact baseline the
@@ -3014,14 +2992,11 @@ object Pipeline {
     * (round 18): [[knnGraph]] and [[hardNegatives]] build the IDENTICAL
     * pair set (same index, same dedup), so without the memo each ran the
     * 8-table self-join + distinct end to end. Id-only rows (tiny, like
-    * the ngram/minhash pair memos); lifecycle: see the note at
-    * [[pairCache]]. */
-  private val embPairCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+    * the ngram/minhash pair memos). */
+  private val embPairCache = CorpusMemo[DataFrame]()
 
   private def embPairs(s: SparkSession, dir: String): DataFrame =
-    embPairCache.computeIfAbsent((s, dir), _ => {
+    embPairCache(s, dir) {
       val idx = lshIndex(s, dir)
       idx.select(col("vec_id").as("src"), col("t"), col("bucket"))
         .join(idx.select(col("vec_id").as("nb"), col("t"), col("bucket")),
@@ -3029,7 +3004,7 @@ object Pipeline {
         .filter(col("src") =!= col("nb"))
         .select("src", "nb").distinct()
         .stable
-    })
+    }
 
   def knnGraph(s: SparkSession, dir: String): DataFrame = {
     val pairs = embPairs(s, dir)

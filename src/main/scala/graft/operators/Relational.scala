@@ -1846,8 +1846,8 @@ object Relational {
     * feature targets — at real scale the filtered orders side exceeds any
     * broadcast threshold on its own, and no other query's plan is touched.
     * `RelationalSpec` asserts the might_contain probe lands in the plan.
-    * The isolated session is memoized per parent session (the
-    * [[graft.operators.Graph.edgeCache]] ConcurrentHashMap discipline) —
+    * The isolated session is memoized per parent session (not per
+    * corpus, so not a [[graft.util.CorpusMemo]]) —
     * a fresh `newSession` per call would accumulate one SessionState
     * (conf + listeners) per invocation for the SparkContext's lifetime
     * under the bench/soak harnesses. */

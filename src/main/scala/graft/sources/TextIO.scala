@@ -73,9 +73,7 @@ object TextIO {
   // q_kv_source invocations of a run — same memoization discipline as the
   // bucketed/partitioned layouts (the layout IS part of the operator; the
   // bench warm list charges it to setup, not steady state).
-  private val kvLayoutCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]())
+  private val kvLayoutCache = graft.util.CorpusMemo[String]()
 
   /** Declared exercise of the [[graft.sources.kv.KvDataSource]] V2
     * connector: the corpus wordcount is materialized through the
@@ -90,7 +88,7 @@ object TextIO {
   /** The per-corpus wordcount `"key value"` layout, written through the
     * connector's OWN V2 sink (memoized — the layout IS the investment). */
   def kvWordcountLayout(s: SparkSession, dir: String): String =
-    kvLayoutCache.computeIfAbsent((s, dir), _ => {
+    kvLayoutCache(s, dir) {
       val tmp = tempDir("graft_kvsrc")
       // the canonical wordcount (single tokenizer definition — a drifted
       // copy here would silently break the q_kv_source hash check),
@@ -100,17 +98,15 @@ object TextIO {
         .select(col("word").as("key"), col("cnt").cast("string").as("value"))
         .write.format("graftkv").mode("overwrite").save(tmp)
       tmp
-    })
+    }
 
   // second kv layout (per-word document frequency) for the multi-source
   // connector→plugin-API query; same memo discipline as the wordcount one
-  private val kvDfLayoutCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]())
+  private val kvDfLayoutCache = graft.util.CorpusMemo[String]()
 
   /** Per-word document-frequency `"key value"` layout via the V2 sink. */
   def kvDocFreqLayout(s: SparkSession, dir: String): String =
-    kvDfLayoutCache.computeIfAbsent((s, dir), _ => {
+    kvDfLayoutCache(s, dir) {
       val tmp = tempDir("graft_kvdf")
       graft.operators.MrSuite.tokenPairs(s, dir)
         .select(col("word"), col("doc_id")).distinct()
@@ -118,7 +114,7 @@ object TextIO {
         .select(col("word").as("key"), col("df").cast("string").as("value"))
         .write.format("graftkv").mode("overwrite").save(tmp)
       tmp
-    })
+    }
 
   def kvSource(s: SparkSession, dir: String): DataFrame =
     s.read.format("graftkv").load(kvWordcountLayout(s, dir))
@@ -159,12 +155,10 @@ object TextIO {
     * investment. */
   // dirty-CSV layout memoized like the kv layout above — plan-only
   // sweeps and warm bench runs must not pay (or leak) a fresh write
-  private val csvLayoutCache =
-    graft.util.CorpusMemo.register(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]())
+  private val csvLayoutCache = graft.util.CorpusMemo[String]()
 
   def csvDirty(s: SparkSession, dir: String): DataFrame = {
-    val tmp = csvLayoutCache.computeIfAbsent((s, dir), _ => {
+    val tmp = csvLayoutCache(s, dir) {
       val t = tempDir("graft_csvdirty")
       graft.Tables.customer(s, dir)
         .select(concat_ws(",",
@@ -174,7 +168,7 @@ object TextIO {
             .otherwise(col("c_acctbal").cast("string"))).as("value"))
         .write.mode("overwrite").text(s"$t/csv")
       t
-    })
+    }
     val schema = "c_custkey LONG, c_name STRING, c_acctbal DOUBLE, _corrupt STRING"
     s.read.schema(schema)
       .option("mode", "PERMISSIVE")

@@ -1,53 +1,93 @@
 package graft.util
 
-import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap, CopyOnWriteArrayList}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared registry + invalidation hook for the per-(session, corpus)
-  * memo caches (dedup pair/signature/cluster tables, graph adjacency,
-  * k-means/PQ/BPE models, kv layouts, …). Each cache holds
-  * localCheckpoint'ed tables whose storage blocks stay pinned for as
-  * long as the cache references them — fine for the one-corpus-per-run
-  * harnesses, but a long-lived session touching many corpora would
-  * accumulate executor storage without bound. `invalidate` drops every
-  * registered cache's entry for a corpus; Spark's ContextCleaner then
-  * unpersists the checkpointed RDD blocks once the dropped references
-  * are GC'd — the standard reference-driven cleanup path, no explicit
-  * unpersist needed (or safe: a concurrent reader may still hold the
-  * frame).
+/** A per-(session, corpus) memo: the once-per-corpus investments (dedup
+  * pair/signature/cluster tables, graph adjacency, k-means/PQ/BPE models,
+  * kv and partitioned layouts, …) that later queries on the same corpus
+  * read instead of rebuilding. Declare one with
+  * `private val pairs = CorpusMemo[DataFrame]()` and read or build it
+  * with `pairs(s, dir) { build }`.
   *
-  * This is deliberately an explicit hook rather than an LRU bound: the
-  * tables are per-corpus INVESTMENTS (the whole point is that repeat
-  * queries ride them), so only the owner knows when a corpus is done —
-  * e.g. a soak harness finishing one tenant's dataset before loading the
-  * next. */
+  * The contract, for every memo:
+  *  - keyed per (session, corpus dir): another session or corpus gets
+  *    its own entry;
+  *  - built once: concurrent callers for the same key wait for the one
+  *    build and get its value;
+  *  - built outside the map's lock: a cheap insert claims a once-only
+  *    cell and the build runs after it, so callers for other keys are
+  *    never blocked and a build may read the same memo for another
+  *    corpus (a build that reads its OWN key throws, as it cannot
+  *    finish);
+  *  - failures are not cached: the build's waiters get its exception
+  *    and the next call builds again;
+  *  - dropped by [[CorpusMemo.invalidate]].
+  *
+  * Entries hold localCheckpoint'ed tables whose storage blocks stay
+  * pinned for as long as the memo references them, so a long-lived
+  * session touching many corpora calls `invalidate` when it is done
+  * with one (e.g. a soak harness moving to the next tenant's dataset).
+  * Spark's ContextCleaner then unpersists the blocks once the dropped
+  * references are GC'd — no explicit unpersist, which would not be safe
+  * while a concurrent reader still holds the frame. There is no LRU
+  * bound on purpose: the whole point is that repeat queries ride the
+  * tables, so only the owner knows when a corpus is done. */
+final class CorpusMemo[V] private () {
+  import CorpusMemo.Cell
+
+  private val cells = new ConcurrentHashMap[(SparkSession, String), Cell[V]]()
+
+  def apply(s: SparkSession, dir: String)(build: => V): V = {
+    val key = (s, dir)
+    val mine = new Cell[V]
+    cells.putIfAbsent(key, mine) match {
+      case null =>
+        try {
+          val v = build
+          mine.complete(v)
+          v
+        } catch {
+          case t: Throwable =>
+            cells.remove(key, mine)
+            mine.completeExceptionally(t)
+            throw t
+        }
+      case cell =>
+        if ((cell.owner eq Thread.currentThread()) && !cell.isDone)
+          throw new IllegalStateException(
+            s"CorpusMemo build for $dir reads its own entry")
+        try cell.join()
+        catch { case e: CompletionException => throw e.getCause }
+    }
+  }
+
+  private def completed: Int =
+    cells.values.asScala.count(c => c.isDone && !c.isCompletedExceptionally)
+}
+
 object CorpusMemo {
 
-  private val registered =
-    new CopyOnWriteArrayList[ConcurrentHashMap[(SparkSession, String), _]]()
-
-  /** Register a per-(session, corpus) cache; returns it for inline use
-    * at the declaration site. */
-  def register[V](c: ConcurrentHashMap[(SparkSession, String), V])
-      : ConcurrentHashMap[(SparkSession, String), V] = {
-    registered.add(c)
-    c
+  private final class Cell[V] extends CompletableFuture[V] {
+    val owner: Thread = Thread.currentThread()
   }
 
-  /** Drop every registered cache's entry for this (session, corpus). */
+  private val registered = new CopyOnWriteArrayList[CorpusMemo[_]]()
+
+  /** A new memo, registered with [[invalidate]] and [[liveEntries]]. */
+  def apply[V](): CorpusMemo[V] = {
+    val m = new CorpusMemo[V]
+    registered.add(m)
+    m
+  }
+
+  /** Drop every memo's entry for this (session, corpus). */
   def invalidate(s: SparkSession, dir: String): Unit =
-    registered.forEach { c => c.remove((s, dir)): Unit }
+    registered.forEach(m => m.cells.remove((s, dir)): Unit)
 
-  /** Drop every registered cache's entries for this session (all
-    * corpora) — e.g. before retiring a pooled session. */
-  def invalidateSession(s: SparkSession): Unit =
-    registered.forEach { c => c.keySet.removeIf(_._1 eq s): Unit }
-
-  /** Total live entries across registered caches (diagnostics/tests). */
-  def liveEntries: Int = {
-    var n = 0
-    registered.forEach { c => n += c.size }
-    n
-  }
+  /** Completed entries across all memos (diagnostics/tests). */
+  def liveEntries: Int = registered.asScala.map(_.completed).sum
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Partitioned
+import graft.util.CorpusMemo
 
 /** The partitioned layout must actually prune: literal filters as
   * PartitionFilters, join-derived filters as dynamic pruning subqueries. */
@@ -23,5 +24,19 @@ class PartitionedSpec extends AnyFunSuite {
     assert(plan.contains("dynamicpruning"),
       s"no dynamic pruning subquery in plan:\n$plan")
     assert(df.count() > 0)
+  }
+
+  test("the layout is memoized per (session, corpus) and leaves the session conf as found") {
+    // a fresh session, so no earlier spec has built its layout; tuned
+    // first, as every declared query tunes its session
+    val s = Engine.tune(spark.newSession())
+    try {
+      val conf0 = s.conf.getAll
+      Seq("q_partitioned_scan", "q_dpp_join")
+        .foreach(q => SparkEntry.queries(q)(s, sf).collect())
+      assert(s.conf.getAll === conf0)
+      val path = Partitioned.layout(s, sf)
+      assert(Partitioned.layout(s, sf) === path, "a second call reuses the layout")
+    } finally CorpusMemo.invalidate(s, sf)
   }
 }
