@@ -134,9 +134,17 @@ object Tables {
   *    — reliable DFS checkpoints for multi-executor clusters instead of
   *    `localCheckpoint` ([[graft.util.Checkpoints]]).
   *  - `spark.graft.minhash.sigsPath` — persist the per-corpus MinHash
-  *    signature table as a parquet index (committed + corpus-
-  *    fingerprinted; invalid indexes rebuild atomically)
-  *    ([[graft.operators.Pipeline.minhashSigs]]).
+  *    signature table as a [[graft.util.GenStore]] generation (table
+  *    `sigs`; committed + corpus-fingerprinted; invalid indexes rebuild
+  *    atomically; an archived corpus is served from the newest
+  *    committed generation built from its dir)
+  *    ([[graft.operators.Pipeline.minhashSigs]]). Indexes written
+  *    before the GenStore fold — the flat layout, fixed-name
+  *    `gen=<sha8>` and `gen=<sha8>-<nonce>` dirs without
+  *    `_GRAFT_COMMITTED` — are not read: a live corpus rebuilds once
+  *    (same rows), an archived one raises `IllegalStateException`; the
+  *    old `gen=` dirs carry no commit marker, so GenStore's 60-minute
+  *    sweep removes them, and top-level legacy files are left alone.
   *  - `spark.graft.stream.admitTtlMs` — processing-time TTL on the
   *    streaming admit index's carrier state; steady-state ingest only,
   *    DISABLE for backfill/replay ([[graft.streaming.Streams]]).

@@ -53,7 +53,7 @@ object Graph {
     * rebuilding. The honest-100× probe pays its 515 s memo build once
     * per corpus, not once per session — the same once-per-corpus
     * trajectory as the minhash sigsPath index and the zone-map
-    * manifests. The build is STAGED: each table is written, then the
+    * manifests, on the same store. The build is STAGED: each table is written, then the
     * next derives from the just-written parquet — no recompute, peak
     * lineage one stage deep, and a failed stage leaves only an
     * uncommitted temp (GenStore refuses to publish it). Fingerprint:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.util.Checkpoints.StableOps
-import graft.util.CorpusMemo
+import graft.util.{CorpusMemo, GenStore}
 import graft.functions.Fns
 import graft.functions.Fns._
 
@@ -67,10 +67,10 @@ object Pipeline {
     * distinct pass was recomputed independently by the pair table, the
     * df census, the MinHash signatures and the decontamination split —
     * four corpus scans per session for the same frame; now it is paid
-    * once and localCheckpoint'ed (at 100 TB this memo is the index the
-    * `sigsPath` discipline persists — the signature table already
-    * derives from exactly this frame). Consumers' semantics are
-    * UNCHANGED, collision-for-collision: one row per distinct STRING
+    * once and localCheckpoint'ed (the signature table, persisted at
+    * 100 TB under `spark.graft.minhash.sigsPath`, derives from exactly
+    * this frame). Consumers' semantics are UNCHANGED,
+    * collision-for-collision: one row per distinct STRING
     * (not per distinct hash), so per-doc set sizes, countDistinct
     * censuses and distinct-after-hash projections all reproduce their
     * previous (and the oracle's) values bit-for-bit. The MinHash
@@ -380,187 +380,33 @@ object Pipeline {
         // writes it once (same plan as the in-session memo); every later
         // session — or a restarted probe — reads the parquet back, so
         // steady-state cost is ∝ the increment, not the corpus.
+        // The store is [[graft.util.GenStore]]: the index is valid only
+        // if its generation is committed AND its own corpus fingerprint
+        // (dir + doc count + max doc_id) matches the live corpus, so a
+        // crashed build, a corpus that has GROWN since the index was
+        // written (the 100× ingest case) or another corpus dir reusing
+        // the same sigsPath rebuilds instead of serving stale rows.
         case Some(p) =>
-          // INDEX INTEGRITY (round 11, ADVICE): existence alone is not
-          // validity — a partially-written dir from a crashed first
-          // build, a corpus that has GROWN since the index was written
-          // (the 100× ingest case), or a different corpus dir reused
-          // with the same sigsPath would all silently serve stale or
-          // incomplete signatures to every consumer. The index is valid
-          // only if (a) its generation's write job committed (_SUCCESS)
-          // and (b) the recorded corpus fingerprint (dir + doc count +
-          // max doc_id — one cheap column-stats aggregate, paid once
-          // per session on the memo miss) matches the live corpus.
-          //
-          // GENERATIONAL LAYOUT (round 12): data lives under
-          // `p/gen=<sha8(fp)>-<nonce>/` — a name UNIQUE PER BUILD
-          // ATTEMPT — with `p/_GRAFT_CURRENT` naming the current
-          // generation and `p/_GRAFT_FINGERPRINT` recording the corpus
-          // it serves. A rebuild writes the NEW generation and repoints
-          // — it never deletes the files a still-live reader (another
-          // corpus's memoized frame in this session, or another session
-          // on shared storage) may hold open; the superseded generation
-          // is retained until the NEXT switch (one-generation grace),
-          // then GC'd. Because every attempt renames into a FRESH name,
-          // no code path deletes or renames over a directory another
-          // session could have committed — the r11 delete-then-rename
-          // into the fixed `gen=<sha8>` name had a TOCTOU hole (ADVICE):
-          // between this session's committed(g) check and its delete,
-          // another session could commit g, and the delete destroyed a
-          // generation that session already served. Concurrent builders
-          // of the SAME fingerprint race benignly: whoever repoints last
-          // wins, both generations are committed and equivalent, and the
-          // loser's is GC'd at the next switch. A crash mid-rebuild
-          // leaves only a `._build-*` temp; a crash after the rename but
-          // before the repoint self-heals — the next load ADOPTS any
-          // committed generation whose own fingerprint matches. Pre-r12
-          // fixed-name generations resolve via the fingerprint-derived
-          // fallback and keep serving unmigrated. (Directory rename is
-          // atomic on HDFS/local FS; object stores want a copy-commit
-          // layer — the Checkpoints.scala caveat.)
-          val hp = new org.apache.hadoop.fs.Path(p)
-          val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          // The source corpus may legitimately be GONE at read time (the
-          // index outliving an archived snapshot is the point of
-          // persisting it) — then the recorded fingerprint can't be
-          // recomputed, and validity degrades to committed-generation +
-          // DIR identity (still catches the reused-sigsPath hazard;
-          // growth is moot for an unreadable corpus). A readable corpus
-          // must match the full fingerprint.
           val live =
             try Some(corpusFingerprint(s, dir))
             catch { case _: Exception => None }
-          def genFixed(fp: String) =
-            new org.apache.hadoop.fs.Path(hp, "gen=" + sha8(fp))
-          def committed(g: org.apache.hadoop.fs.Path) =
-            fs.exists(g) && fs.exists(new org.apache.hadoop.fs.Path(g, "_SUCCESS"))
-          val recorded = readIndexFingerprint(fs, hp)
-          def fpMatches(rec: String) = live match {
-            case Some(l) => rec == l
-            case None    => rec.startsWith(s"graft-minhash-v1|$dir|")
-          }
-          // resolve the current generation: the pointer file names it;
-          // pre-r12 layouts fall back to the fingerprint-derived fixed
-          // name; a LOST pointer (crash between rename and repoint, or
-          // a publish caught mid-swap) falls back to a provenance scan
-          // of the gen dirs — round-12 review: without the scan, a lost
-          // pointer over an ARCHIVED corpus (live unknown, nonce-named
-          // generation) bricked a fully intact index. Either way the
-          // generation must be committed AND carry matching
-          // per-generation provenance.
-          val pointed = readSmallText(fs,
-              new org.apache.hadoop.fs.Path(hp, IndexPointerFile))
-            .map(n => new org.apache.hadoop.fs.Path(hp, n))
-          def genWithFp(fp: String): Option[org.apache.hadoop.fs.Path] =
-            if (!fs.exists(hp)) None
-            else fs.listStatus(hp).toSeq
-              .filter(st => st.isDirectory &&
-                st.getPath.getName.startsWith("gen="))
-              .map(_.getPath)
-              .find(g => committed(g) &&
-                readIndexFingerprint(fs, g).contains(fp))
-          val current = recorded.filter(fpMatches).flatMap { rec =>
-            // pointer target: always r12-built (or a healed adoption),
-            // so provenance must match when present; the FIXED-NAME
-            // candidate tolerates a MISSING per-gen fingerprint — pre-
-            // provenance r11 builds (the shipped 100× index is one)
-            // never wrote it, and the name gen=<sha8(rec)> is itself
-            // derived from rec (round-12 second review: requiring the
-            // file silently invalidated every such index — full rebuild
-            // for live corpora, a brick for archived ones)
-            pointed.find(g => committed(g) &&
-                readIndexFingerprint(fs, g).forall(_ == rec))
-              .orElse(Some(genFixed(rec)).filter(g => committed(g) &&
-                readIndexFingerprint(fs, g).forall(_ == rec)))
-              .orElse(genWithFp(rec))
-          }
-          current match {
-            case Some(g) => s.read.parquet(g.toString)
-            case None if live.isEmpty =>
-              // ARCHIVED CORPUS, NO RESOLVABLE CURRENT. Before falling
-              // back to legacy flat data, scan generation PROVENANCE by
-              // corpus-dir prefix (round-12 second review): the
-              // top-level fingerprint has a delete-then-rename publish
-              // window, and losing it over an archived corpus used to
-              // brick an index whose committed generations name this
-              // exact corpus dir in their own fingerprint files. Newest
-              // matching generation wins (same order the GC retains).
-              val byPrefix =
-                if (!fs.exists(hp)) None
-                else fs.listStatus(hp).toSeq
-                  .filter(st => st.isDirectory &&
-                    st.getPath.getName.startsWith("gen="))
-                  .map(_.getPath)
-                  .filter(g => committed(g) &&
-                    readIndexFingerprint(fs, g)
-                      .exists(_.startsWith(s"graft-minhash-v1|$dir|")))
-                  .sortBy(_.getName).lastOption
-              byPrefix match {
-                case Some(g) => s.read.parquet(g.toString)
-                case None =>
-                  // ARCHIVED LEGACY INDEX (round-11 review): a
-                  // pre-generational index carries no fingerprint to
-                  // validate and its corpus is gone, so there is
-                  // nothing to rebuild from — but its committed flat
-                  // data is exactly what the pre-r11 code served. Keep
-                  // serving it at the same trust level rather than
-                  // failing the upgrade — via an EXPLICIT top-level
-                  // file list (ADVICE round 11): a directory read would
-                  // partition-discover any `gen=*` subdirs as a 'gen'
-                  // column and serve a mixed flat+generational frame if
-                  // the top-level fingerprint is ever lost after
-                  // migration while the flat _SUCCESS remains.
-                  val flat = topLevelDataFiles(fs, hp)
-                  if (recorded.isEmpty &&
-                      fs.exists(new org.apache.hadoop.fs.Path(hp, "_SUCCESS")) &&
-                      flat.nonEmpty)
-                    s.read.parquet(flat: _*)
-                  else throw new IllegalStateException(
-                    s"minhash index at $p is invalid and the corpus at $dir " +
-                      "is unreadable: nothing to rebuild from")
+          val gen = live match {
+            case Some(fp) =>
+              GenStore.resolveOrBuild(s, p, fp, Seq("sigs")) { tmp =>
+                computeMinhashSigs(s, dir).write.parquet(s"$tmp/sigs")
               }
+            // ARCHIVED corpus: it can no longer be fingerprinted (the
+            // index outliving its snapshot is the point of persisting
+            // it), so validity degrades to a committed generation built
+            // from this corpus DIR — still refusing another corpus's
+            // index; growth is moot for an unreadable corpus
             case None =>
-              val fp = live.get
-              // ADOPTION-FIRST: any committed generation whose own
-              // provenance matches the live corpus serves as-is — a
-              // crash between a winner's rename and its repoint, or a
-              // concurrent session's fresh build, is adopted instead of
-              // rebuilt (same fingerprint ⇒ equivalent content).
-              def adoptable(): Option[org.apache.hadoop.fs.Path] = genWithFp(fp)
-              val g = adoptable().getOrElse {
-                val tmp = new org.apache.hadoop.fs.Path(
-                  p + s"._build-${System.nanoTime()}")
-                fs.delete(tmp, true)
-                computeMinhashSigs(s, dir).write.mode("overwrite")
-                  .parquet(tmp.toString)
-                // per-generation provenance, committed atomically with
-                // the data: the GC below scopes retention by corpus dir
-                writeIndexFingerprint(fs, tmp, fp)
-                adoptable() match {
-                  // another session committed this fingerprint while we
-                  // were building: adopt its generation, discard ours
-                  case Some(won) => fs.delete(tmp, true); won
-                  case None =>
-                    // rename into a name UNIQUE to this attempt: no
-                    // session ever deletes or renames over a path
-                    // another session could serve (the ADVICE TOCTOU)
-                    val fresh = new org.apache.hadoop.fs.Path(hp,
-                      s"gen=${sha8(fp)}-${java.lang.Long.toHexString(System.nanoTime())}")
-                    fs.mkdirs(hp)
-                    if (!fs.rename(tmp, fresh))
-                      throw new IllegalStateException(
-                        s"minhash index generation swap failed: rename($tmp -> $fresh)")
-                    fresh
-                }
-              }
-              val prevPointer = readSmallText(fs,
-                new org.apache.hadoop.fs.Path(hp, IndexPointerFile))
-              writeSmallText(fs,
-                new org.apache.hadoop.fs.Path(hp, IndexPointerFile), g.getName)
-              writeIndexFingerprint(fs, hp, fp)
-              gcGenerations(fs, hp, g, recorded, prevPointer)
-              s.read.parquet(g.toString)
+              GenStore.resolve(s, p, Seq("sigs"))(_.startsWith(fingerprintPrefix(dir)))
+                .getOrElse(throw new IllegalStateException(
+                  s"minhash index at $p is invalid and the corpus at $dir " +
+                    "is unreadable: nothing to rebuild from"))
           }
+          s.read.parquet(s"$gen/sigs")
         case None => computeMinhashSigs(s, dir).stable
       }
     }
@@ -575,114 +421,10 @@ object Pipeline {
     val r = Tables.documents(s, dir)
       .agg(count(lit(1)).as("n"), max(col("doc_id")).as("m")).head()
     val mx = if (r.isNullAt(1)) -1L else r.getLong(1)
-    s"graft-minhash-v1|$dir|n=${r.getLong(0)}|max=$mx"
+    s"${fingerprintPrefix(dir)}n=${r.getLong(0)}|max=$mx"
   }
 
-  private val IndexFingerprintFile = "_GRAFT_FINGERPRINT"
-  private val IndexPointerFile = "_GRAFT_CURRENT"
-
-  /** Top-level DATA files of the index dir (legacy flat layout): never a
-    * directory read, so `gen=*` subdirs cannot be partition-discovered
-    * into the frame (ADVICE round 11). Shared protocol impl:
-    * [[graft.util.MetaFiles]] (round 12 — one copy, tmp+rename publish). */
-  private def topLevelDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                                hp: org.apache.hadoop.fs.Path): Seq[String] =
-    graft.util.MetaFiles.dataFiles(fs, hp)
-
-  private def writeSmallText(fs: org.apache.hadoop.fs.FileSystem,
-                             f: org.apache.hadoop.fs.Path, v: String): Unit =
-    graft.util.MetaFiles.write(fs, f, v)
-
-  private def readSmallText(fs: org.apache.hadoop.fs.FileSystem,
-                            f: org.apache.hadoop.fs.Path): Option[String] =
-    graft.util.MetaFiles.read(fs, f)
-
-  private def sha8(v: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map("%02x".format(_)).mkString
-
-  /** The corpus dir a fingerprint records
-    * (`graft-minhash-v1|<dir>|n=…|max=…`). */
-  private def fpDir(fp: String): Option[String] = {
-    val pre = "graft-minhash-v1|"
-    if (!fp.startsWith(pre)) None
-    else {
-      val rest = fp.stripPrefix(pre)
-      val j = rest.lastIndexOf("|n=")
-      if (j < 0) None else Some(rest.substring(0, j))
-    }
-  }
-
-  /** Generation retention (round-11 review): keep the newest TWO
-    * generations PER CORPUS DIR (provenance from each generation's own
-    * fingerprint file) and never GC across corpora — with several
-    * corpora sharing one sigsPath, another consumer's memoized frame may
-    * still read a different corpus's generation, and the old global
-    * keep-two policy deleted exactly that on the second switch.
-    * COMMITTED generations with unreadable provenance (pre-round-11
-    * builds) are never GC'd; UNCOMMITTED gen dirs are crash debris
-    * (round 12: live generations only ever arrive by atomic rename of a
-    * committed temp into a unique name) and are deleted. Legacy
-    * flat-layout data files get a one-switch grace:
-    * deleted only once the superseded current is itself generational —
-    * a same-fingerprint recovery (crashed build re-adopted) is not a
-    * switch and deletes nothing. */
-  private def gcGenerations(fs: org.apache.hadoop.fs.FileSystem,
-                            hp: org.apache.hadoop.fs.Path,
-                            g: org.apache.hadoop.fs.Path,
-                            recorded: Option[String],
-                            prevPointer: Option[String]): Unit = {
-    // the superseded current = the previous pointer target (round 12) or,
-    // on a pre-pointer layout, the fingerprint-derived fixed name
-    val prevCurrent: Option[String] =
-      prevPointer.orElse(recorded.map(r => "gen=" + sha8(r)))
-    val keep = Set(g.getName) ++ prevCurrent
-    val supersededWasGenerational = prevCurrent.exists { n =>
-      n != g.getName && fs.exists(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(hp, n), "_SUCCESS"))
-    }
-    val entries = fs.listStatus(hp).toSeq
-    val (genDirs, rest) = entries.partition(st =>
-      st.isDirectory && st.getPath.getName.startsWith("gen="))
-    // UNCOMMITTED gen dirs are debris, whoever they belonged to: since
-    // round 12 every live generation arrives by ATOMIC rename of a
-    // fully-committed temp (and its unique name means no session will
-    // ever commit into it later); pre-r12 partial writes are exactly the
-    // crashed builds the old code deleted inline.
-    val (committedGens, debris) = genDirs.partition(st =>
-      fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-    debris.foreach { st =>
-      if (st.getPath.getName != g.getName) fs.delete(st.getPath, true)
-    }
-    committedGens
-      .groupBy(st => readIndexFingerprint(fs, st.getPath).flatMap(fpDir))
-      .foreach {
-        case (Some(_), sts) =>
-          sts.sortBy(-_.getModificationTime).drop(2).foreach { st =>
-            if (!keep(st.getPath.getName)) fs.delete(st.getPath, true)
-          }
-        case (None, _) => () // committed, unknown provenance: never GC'd
-      }
-    rest.foreach { st =>
-      val n = st.getPath.getName
-      if (!st.isDirectory && supersededWasGenerational &&
-          !n.startsWith("_") && !n.startsWith("."))
-        fs.delete(st.getPath, false)
-    }
-  }
-
-  private def writeIndexFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-                                    dirPath: org.apache.hadoop.fs.Path,
-                                    fp: String): Unit =
-    graft.util.MetaFiles.write(fs,
-      new org.apache.hadoop.fs.Path(dirPath, IndexFingerprintFile), fp)
-
-  private def readIndexFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-                                   dirPath: org.apache.hadoop.fs.Path)
-      : Option[String] =
-    graft.util.MetaFiles.read(fs,
-      new org.apache.hadoop.fs.Path(dirPath, IndexFingerprintFile))
+  private def fingerprintPrefix(dir: String): String = s"graft-minhash-v1|$dir|"
 
   private def computeMinhashSigs(s: SparkSession, dir: String): DataFrame = {
     val hashed = hashedShingles(s, dir)

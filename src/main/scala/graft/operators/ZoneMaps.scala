@@ -27,16 +27,15 @@ import graft.util.{FooterStats, GenStore}
   *    and reads no row data; ZoneMapManifestSpec pins this), exactly
   *    the stats a lakehouse table format serves from metadata.
   *
-  * The publish protocol is [[graft.util.GenStore]] (round 15 — the
-  * sigsPath generational discipline, factored into one shared
-  * implementation: TOCTOU-free fresh-nonce builds, adoption-first,
-  * pointer repoint last, newest-committed-generation-per-fingerprint
-  * retention, and the reader-lifetime/pinning contract — all documented
-  * there). The zone-map case is deliberately narrower than sigsPath:
-  * the manifest is DERIVED data over a corpus this operator must be
-  * able to read anyway (it fingerprints it per resolve), so there is no
-  * archived-corpus or legacy-flat-layout serving path — an unreadable
-  * corpus is an error, and an invalid index is simply rebuilt. */
+  * The publish protocol is [[graft.util.GenStore]] (TOCTOU-free
+  * fresh-nonce builds, adoption-first, pointer repoint last,
+  * newest-committed-generation-per-fingerprint retention, and the
+  * reader-lifetime/pinning contract — all documented there). Unlike the
+  * MinHash sigsPath index, the manifest is DERIVED data over a corpus
+  * this operator must be able to read anyway (it fingerprints it per
+  * resolve), so there is no archived-corpus serving path — an
+  * unreadable corpus is an error, and an invalid index is simply
+  * rebuilt. */
 object ZoneMaps {
 
   /** Natural-layout block width in rows-of-orderkey-space. The 4096

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *
   * Appends go into the current generation; compaction writes a NEW
   * generation and repoints — nothing is ever deleted before its
-  * replacement is committed and referenced (the sigsPath generational
-  * discipline). The _merged log lives beside the generations, so
+  * replacement is committed and referenced (the generational
+  * discipline [[graft.util.GenStore]] implements for the other stores). The _merged log lives beside the generations, so
   * compaction/pruning never forgets which sink files were merged.
   *
   * Crash/concurrency contract (rounds 11-12, all spec'd in StreamsSpec):

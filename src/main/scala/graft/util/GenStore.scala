@@ -4,12 +4,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Generational resolve-or-build protocol for persisted per-corpus
-  * investments — ONE implementation of the publish discipline that
-  * `Pipeline.minhashSigs` pioneered and `operators/ZoneMaps` simplified,
-  * now shared by the zone-map manifests, the graph memo tables
+  * investments — ONE implementation of the publish discipline, shared
+  * by the MinHash signature index (`spark.graft.minhash.sigsPath`), the
+  * zone-map manifests, the graph memo tables
   * (`spark.graft.graph.memoPath`) and the ANN model tables
   * (`spark.graft.ann.modelPath`), so a protocol fix lands everywhere
-  * (the MetaFiles lesson: two copies had diverged by round 12).
+  * (the MetaFiles lesson: two copies had diverged by round 12). The
+  * sigsPath index also serves an ARCHIVED corpus, one that can no longer
+  * be fingerprinted, through [[resolve]] with a provenance predicate.
   *
   * Layout under `path`:
   * {{{
@@ -22,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   *     <table>/…                  → every table carries its own _SUCCESS
   * }}}
   *
-  * Protocol properties (each carried over from the sigsPath rationale):
+  * Protocol properties:
   *  - TOCTOU-free builds: a build lands whole in a fresh-nonce temp dir,
   *    is renamed to a fresh-nonce gen name, and only THEN gets its
   *    generation-level `_GRAFT_COMMITTED` marker — readers require the
@@ -46,7 +48,7 @@ import org.apache.spark.sql.SparkSession
   *    rebuild, and another session's just-committed-but-unpointed build
   *    survives), and anything inside a 10-minute modification-time
   *    grace window. Growth is one generation per distinct corpus
-  *    identity ever served — the same deliberate trade sigsPath makes.
+  *    identity ever served.
   *
   * READER-LIFETIME CONTRACT: resolve returns a generation PATH whose
   * files stay readable while the generation is retained — i.e. until
@@ -81,20 +83,32 @@ object GenStore {
   private def genFp(fs: FileSystem, g: Path): Option[String] =
     MetaFiles.read(fs, new Path(g, FingerprintFile))
 
-  private def adoptable(fs: FileSystem, hp: Path, fp: String,
-                        tables: Seq[String]): Option[Path] =
-    if (!fs.exists(hp)) None
-    else fs.listStatus(hp).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
-      .filter(st => committed(fs, st.getPath, tables) &&
-        genFp(fs, st.getPath).contains(fp))
-      // newest by MODIFICATION TIME, name as the tie-break — the hex
-      // nanoTime nonce is variable-width, so lexicographic name order is
-      // not creation order (ADVICE r15 #4); mtime matches the GC's
-      // newest-per-fingerprint retention rule, so what adoption picks is
-      // exactly what retention keeps
-      .sortBy(st => (st.getModificationTime, st.getPath.getName))
-      .lastOption.map(_.getPath)
+  /** The committed generation at `path` whose own fingerprint satisfies
+    * `fpOk`: the pointer target when it qualifies (the common warm
+    * path), else the newest qualifying generation — an adoption scan, so
+    * a crash between a build's rename and repoint, or a concurrent
+    * session's finished build, serves instead of rebuilding. Newest is
+    * by MODIFICATION TIME with the name as the tie-break: the hex
+    * nanoTime nonce is variable-width and the name leads with the
+    * fingerprint's hash, so name order is not creation order (ADVICE
+    * r15 #4); (mtime, name) is also the order retention keeps, so what
+    * resolve picks is exactly what the GC retains. Metadata-only; never
+    * builds. */
+  def resolve(s: SparkSession, path: String, tables: Seq[String])
+             (fpOk: String => Boolean): Option[Path] = {
+    val hp = new Path(path)
+    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def ok(g: Path) = committed(fs, g, tables) && genFp(fs, g).exists(fpOk)
+    MetaFiles.read(fs, new Path(hp, PointerFile))
+      .map(n => new Path(hp, n)).filter(ok)
+      .orElse(
+        if (!fs.exists(hp)) None
+        else fs.listStatus(hp).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
+          .filter(st => ok(st.getPath))
+          .sortBy(st => (st.getModificationTime, st.getPath.getName))
+          .lastOption.map(_.getPath))
+  }
 
   /** Resolve the current committed generation for fingerprint `fp` at
     * `path`, or build + publish one. `build(tmp)` must write every name
@@ -110,13 +124,7 @@ object GenStore {
     require(tables.nonEmpty, "GenStore wants at least one table name")
     val hp = new Path(path)
     val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // pointer target first (the common warm path), then an adoption
-    // scan: a crash between a builder's rename and repoint, or a
-    // concurrent session's finished build, serves instead of rebuilding
-    val pointed = MetaFiles.read(fs, new Path(hp, PointerFile))
-      .map(n => new Path(hp, n))
-      .filter(g => committed(fs, g, tables) && genFp(fs, g).contains(fp))
-    val current = pointed.orElse(adoptable(fs, hp, fp, tables)).getOrElse {
+    val current = resolve(s, path, tables)(_ == fp).getOrElse {
       val tmp = new Path(path +
         s"._build-${java.lang.Long.toHexString(System.nanoTime())}")
       fs.delete(tmp, true)
@@ -130,7 +138,7 @@ object GenStore {
             missing.mkString(", "))
       }
       MetaFiles.write(fs, new Path(tmp, FingerprintFile), fp)
-      adoptable(fs, hp, fp, tables) match {
+      resolve(s, path, tables)(_ == fp) match {
         case Some(won) => fs.delete(tmp, true); won
         case None =>
           val fresh = new Path(hp,
@@ -158,7 +166,7 @@ object GenStore {
         .filter(st => committed(fs, st.getPath, tables))
         .flatMap(st => genFp(fs, st.getPath).map(_ -> st))
         .groupBy(_._1)
-        // (mtime, name) — the SAME total order adoption sorts by, so at
+        // (mtime, name) — the SAME total order resolve sorts by, so at
         // equal mtimes (same-millisecond commits, synthetic object-store
         // mtimes) retention keeps exactly the generation adoption picks
         // (ADVICE r16)

@@ -3,9 +3,10 @@ package graft.util
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Tiny metadata-file protocol shared by the generational indexes (the
-  * durable admit index in `streaming/Streams` and the minhash sigsPath
-  * index in `operators/Pipeline`): pointer/fingerprint files and data-
-  * file listings. One implementation (round-12 review: the two copies
+  * durable admit index in `streaming/AdmitIndex` and every
+  * [[GenStore]] store — the minhash sigsPath index, zone-map manifests,
+  * graph memos and ANN models): pointer/fingerprint files and data-file
+  * listings. One implementation (round-12 review: the two copies
   * had already started to diverge) so a protocol fix lands everywhere.
   *
   * `write` publishes via hidden-temp + rename. Where the filesystem

@@ -269,6 +269,50 @@ class GenStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("resolve: a committed pointer target wins, else the newest committed generation by (mtime, name) the predicate accepts") {
+    val root = Files.createTempDirectory("graft-gs-resolve").toString
+    try {
+      def build(fp: String) = GenStore.resolveOrBuild(spark, root, fp, Seq("t")) {
+        tmp => writeTables(tmp, Seq("t"))
+      }.getName
+      def resolve(fpOk: String => Boolean) =
+        GenStore.resolve(spark, root, Seq("t"))(fpOk).map(_.getName)
+      val isA = (fp: String) => fp.startsWith("corpus|a|")
+      val gA1 = build("corpus|a|n=1")
+      val gB = build("corpus|b|n=1")
+      val gA2 = build("corpus|a|n=2")
+      val now = System.currentTimeMillis()
+      def mtime(g: String, t: Long) = assert(new java.io.File(root, g).setLastModified(t))
+      val hp = new Path(root)
+      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def point(g: String) = graft.util.MetaFiles.write(fs, new Path(hp, "_GRAFT_CURRENT"), g)
+      // the pointer names gA2: it wins although gA1 is newer by mtime
+      mtime(gA1, now - 60000L); mtime(gA2, now - 120000L)
+      assert(resolve(isA) === Some(gA2))
+      // a pointer the predicate rejects falls through to the newest
+      // accepted generation by mtime, then by name at equal mtimes
+      point(gB)
+      assert(resolve(isA) === Some(gA1))
+      mtime(gA2, now - 30000L)
+      assert(resolve(isA) === Some(gA2))
+      mtime(gA1, now - 30000L)
+      assert(resolve(isA) === Some(Seq(gA1, gA2).max))
+      // a torn generation (every table _SUCCESS, no commit marker) is
+      // never returned: not as the pointer target, not as the newest
+      val torn = new java.io.File(root, "gen=ffffffff-torn")
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(root, gA1), torn)
+      Files.delete(torn.toPath.resolve("_GRAFT_COMMITTED"))
+      point(torn.getName)
+      assert(resolve(isA) === Some(Seq(gA1, gA2).max))
+      // a predicate no generation satisfies: None, and nothing is built
+      val before = new java.io.File(root).list().toSet
+      assert(resolve(_.startsWith("corpus|c|")) === None)
+      assert(new java.io.File(root).list().toSet === before)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    }
+  }
+
   test("MetaFiles: a stale-crc wreck is overwritten readably, and crc temp sidecars are swept (ADVICE r16)") {
     val root = Files.createTempDirectory("graft-mf-crc").toString
     try {

@@ -916,58 +916,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("archived legacy flat sigsPath (no fingerprint, corpus gone) still serves") {
-    // round-11 review: a pre-generational index has no fingerprint and
-    // its corpus may be archived — committed flat data at the top level
-    // is exactly what the old code served, so the upgrade must keep
-    // serving it instead of throwing "nothing to rebuild from".
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs_archived")
-    val sigsPath = new java.io.File(tmp.toFile, "sigs.parquet").getAbsolutePath
-    val goneCorpus = new java.io.File(tmp.toFile, "archived_corpus").getAbsolutePath
-    try {
-      spark.createDataFrame(Seq((42L, 7L))).toDF("doc_id", "m0")
-        .coalesce(1).write.parquet(sigsPath)
-      spark.conf.set("spark.graft.minhash.sigsPath", sigsPath)
-      val got = Pipeline.minhashSigs(spark, goneCorpus)
-        .collect().map(_.getLong(0)).toSeq
-      assert(got === Seq(42L),
-        "the committed legacy flat data must be served at the old trust level")
-    } finally {
-      spark.conf.unset("spark.graft.minhash.sigsPath")
-      graft.util.CorpusMemo.invalidate(spark, goneCorpus)
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    }
-  }
-
-  test("archived legacy flat sigsPath with stray gen dirs never serves a mixed frame") {
-    // ADVICE round 11: the legacy fallback used a DIRECTORY read, which
-    // partition-discovers `gen=<sha8>/` subdirs as a 'gen' column — if a
-    // migrated index ever loses its top-level fingerprint while the flat
-    // _SUCCESS remains, that read served flat+generational rows mixed.
-    // The fallback now reads an explicit top-level FILE list.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs_mixed")
-    val sigsPath = new java.io.File(tmp.toFile, "sigs.parquet").getAbsolutePath
-    val goneCorpus = new java.io.File(tmp.toFile, "archived_corpus").getAbsolutePath
-    try {
-      spark.createDataFrame(Seq((42L, 7L))).toDF("doc_id", "m0")
-        .coalesce(1).write.parquet(sigsPath)
-      // a migrated generation whose pointer/fingerprint were lost
-      spark.createDataFrame(Seq((99L, 8L))).toDF("doc_id", "m0")
-        .coalesce(1).write.parquet(
-          new java.io.File(sigsPath, "gen=deadbeef").getAbsolutePath)
-      spark.conf.set("spark.graft.minhash.sigsPath", sigsPath)
-      val got = Pipeline.minhashSigs(spark, goneCorpus)
-      assert(!got.columns.contains("gen"),
-        "the legacy fallback must never partition-discover gen= subdirs")
-      assert(got.collect().map(_.getLong(0)).toSeq === Seq(42L),
-        "only the top-level flat files may be served")
-    } finally {
-      spark.conf.unset("spark.graft.minhash.sigsPath")
-      graft.util.CorpusMemo.invalidate(spark, goneCorpus)
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    }
-  }
-
   test("sigsPath crash between rename and repoint heals by ADOPTION, not rebuild") {
     // round 12 (ADVICE TOCTOU): generations get unique per-attempt names
     // and publishing is rename-into-fresh + pointer repoint — no code
@@ -1009,54 +957,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("sigsPath pre-provenance r11 generation (no per-gen fingerprint) still serves") {
-    // round-12 second review: resolution demanded per-generation
-    // provenance, but r11-era builds (the shipped 100x index among
-    // them) wrote only the TOP-LEVEL fingerprint — requiring the file
-    // silently invalidated every such index (full rebuild when the
-    // corpus is live, a brick when archived). The fixed-name candidate
-    // gen=<sha8(fp)> tolerates a MISSING per-gen fingerprint: the name
-    // is itself derived from the fingerprint.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs_r11layout")
-    val docsDir = new java.io.File(tmp.toFile, "documents.parquet").getAbsolutePath
-    val sigsPath = new java.io.File(tmp.toFile, "sigs.parquet").getAbsolutePath
-    val t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    def gens(): Seq[java.io.File] = new java.io.File(sigsPath).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("gen=")).toSeq.sortBy(_.getName)
-    def load(): Seq[Long] = {
-      graft.util.CorpusMemo.invalidate(spark, tmp.toString)
-      Pipeline.minhashSigs(spark, tmp.toString).collect().map(_.getLong(0)).sorted.toSeq
-    }
-    try {
-      spark.createDataFrame(Seq((1L, t, "en", "web", t.length.toLong)))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.parquet(docsDir)
-      spark.conf.set("spark.graft.minhash.sigsPath", sigsPath)
-      assert(load() === Seq(1L))
-      // transform the r12 layout into the r11 one: fixed name (strip
-      // the nonce suffix), no pointer, no per-generation fingerprint
-      val g = gens().head
-      val fixedName = g.getName.takeWhile(_ != '-')
-      assert(g.renameTo(new java.io.File(sigsPath, fixedName)))
-      assert(new java.io.File(sigsPath, "_GRAFT_CURRENT").delete())
-      val perGen = new java.io.File(new java.io.File(sigsPath, fixedName),
-        "_GRAFT_FINGERPRINT")
-      assert(perGen.delete())
-      // live corpus: must SERVE the r11 generation, not rebuild beside it
-      assert(load() === Seq(1L))
-      assert(gens().map(_.getName) === Seq(fixedName),
-        "an r11 fixed-name generation must be served unmigrated, not rebuilt")
-      // archived corpus: same index must still serve (not throw)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(docsDir))
-      assert(load() === Seq(1L),
-        "an archived-corpus r11 index must keep serving")
-    } finally {
-      spark.conf.unset("spark.graft.minhash.sigsPath")
-      graft.util.CorpusMemo.invalidate(spark, tmp.toString)
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-    }
-  }
-
   test("sigsPath lost top-level fingerprint over an archived corpus adopts by provenance prefix") {
     // round-12 second review: the top-level fingerprint has a
     // delete-then-rename publish window; losing it while the corpus is
@@ -1090,12 +990,92 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("sigsPath legacy flat-layout files are GC'd one switch after migration") {
-    // pre-generational indexes kept part files at the TOP level. The
-    // migration rebuild leaves them in place (a legacy reader may still
-    // hold them — the one-switch grace), and the SECOND rebuild, whose
-    // superseded current is itself generational, deletes them.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs_legacy")
+  /** A two-document corpus under `tmp` and a sigsPath index beside it in
+    * the layout written before the GenStore fold: the in-session
+    * signature rows at the root of a `gen=<sha8(fp)>-<nonce>` dir with
+    * its own `_SUCCESS` and `_GRAFT_FINGERPRINT` but no
+    * `_GRAFT_COMMITTED`, named by `_GRAFT_CURRENT` and fingerprinted at
+    * the top level. Returns the in-session frame and the gen dir name. */
+  private def preGenStoreIndex(tmp: java.nio.file.Path, sigsPath: String)
+      : (org.apache.spark.sql.DataFrame, String) = {
+    val t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    spark.createDataFrame(Seq((1L, t, "en", "web", t.length.toLong),
+        (2L, t + " extra tail words here", "en", "web", t.length + 22L)))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(new java.io.File(tmp.toFile, "documents.parquet").getAbsolutePath)
+    graft.util.CorpusMemo.invalidate(spark, tmp.toString)
+    val inSession = Pipeline.minhashSigs(spark, tmp.toString)
+    val fp = s"graft-minhash-v1|$tmp|n=2|max=2"
+    val name = s"gen=${graft.util.GenStore.sha8(fp)}-1a2b3c"
+    val root = new org.apache.hadoop.fs.Path(sigsPath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    inSession.write.parquet(new org.apache.hadoop.fs.Path(root, name).toString)
+    graft.util.MetaFiles.write(fs,
+      new org.apache.hadoop.fs.Path(root, s"$name/_GRAFT_FINGERPRINT"), fp)
+    graft.util.MetaFiles.write(fs, new org.apache.hadoop.fs.Path(root, "_GRAFT_CURRENT"), name)
+    graft.util.MetaFiles.write(fs, new org.apache.hadoop.fs.Path(root, "_GRAFT_FINGERPRINT"), fp)
+    (inSession, name)
+  }
+
+  test("sigsPath index in the pre-GenStore layout over a live corpus rebuilds once, row-identical") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs_migrate")
+    val sigsPath = new java.io.File(tmp.toFile, "sigs.parquet").getAbsolutePath
+    def pointer() = java.nio.file.Files.readString(
+      new java.io.File(sigsPath, "_GRAFT_CURRENT").toPath).trim
+    def load() = {
+      graft.util.CorpusMemo.invalidate(spark, tmp.toString)
+      Pipeline.minhashSigs(spark, tmp.toString)
+    }
+    try {
+      val (inSession, legacy) = preGenStoreIndex(tmp, sigsPath)
+      spark.conf.set("spark.graft.minhash.sigsPath", sigsPath)
+      val served = load()
+      val g = new java.io.File(sigsPath, pointer())
+      assert(g.getName !== legacy, "the old layout must not be served")
+      assert(new java.io.File(g, "_GRAFT_COMMITTED").exists() &&
+        new java.io.File(g, "sigs/_SUCCESS").exists())
+      assert(served.columns.length === 66)
+      assert(served.columns.toSeq === inSession.columns.toSeq)
+      assert(served.count() === 2L)
+      assert(served.exceptAll(inSession).isEmpty && inSession.exceptAll(served).isEmpty,
+        "the rebuilt index must hold the in-session rows")
+      // the markerless old generation goes with GenStore's 60-minute
+      // sweep, and the rebuild is not repeated
+      val old = System.currentTimeMillis() - 90 * 60 * 1000L
+      java.nio.file.Files.walk(new java.io.File(sigsPath, legacy).toPath)
+        .forEach(f => f.toFile.setLastModified(old))
+      assert(load().count() === 2L)
+      assert(!new java.io.File(sigsPath, legacy).exists())
+      assert(pointer() === g.getName)
+    } finally {
+      spark.conf.unset("spark.graft.minhash.sigsPath")
+      graft.util.CorpusMemo.invalidate(spark, tmp.toString)
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+  }
+
+  test("sigsPath index in the pre-GenStore layout over an archived corpus raises, naming the path") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs_migrate_archived")
+    val sigsPath = new java.io.File(tmp.toFile, "sigs.parquet").getAbsolutePath
+    try {
+      preGenStoreIndex(tmp, sigsPath)
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(tmp.toFile, "documents.parquet"))
+      spark.conf.set("spark.graft.minhash.sigsPath", sigsPath)
+      graft.util.CorpusMemo.invalidate(spark, tmp.toString)
+      val e = intercept[IllegalStateException] {
+        Pipeline.minhashSigs(spark, tmp.toString)
+      }
+      assert(e.getMessage.contains(sigsPath), e.getMessage)
+    } finally {
+      spark.conf.unset("spark.graft.minhash.sigsPath")
+      graft.util.CorpusMemo.invalidate(spark, tmp.toString)
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
+  }
+
+  test("sigsPath archived corpus with a lost pointer serves its NEWEST generation, not the last by name") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs_newest")
     val docsDir = new java.io.File(tmp.toFile, "documents.parquet").getAbsolutePath
     val sigsPath = new java.io.File(tmp.toFile, "sigs.parquet").getAbsolutePath
     val t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1107,31 +1087,26 @@ class PipelineSpec extends AnyFunSuite {
       graft.util.CorpusMemo.invalidate(spark, tmp.toString)
       Pipeline.minhashSigs(spark, tmp.toString).collect().map(_.getLong(0)).sorted.toSeq
     }
-    def legacyFile = new java.io.File(sigsPath, "part-legacy.parquet")
+    def gens(): Seq[java.io.File] = new java.io.File(sigsPath).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("gen=")).toSeq
     try {
       spark.conf.set("spark.graft.minhash.sigsPath", sigsPath)
       writeDoc(1L)
-      // fabricate the legacy layout: a data file at the top level plus a
-      // (stale) fingerprint — content is never read, only lifecycle matters
-      val stage = new java.io.File(tmp.toFile, "stage").getAbsolutePath
-      spark.range(1).coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      assert(new java.io.File(sigsPath).mkdirs())
-      java.nio.file.Files.copy(part.toPath, legacyFile.toPath)
-      java.nio.file.Files.writeString(
-        new java.io.File(sigsPath, "_GRAFT_FINGERPRINT").toPath, "legacy-flat")
-      // rebuild #1 (migration): fingerprint mismatch → new generation;
-      // legacy file survives the grace window
       assert(loadIds() === Seq(1L))
-      assert(legacyFile.exists(),
-        "migration must leave legacy flat files for one switch")
-      // rebuild #2 (corpus growth): superseded current is generational →
-      // legacy flat files are ≥ two switches stale and must be GC'd
+      val older = gens().head
       writeDoc(5L)
       assert(loadIds() === Seq(1L, 5L))
-      assert(!legacyFile.exists(),
-        "the second rebuild must GC the legacy flat files")
+      assert(gens().size === 2)
+      // names lead with the fingerprint's hash, so name order is not
+      // age order: give the older generation the name that sorts last,
+      // and an mtime a minute older than the newer one's
+      val renamed = new java.io.File(sigsPath, "gen=ffffffff-0")
+      assert(older.renameTo(renamed))
+      assert(renamed.setLastModified(System.currentTimeMillis() - 60000L))
+      assert(new java.io.File(sigsPath, "_GRAFT_CURRENT").delete())
+      assert(new java.io.File(sigsPath, "_GRAFT_FINGERPRINT").delete())
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(docsDir))
+      assert(loadIds() === Seq(1L, 5L), "the newer generation's rows must be served")
     } finally {
       spark.conf.unset("spark.graft.minhash.sigsPath")
       graft.util.CorpusMemo.invalidate(spark, tmp.toString)
@@ -1210,7 +1185,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("sigsPath index integrity: partial write, corpus growth, and dir reuse all rebuild") {
     // fs.exists alone is not validity (round 11, ADVICE): the index
-    // carries a _SUCCESS commit marker and a corpus fingerprint
+    // carries a _GRAFT_COMMITTED commit marker and a corpus fingerprint
     // (dir + doc count + max doc_id); any mismatch rebuilds atomically.
     val tmp = java.nio.file.Files.createTempDirectory("graft_sigs_integrity")
     val docsDir = new java.io.File(tmp.toFile, "documents.parquet").getAbsolutePath
@@ -1226,6 +1201,17 @@ class PipelineSpec extends AnyFunSuite {
     }
     def gens(): Seq[java.io.File] = new java.io.File(sigsPath).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("gen=")).toSeq.sortBy(_.getName)
+    def committedGens(): Seq[java.io.File] =
+      gens().filter(g => new java.io.File(g, "_GRAFT_COMMITTED").exists())
+    // GenStore retention (GenStoreSpec pins it): the newest committed
+    // generation of every fingerprint served stays, so committed
+    // generations = distinct corpus states served so far
+    def retained(): Int = {
+      val fps = committedGens().map(g => java.nio.file.Files.readString(
+        new java.io.File(g, "_GRAFT_FINGERPRINT").toPath).trim)
+      assert(fps.distinct.size === fps.size, s"one generation per fingerprint: $fps")
+      fps.size
+    }
     try {
       spark.conf.set("spark.graft.minhash.sigsPath", sigsPath)
       writeDoc(1L)
@@ -1233,29 +1219,31 @@ class PipelineSpec extends AnyFunSuite {
       val fprint = new java.io.File(sigsPath, "_GRAFT_FINGERPRINT")
       assert(gens().size === 1 && fprint.exists(),
         "committed index must carry a generation dir and the corpus fingerprint")
-      val success = new java.io.File(gens().head, "_SUCCESS")
-      assert(success.exists(), "the generation must carry its commit marker")
+      val marker = new java.io.File(gens().head, "_GRAFT_COMMITTED")
+      assert(marker.exists(), "the generation must carry its commit marker")
 
       // PARTIAL WRITE: strip the commit marker — a crashed build's gen
       // dir exists but must not be served; the next load rebuilds into a
-      // FRESH generation (round 12: unique per-attempt names, no
-      // delete-then-rename over a shared path) and the GC sweeps the
-      // uncommitted debris
-      assert(success.delete())
+      // FRESH generation (unique per-attempt names, no delete-then-rename
+      // over a shared path); the uncommitted debris is left to GenStore's
+      // 60-minute sweep
+      val torn = gens().head.getName
+      assert(marker.delete())
       assert(loadIds(tmp.toString) === Seq(1L))
-      assert(gens().size === 1,
-        "rebuild must land one fresh committed generation and GC the debris")
-      assert(new java.io.File(gens().head, "_SUCCESS").exists(),
-        "the rebuilt generation must carry its commit marker")
+      val rebuilt = committedGens()
+      assert(rebuilt.size === 1 && rebuilt.head.getName != torn,
+        "rebuild must land one fresh committed generation beside the debris")
+      assert(new java.io.File(rebuilt.head, "sigs/_SUCCESS").exists(),
+        "the rebuilt generation must carry its commit markers")
 
       // CORPUS GROWTH: a new doc lands in the corpus; the stale index
       // (built at n=1) must be detected by the fingerprint and a NEW
       // generation built with the new signature — the superseded
-      // generation is retained for still-live readers (grace of one)
+      // generation is retained for still-live readers
       writeDoc(5L)
       assert(loadIds(tmp.toString) === Seq(1L, 5L),
         "a grown corpus must invalidate the persisted index")
-      assert(gens().size === 2,
+      assert(retained() === 2,
         "the superseded generation must be retained for live readers")
 
       // LIVE READER SURVIVES A SWITCH: corpus A's memoized frame keeps
@@ -1275,19 +1263,19 @@ class PipelineSpec extends AnyFunSuite {
           "a reused sigsPath must rebuild for the new corpus dir")
         assert(aFrame.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 5L),
           "corpus A's live reader must survive corpus B's generation switch")
-        // retention is PER CORPUS DIR (round-11 review): corpus B's
-        // switch retains BOTH of A's generations — a cross-corpus GC
-        // could delete a generation another consumer's memo still reads
-        assert(gens().size === 3,
+        // corpus B's switch retains BOTH of A's generations — a
+        // cross-corpus GC could delete a generation another consumer's
+        // memo still reads
+        assert(retained() === 3,
           "cross-corpus generations must be retained (A×2 + B×1)")
-        // a further SAME-corpus growth trims A to its newest two: the
-        // oldest A generation goes, the one aFrame holds survives
+        // a further SAME-corpus growth keeps every fingerprint's newest
+        // generation, the one aFrame holds among them
         writeDoc(7L)
         assert(loadIds(tmp.toString) === Seq(1L, 5L, 7L))
-        assert(gens().size === 3,
-          "per-corpus keep-two: A's oldest generation must be GC'd (A×2 + B×1)")
+        assert(retained() === 4,
+          "newest-per-fingerprint retention keeps A×3 + B×1")
         assert(aFrame.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 5L),
-          "the one-switch grace must still cover aFrame's generation")
+          "retention must still cover aFrame's generation")
       } finally {
         graft.util.CorpusMemo.invalidate(spark, tmp2.toString)
         org.apache.commons.io.FileUtils.deleteDirectory(tmp2.toFile)
