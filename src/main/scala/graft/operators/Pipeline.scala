@@ -753,9 +753,6 @@ object Pipeline {
     require(changed == 0,
       s"label propagation hit the $maxRounds-round cap before convergence " +
       s"($changed labels still improving) — raise maxRounds for this graph")
-    if (sys.props.get("graft.cc.debug").contains("1"))
-      System.err.println(s"[cc] converged after $round rounds " +
-        s"($floorRounds floor + ${round - floorRounds} counted)")
     labels.select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
@@ -954,49 +951,6 @@ object Pipeline {
       .withColumn("diversity",
         col("n_distinct").cast("double") / col("n_total").cast("double"))
       .orderBy("lang", "n")
-  }
-
-  /** Vocabulary coverage curve: per language, the vocabulary rank (words
-    * ordered by frequency, ties broken lexically) needed to cover 90%
-    * and 99% of the token stream — THE table read when sizing a
-    * tokenizer vocabulary or an UNK budget ([[vocabPrune]] answers "what
-    * does a GIVEN min-count cut?"; this answers "how big must the vocab
-    * be for a TARGET coverage?").
-    *
-    * Scale shape: the corpus collapses to (lang, word) counts first (one
-    * map-side-combined keyed agg; everything after is vocabulary-sized).
-    * Rank and running coverage come from ONE sort-based window (same
-    * partition+order → a single exchange+sort that spills); the
-    * threshold test cross-multiplies int64s (cum·den ≥ num·total), so
-    * coverage is integer-exact — no float accumulates across the vocab.
-    * The per-(lang, threshold) answer is min(rank), and because the
-    * running sum is monotone in rank, min(cum) is the covered count at
-    * that same rank — no argmin needed. */
-  def vocabCoverage(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang").orderBy(col("c").desc, col("word"))
-    val wc = Tables.documents(s, dir)
-      .select(col("lang"), explode(Fns.tokensArr(col("text"))).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("lang", "word").agg(count(lit(1)).as("c"))
-    val ranked = wc
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .withColumn("cum", sum(col("c")).over(w).cast("long"))
-    val tot = wc.groupBy("lang")
-      .agg(sum(col("c")).cast("long").as("n_total"),
-        count(lit(1)).as("vocab_size"))
-    ranked.join(tot, Seq("lang"))
-      .select(col("lang"), col("rank"), col("cum"), col("n_total"),
-        col("vocab_size"),
-        explode(array(
-          struct(lit(0.9).as("threshold"), lit(9L).as("num"), lit(10L).as("den")),
-          struct(lit(0.99).as("threshold"), lit(99L).as("num"), lit(100L).as("den"))))
-          .as("th"))
-      .filter(col("cum") * col("th.den") >= col("th.num") * col("n_total"))
-      .groupBy(col("lang"), col("th.threshold").as("threshold"))
-      .agg(min(col("rank")).as("vocab_rank"), min(col("cum")).as("n_covered"),
-        max(col("n_total")).as("n_total"), max(col("vocab_size")).as("vocab_size"))
-      .orderBy("lang", "threshold")
   }
 
   /** Leakage-safe train/val/test split: every document is assigned a
@@ -1363,32 +1317,6 @@ object Pipeline {
       .select(col("doc_id"), col("chunk_start"), col("n_tokens"),
         Fns.polyHash(col("chunk_text")).as("chunk_hash"))
       .orderBy("doc_id", "chunk_start")
-
-  /** Sub-document (chunk-level) exact dedup: documents that are not
-    * near-duplicates as a whole can still share long verbatim spans
-    * (boilerplate, quotes, templates); training pipelines dedup at the
-    * chunk grain to catch them. Chunks are the [[chunkRows]] windows,
-    * compared by codegen'd hash — a chunk is duplicated when its hash
-    * occurs in more than one document. Per document: total chunks,
-    * duplicated chunks, and the duplicated fraction.
-    *
-    * Scale shape: one groupBy on the int64 chunk hash (raw chunk text
-    * never shuffles — the hash projection happens before the exchange),
-    * then one join back on the same hash; both linear in chunk count. */
-  def chunkDedup(s: SparkSession, dir: String): DataFrame = {
-    val ch = chunkRows(Tables.documents(s, dir))
-      .select(col("doc_id"), Fns.polyHash(col("chunk_text")).as("h"))
-    val docsPerChunk = ch.groupBy("h")
-      .agg(countDistinct(col("doc_id")).as("n_docs"))
-    ch.join(docsPerChunk, "h")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_chunks"),
-           sum(when(col("n_docs") > 1, 1L).otherwise(0L)).as("dup_chunks"))
-      .select(col("doc_id"), col("n_chunks"), col("dup_chunks"),
-        (col("dup_chunks").cast("double") / col("n_chunks").cast("double"))
-          .as("dup_ratio"))
-      .orderBy("doc_id")
-  }
 
   /** The end-to-end corpus curation job: quality filter → near-dup drop →
     * context chunking, summarized per language. This is the pipeline the

@@ -43,8 +43,10 @@ object LshStreams {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_band_hits"),
         min(col("index_doc")).as("first_match"))
-    Streams.withStatePartitions(s, 2) { Streams.completeToParquet(s, probed) }
-      .orderBy("doc_id")
+    val (data, ckpt) = Streams.sinkDirs()
+    Streams.drain(probed,
+      Streams.Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
+    Streams.readSink(s, data, probed.schema).orderBy("doc_id")
   }
 
   /** The new-snapshot slice's MinHash band stream: per-row 64-perm
@@ -246,45 +248,27 @@ object LshStreams {
       .map(_.toInt).getOrElse(8)
     require(lanes > 0, s"spark.graft.stream.lanes must be positive: $lanes")
     enforceCheckpointContract(s, ckpt, lanes, ttlMs)
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val durablePath = s.conf.getOption("spark.graft.stream.admitIndexPath")
-    val drained =
-      // 8 state lanes, not the 2 the small per-user flavors use: this
-      // stream keys state by BAND (16 per doc — ~20k groups at sf0.1).
-      // r17 measured 2 lanes 6.9 s / 8 lanes 3.9 s / 16 lanes 4.8 s, but
-      // that sweep was dominated by the sig-filter pushdown re-tokenize
-      // (fixed round 18 — see streamBands); the r18 re-sweep (LshProbe)
-      // reads FLAT 2.3–2.6 s across 1/2/4/8 lanes at sf0.1. 8 stays the
-      // default: per-key work scales with the increment on a real
-      // deployment, and resume requires a constant lane count across
-      // runs — this constant is part of the checkpoint contract.
-      try Streams.withStatePartitions(s, lanes) {
-        // In TTL mode the engine runs under TimeMode.ProcessingTime, and
-        // every no-data batch ADVANCES processing time — which, with TTL
-        // state live, makes the engine schedule another no-data batch:
-        // an infinite instant-batch loop under AvailableNow (observed:
-        // 5,600+ committed no-data batches before the kill). This stream
-        // has no watermark, so the finalizing no-data batch contributes
-        // nothing here — disable it for the TTL drain.
-        def drain(): DataFrame =
-          if (singleBatch) Streams.appendToParquetSingleBatchAt(s, out.toDF(), data, ckpt)
-          else Streams.appendToParquetAt(s, out.toDF(), data, ckpt)
-        if (ttlMs.isDefined) {
-          val k = "spark.sql.streaming.noDataMicroBatches.enabled"
-          val prev0 = s.conf.getOption(k)
-          s.conf.set(k, "false")
-          try drain() finally prev0 match {
-            case Some(v) => s.conf.set(k, v)
-            case None    => s.conf.unset(k)
-          }
-        } else drain()
-      }
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None    => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    // 8 state lanes, not the 2 the small per-user flavors use: this
+    // stream keys state by BAND (16 per doc — ~20k groups at sf0.1).
+    // r17 measured 2 lanes 6.9 s / 8 lanes 3.9 s / 16 lanes 4.8 s, but
+    // that sweep was dominated by the sig-filter pushdown re-tokenize
+    // (fixed round 18 — see streamBands); the r18 re-sweep reads FLAT
+    // 2.3–2.6 s across 1/2/4/8 lanes at sf0.1. 8 stays the default:
+    // per-key work scales with the increment on a real deployment, and
+    // resume requires a constant lane count across runs — this constant
+    // is part of the checkpoint contract.
+    //
+    // In TTL mode the engine runs under TimeMode.ProcessingTime, and every
+    // no-data batch ADVANCES processing time — which, with TTL state live,
+    // makes the engine schedule another no-data batch: an infinite
+    // instant-batch loop under AvailableNow (observed: 5,600+ committed
+    // no-data batches before the kill). This stream has no watermark, so
+    // the finalizing no-data batch contributes nothing here — the TTL
+    // drain runs without it.
+    Streams.drain(out, if (singleBatch) Streams.AppendOneBatch else Streams.Append,
+      data, ckpt, lanes = lanes, rocksDb = true, noDataBatches = ttlMs.isEmpty)
+    val drained = Streams.readSink(s, data, out.schema)
     // DURABLE ADMIT INDEX (`spark.graft.stream.admitIndexPath`, round 11):
     // the RocksDB carrier state is CHECKPOINT-scoped — a wiped checkpoint,
     // an index migration, or a fresh ingest pipeline loses every prior

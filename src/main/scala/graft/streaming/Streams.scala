@@ -57,23 +57,92 @@ case class SessOut(user_id: Long, n_sessions: Long, n_events: Long)
   */
 object Streams {
 
-  /** Run a one-shot streaming query with a bounded number of state-store
-    * partitions: per-partition store setup dominates these fixture-sized
-    * micro-batches (2 lanes measured ~15% faster than 4, which beat 8) —
-    * on a real cluster this knob scales with key cardinality.
-    * Also pins `noDataMicroBatches.enabled=true` for the
-    * duration: the append-mode queries rely on the finalizing no-data
-    * batch to advance the watermark past the last input (without it they
-    * would silently emit fewer rows, not fail). Restores the session conf. */
-  private[streaming] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val keys = Seq("spark.sql.shuffle.partitions" -> n.toString,
-                   "spark.sql.streaming.noDataMicroBatches.enabled" -> "true")
-    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
+  /** How [[drain]] writes each micro-batch. */
+  private[streaming] sealed trait Sink
+
+  /** Append mode into a parquet FILE sink at `data`: executors write the
+    * result files and the driver never holds the rows. */
+  private[streaming] case object Append extends Sink
+
+  /** [[Append]] that ENFORCES the drain fitting in one non-empty
+    * micro-batch. Some flavors' batch-oracle equality holds only for a
+    * single-batch drain (order-sensitive folds like the LOCF gap-fill, or
+    * the admit stream's first-arrival-wins: a directory-of-part-files
+    * source, a resumed checkpoint, or maxFilesPerTrigger can replay files
+    * out of order across batches and silently diverge from the batch
+    * oracle), so a split drain FAILS LOUDLY instead of returning
+    * plausible-but-divergent rows. */
+  private[streaming] case object AppendOneBatch extends Sink
+
+  /** Complete mode through `foreachBatch`: the parquet file sink is
+    * append-only by contract, so each trigger's full aggregate snapshot is
+    * handed to `write`, which overwrites the previous one (a distributed
+    * `batch.write`, never a driver collect). */
+  private[streaming] final case class Complete(write: DataFrame => Unit) extends Sink
+
+  /** Run `out` one-shot (`Trigger.AvailableNow`: every available batch,
+    * then the finalizing no-data batch) into `sink`, checkpointing at
+    * `ckpt`, and block until it terminates. `data` is the parquet path of
+    * the two append sinks; a [[Complete]] write names its own target.
+    * Every streaming flavor starts here, under one conf policy:
+    *
+    *   - `spark.sql.shuffle.partitions = lanes`, which is the number of
+    *     state-store partitions. Per-partition store setup dominates these
+    *     fixture-sized micro-batches (2 lanes measured ~15% faster than 4,
+    *     which beat 8); on a real cluster it scales with key cardinality.
+    *   - `noDataMicroBatches.enabled = noDataBatches`. The append-mode
+    *     flavors rely on the finalizing no-data batch to advance the
+    *     watermark past the last input; without it they would silently
+    *     emit fewer rows, not fail.
+    *   - the RocksDB state-store provider when `rocksDb` is set
+    *     (`transformWithState` requires it).
+    *
+    * The keys are set on the caller's session only while `start()` runs,
+    * then restored: the stream's execution clones the session when it is
+    * constructed inside `start()`, so every micro-batch, `foreachBatch`
+    * body and state store reads the clone's copy. The caller's conf is
+    * therefore never observed changed outside `start()`. A resumed
+    * checkpoint keeps the lane count and provider it was created with. */
+  private[streaming] def drain(out: Dataset[_], sink: Sink, data: String, ckpt: String,
+                               lanes: Int = 2, rocksDb: Boolean = false,
+                               noDataBatches: Boolean = true): Unit = {
+    val w = out.toDF().writeStream.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+    val writer = sink match {
+      case Append => w.outputMode("append").format("parquet").option("path", data)
+      case AppendOneBatch =>
+        @volatile var nonEmpty = 0
+        w.outputMode("append").foreachBatch { (batch: Dataset[Row], id: Long) =>
+          if (!batch.isEmpty) {
+            nonEmpty += 1
+            if (nonEmpty > 1) throw new IllegalStateException(
+              s"single-batch drain invariant violated (non-empty batch $id is " +
+                "the " + nonEmpty + "th): this flavor's batch-oracle equality " +
+                "requires the whole source in one micro-batch — re-drain with " +
+                "a fresh checkpoint and no maxFilesPerTrigger")
+            batch.write.mode("append").parquet(data)
+          }
+        }
+      case Complete(write) => w.outputMode("complete")
+        .foreachBatch { (batch: Dataset[Row], _: Long) => write(batch) }
     }
+    val confs = Seq("spark.sql.shuffle.partitions" -> lanes.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) ++
+      Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // getOption would report a registered key's default as set, and the
+    // restore would then pin it; getAll holds only the keys really set
+    val conf = out.sparkSession.conf
+    val set = conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    val q = try {
+      confs.foreach { case (k, v) => conf.set(k, v) }
+      writer.start()
+    } finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None)    => conf.unset(k)
+    }
+    try q.awaitTermination() finally q.stop()
   }
 
   /** Fresh (data, checkpoint) dirs for a one-shot file sink — registered
@@ -89,99 +158,12 @@ object Streams {
     * for a production one-shot run), no batch ever fires and the sink dir
     * is never created; the result is then an empty frame of the query's
     * schema, not a path error. */
-  private def readSink(s: SparkSession, data: String,
-                       schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private[streaming] def readSink(s: SparkSession, data: String,
+                                  schema: org.apache.spark.sql.types.StructType): DataFrame =
     if (new java.io.File(data).exists())
       s.read.schema(schema).parquet(data)
     else
       s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-
-  /** Append-mode one-shot run into a parquet FILE sink (executors write
-    * the result files; the driver never holds the rows — the fix for the
-    * O(data)-output dedup stream). `Trigger.AvailableNow` processes every
-    * available batch plus the finalizing no-data batch that advances the
-    * watermark, then terminates. The read-back is the same thing the
-    * driver harness (or a downstream batch job) would do with the sink. */
-  private def appendToParquet(s: SparkSession, out: Dataset[_]): DataFrame = {
-    val (data, ckpt) = sinkDirs()
-    appendToParquetAt(s, out, data, ckpt)
-  }
-
-  /** [[appendToParquet]] with CALLER-OWNED sink/checkpoint dirs — the
-    * production resume path: a second drain against the same checkpoint
-    * processes only files that arrived since the first, and stateful
-    * operators resume from their persisted state store. */
-  private[streaming] def appendToParquetAt(s: SparkSession, out: Dataset[_],
-                                data: String, ckpt: String): DataFrame = {
-    val q = out.writeStream.outputMode("append").format("parquet")
-      .option("path", data).option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    readSink(s, data, out.schema)
-  }
-
-  /** [[appendToParquet]] that ENFORCES the drain fitting in one non-empty
-    * micro-batch. Some flavors' batch-oracle equality is only guaranteed
-    * for a single-batch drain (order-sensitive folds like the LOCF
-    * gap-fill: a directory-of-part-files source, a resumed checkpoint, or
-    * maxFilesPerTrigger can replay files out of (ts, event_id) order
-    * across batches and silently diverge from the batch window). Those
-    * flavors drain through this wrapper so a split drain FAILS LOUDLY
-    * instead of returning plausible-but-divergent rows. */
-  private def appendToParquetSingleBatch(s: SparkSession, out0: Dataset[_]): DataFrame = {
-    val (data, ckpt) = sinkDirs()
-    appendToParquetSingleBatchAt(s, out0, data, ckpt)
-  }
-
-  /** [[appendToParquetSingleBatch]] with caller-owned sink/checkpoint
-    * dirs (the admit stream's ORACLE path: first-arrival-wins equals the
-    * id-ordered batch oracle only when the whole fixture drains in one
-    * micro-batch — a directory-of-part-files fixture under
-    * maxFilesPerTrigger=1 would otherwise diverge silently). */
-  private[streaming] def appendToParquetSingleBatchAt(s: SparkSession, out0: Dataset[_],
-                                           data: String, ckpt: String): DataFrame = {
-    val out = out0.toDF()
-    @volatile var nonEmpty = 0
-    val q = out.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!batch.isEmpty) {
-          nonEmpty += 1
-          if (nonEmpty > 1) throw new IllegalStateException(
-            s"single-batch drain invariant violated (non-empty batch $id is " +
-              "the " + nonEmpty + "th): this flavor's batch-oracle equality " +
-              "requires the whole source in one micro-batch — re-drain with " +
-              "a fresh checkpoint and no maxFilesPerTrigger")
-          batch.write.mode("append").parquet(data)
-        }
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    readSink(s, data, out.schema)
-  }
-
-  /** Complete-mode one-shot run: the parquet file sink is append-only by
-    * contract, so complete-mode aggregates go through `foreachBatch`,
-    * which overwrites the (small) aggregate snapshot per trigger — the
-    * standard complete→file pattern. The write is a distributed
-    * `batch.write.parquet`, not a driver collect. */
-  private[streaming] def completeToParquet(s: SparkSession, agg: DataFrame,
-                                post: DataFrame => DataFrame = identity): DataFrame = {
-    val (data, ckpt) = sinkDirs()
-    val q = agg.writeStream.outputMode("complete")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        post(batch.toDF()).write.mode("overwrite").parquet(data)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    // the sink holds POST-transformed rows; derive the read-back schema by
-    // running post over an empty frame so a schema-changing post (extra
-    // column, projection) cannot silently misread the files
-    val outSchema = post(s.createDataFrame(
-      java.util.Collections.emptyList[Row](), agg.schema)).schema
-    readSink(s, data, outSchema)
-  }
 
   /** The events table as a stream, tolerant of both fixture layouts: a
     * single `events.parquet` FILE beside the other tables (driver
@@ -209,8 +191,9 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
               col("event_type"), col("n"))
-    withStatePartitions(s, 2) { completeToParquet(s, agg) }
-      .orderBy("hour", "event_type")
+    val (data, ckpt) = sinkDirs()
+    drain(agg, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
+    readSink(s, data, agg.schema).orderBy("hour", "event_type")
   }
 
   /** Watermarked tumbling window in APPEND mode: the streaming engine
@@ -228,8 +211,9 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
               col("event_type"), col("n"))
-    withStatePartitions(s, 2) { appendToParquet(s, agg) }
-      .orderBy("hour", "event_type")
+    val (data, ckpt) = sinkDirs()
+    drain(agg, Append, data, ckpt)
+    readSink(s, data, agg.schema).orderBy("hour", "event_type")
   }
 
   /** Streaming exact deduplication: `dropDuplicates` on (user_id, minute)
@@ -244,8 +228,9 @@ object Streams {
       .withWatermark("m", "1 hour")
       .dropDuplicates("user_id", "m")
       .select(col("user_id"), date_format(col("m"), "yyyy-MM-dd HH:mm").as("minute"))
-    withStatePartitions(s, 2) { appendToParquet(s, deduped) }
-      .orderBy("user_id", "minute")
+    val (data, ckpt) = sinkDirs()
+    drain(deduped, Append, data, ckpt)
+    readSink(s, data, deduped.schema).orderBy("user_id", "minute")
   }
 
   /** Stream-static join: the event stream enriched per micro-batch against
@@ -263,8 +248,9 @@ object Streams {
         when(coalesce(col("n_orders"), lit(0L)) >= 12, "heavy")
           .otherwise("light").as("tier"))
       .groupBy("event_type", "tier").agg(count(lit(1)).as("n"))
-    withStatePartitions(s, 2) { completeToParquet(s, joined) }
-      .orderBy("event_type", "tier")
+    val (data, ckpt) = sinkDirs()
+    drain(joined, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
+    readSink(s, data, joined.schema).orderBy("event_type", "tier")
   }
 
   /** Stream-stream inner join with a time-interval condition: views joined
@@ -286,8 +272,9 @@ object Streams {
         col("purchase_ts") >= col("view_ts") &&
         col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
       .select(col("user_id"), col("view_id"), col("purchase_id"))
-    withStatePartitions(s, 2) { appendToParquet(s, joined) }
-      .orderBy("user_id", "view_id", "purchase_id")
+    val (data, ckpt) = sinkDirs()
+    drain(joined, Append, data, ckpt)
+    readSink(s, data, joined.schema).orderBy("user_id", "view_id", "purchase_id")
   }
 
   /** Stream-stream LEFT OUTER interval join: like [[streamStreamJoin]],
@@ -317,8 +304,9 @@ object Streams {
         "leftOuter")
       .select(col("user_id"), col("view_id"),
         coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"))
-    withStatePartitions(s, 2) { appendToParquet(s, joined) }
-      .orderBy("user_id", "view_id", "purchase_id")
+    val (data, ckpt) = sinkDirs()
+    drain(joined, Append, data, ckpt)
+    readSink(s, data, joined.schema).orderBy("user_id", "view_id", "purchase_id")
   }
 
   /** Streaming leaderboard: complete-mode running counts per user, with
@@ -331,10 +319,10 @@ object Streams {
   def streamTopk(s: SparkSession, dir: String): DataFrame = {
     val stream = eventStream(s, dir)
     val counts = stream.groupBy("user_id").agg(count(lit(1)).as("n"))
-    withStatePartitions(s, 2) {
-      completeToParquet(s, counts,
-        b => b.orderBy(col("n").desc, col("user_id")).limit(10))
-    }.orderBy(col("n").desc, col("user_id"))
+    val (data, ckpt) = sinkDirs()
+    drain(counts, Complete(_.orderBy(col("n").desc, col("user_id")).limit(10)
+      .write.mode("overwrite").parquet(data)), data, ckpt)
+    readSink(s, data, counts.schema).orderBy(col("n").desc, col("user_id"))
   }
 
   /** Streaming aggregate into the `graftkv` V2 sink — the engine's own
@@ -351,13 +339,8 @@ object Streams {
     val agg = eventStream(s, dir)
       .groupBy("event_type").agg(count(lit(1)).as("n"))
       .select(col("event_type").as("key"), col("n").cast("string").as("value"))
-    val q = agg.writeStream.outputMode("complete")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        batch.write.format("graftkv").mode("overwrite").save(data)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
+    drain(agg, Complete(_.write.format("graftkv").mode("overwrite").save(data)),
+      data, ckpt)
     // zero-batch tolerance, same contract as readSink: no batch → no dir
     if (new java.io.File(data).exists())
       s.read.format("graftkv").load(data)
@@ -414,15 +397,8 @@ object Streams {
       col("chunk_hash").cast("string").as("key"),
       concat_ws(":", col("o.doc_id"), col("o.chunk_idx"), col("o.chunk_len"),
                 col("n_occ")).as("value"))
-    withStatePartitions(s, 2) {
-      val q = snapshot.writeStream.outputMode("complete")
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.write.format("graftkv").mode("overwrite").save(data)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-    }
+    drain(snapshot,
+      Complete(_.write.format("graftkv").mode("overwrite").save(data)), data, ckpt)
     // zero-batch tolerance, same contract as readSink: no batch → no dir
     if (new java.io.File(data).exists()) {
       val parts = split(col("value"), ":")
@@ -464,19 +440,11 @@ object Streams {
         col("doc_id"))
       .groupBy("source")
       .agg(topk(col("pr"), col("doc_id")).as("kept"))
-    withStatePartitions(s, 2) {
-      val q = kept.writeStream.outputMode("complete")
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.select(col("source"),
-              posexplode(col("kept.items")).as(Seq("pos", "e")))
-            .select(col("source"), col("e.doc_id").as("doc_id"),
-              (col("pos") + 1).cast("long").as("rk"))
-            .write.mode("overwrite").parquet(data)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-    }
+    drain(kept, Complete(_.select(col("source"),
+        posexplode(col("kept.items")).as(Seq("pos", "e")))
+      .select(col("source"), col("e.doc_id").as("doc_id"),
+        (col("pos") + 1).cast("long").as("rk"))
+      .write.mode("overwrite").parquet(data)), data, ckpt)
     import org.apache.spark.sql.types._
     readSink(s, data, StructType(Seq(
         StructField("source", StringType), StructField("doc_id", LongType),
@@ -508,19 +476,11 @@ object Streams {
         col("doc_id"))
       .groupBy("lang")
       .agg(topk(col("pr"), col("doc_id")).as("kept"))
-    withStatePartitions(s, 2) {
-      val q = kept.writeStream.outputMode("complete")
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.select(col("lang"),
-              posexplode(col("kept.items")).as(Seq("pos", "e")))
-            .select(col("lang"), col("e.doc_id").as("doc_id"),
-              (col("pos") + 1).cast("long").as("rk"))
-            .write.mode("overwrite").parquet(data)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-    }
+    drain(kept, Complete(_.select(col("lang"),
+        posexplode(col("kept.items")).as(Seq("pos", "e")))
+      .select(col("lang"), col("e.doc_id").as("doc_id"),
+        (col("pos") + 1).cast("long").as("rk"))
+      .write.mode("overwrite").parquet(data)), data, ckpt)
     import org.apache.spark.sql.types._
     readSink(s, data, StructType(Seq(
         StructField("lang", StringType), StructField("doc_id", LongType),
@@ -576,25 +536,19 @@ object Streams {
       .as[EvT]
     val out = stream.groupByKey(_.user_id)
       .transformWithState(new CurrentProcessor, TimeMode.None(), OutputMode.Append())
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // one snapshot lands per (user, batch); keep the LATEST per user —
-      // n_events is strictly increasing across a user's snapshots, so the
-      // struct max is the final profile even if the AvailableNow drain
-      // split into several micro-batches (maxFilesPerTrigger, resumed
-      // checkpoints). With a single batch this is a no-op.
-      withStatePartitions(s, 2) { appendToParquet(s, out.toDF()) }
-        .groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("last_type"))).as("s"))
-        .select(col("user_id"), col("s.n_events").as("n_events"),
-          col("s.last_type").as("last_type"))
-        .orderBy("user_id")
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None    => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    val (data, ckpt) = sinkDirs()
+    drain(out, Append, data, ckpt, rocksDb = true)
+    // one snapshot lands per (user, batch); keep the LATEST per user —
+    // n_events is strictly increasing across a user's snapshots, so the
+    // struct max is the final profile even if the AvailableNow drain
+    // split into several micro-batches (maxFilesPerTrigger, resumed
+    // checkpoints). With a single batch this is a no-op.
+    readSink(s, data, out.schema)
+      .groupBy("user_id")
+      .agg(max(struct(col("n_events"), col("last_type"))).as("s"))
+      .select(col("user_id"), col("s.n_events").as("n_events"),
+        col("s.last_type").as("last_type"))
+      .orderBy("user_id")
   }
 
   /** Streaming LOCF gap-fill (20th flavor) — [[graft.operators.Temporal
@@ -638,7 +592,9 @@ object Streams {
 
     val out = stream.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-    withStatePartitions(s, 2) { appendToParquetSingleBatch(s, out.toDF()) }
+    val (data, ckpt) = sinkDirs()
+    drain(out, AppendOneBatch, data, ckpt)
+    readSink(s, data, out.schema)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("locf_cents"))
       .orderBy("event_id")
@@ -679,7 +635,9 @@ object Streams {
     // user (n_events strictly increases across a user's snapshots) so the
     // result is identical even if the AvailableNow drain splits into
     // several micro-batches — same discipline as streamCurrentState
-    withStatePartitions(s, 2) { appendToParquet(s, out) }
+    val (data, ckpt) = sinkDirs()
+    drain(out, Append, data, ckpt)
+    readSink(s, data, out.schema)
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("s"))
       .select(col("user_id"), col("s.n_sessions").as("n_sessions"),
@@ -722,7 +680,9 @@ object Streams {
       .join(broadcast(bounds), Seq("k"))
       .groupBy(col("event_type"), binCol.as("bin"))
       .agg(count(lit(1)).as("cl"))
-    val drained = withStatePartitions(s, 2) { completeToParquet(s, live) }
+    val (data, ckpt) = sinkDirs()
+    drain(live, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
+    val drained = readSink(s, data, live.schema)
     // full outer so a bin populated on only one side still contributes
     // its full share to the distance
     val cells = refCells
@@ -769,7 +729,9 @@ object Streams {
       .select(pmod(col("h"), lit(256L)).as("bucket"),
         graft.operators.Pipeline.hllRhoOf(expr("h div 256")).as("rho"))
       .groupBy("bucket").agg(max(col("rho")).as("m"))
-    val drained = withStatePartitions(s, 2) { completeToParquet(s, regs) }
+    val (data, ckpt) = sinkDirs()
+    drain(regs, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
+    val drained = readSink(s, data, regs.schema)
     // post-drain: fill the never-observed buckets and reduce to the
     // single-row estimate — identical arithmetic to the batch census
     val full = s.range(0, 256).toDF("bucket")
@@ -797,7 +759,9 @@ object Streams {
     val cells = eventStream(s, dir)
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("c"))
-    val drained = withStatePartitions(s, 2) { completeToParquet(s, cells) }
+    val (data, ckpt) = sinkDirs()
+    drain(cells, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
+    val drained = readSink(s, data, cells.schema)
     val W = org.apache.spark.sql.expressions.Window
     val w = W.orderBy("h").rowsBetween(W.unboundedPreceding, W.currentRow)
     val tot = drained.agg(sum(col("c")).as("s"), count(lit(1)).as("hh"))
@@ -838,7 +802,9 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("cents"), col("n"))
-    val drained = withStatePartitions(s, 2) { completeToParquet(s, cells) }
+    val (data, ckpt) = sinkDirs()
+    drain(cells, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
+    val drained = readSink(s, data, cells.schema)
     val wh = org.apache.spark.sql.expressions.Window.partitionBy("hour")
       .orderBy("cents")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -883,7 +849,8 @@ object Streams {
       .agg(count(lit(1)).as("wau"))
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("wau"))
-    withStatePartitions(s, 2) { appendToParquet(s, agg) }
-      .orderBy("day")
+    val (data, ckpt) = sinkDirs()
+    drain(agg, Append, data, ckpt)
+    readSink(s, data, agg.schema).orderBy("day")
   }
 }

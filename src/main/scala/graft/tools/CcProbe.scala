@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
   * runMain graft.tools.CcProbe <sfDir> */
 object CcProbe {
   def main(args: Array[String]): Unit = {
-    sys.props("graft.cc.debug") = "1"
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")

@@ -1055,4 +1055,70 @@ class StreamsSpec extends AnyFunSuite {
     }
     assert(stream.nonEmpty)
   }
+
+  test("every declared stream drains on its state lanes and leaves the session conf unchanged") {
+    import java.util.UUID
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val started = new ConcurrentLinkedQueue[UUID]()
+    val terminated = new ConcurrentLinkedQueue[UUID]()
+    val partitions = new ConcurrentLinkedQueue[(UUID, Long)]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(op =>
+          partitions.add(e.progress.runId -> op.numShufflePartitions))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.add(e.runId)
+    }
+    // the entries tune the session, and the first events load sets
+    // `nanosAsLong` (Tables.eventsRaw); do both first so the conf
+    // comparison sees only what a drain leaves behind
+    Engine.tune(spark)
+    Tables.eventsRaw(spark, sf)
+    // runs `body`, then waits for each stream it started to report its
+    // termination, so every progress event of those runs has arrived
+    def runs(body: => Unit): Set[UUID] = {
+      val before = started.asScala.toSet
+      body
+      val ids = started.asScala.toSet -- before
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!ids.subsetOf(terminated.asScala.toSet) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(ids.subsetOf(terminated.asScala.toSet), "a stream never reported termination")
+      ids
+    }
+    spark.streams.addListener(listener)
+    try {
+      val streams = SparkEntry.queries.keys.filter(_.startsWith("q_stream_")).toSeq.sorted
+      assert(streams.size === 21)
+      streams.foreach { name =>
+        val conf = spark.conf.getAll
+        val ids = runs(SparkEntry.queries(name)(spark, sf).collect())
+        assert(spark.conf.getAll === conf, s"$name changed the session conf")
+        val lanes = partitions.asScala.collect { case (id, n) if ids(id) => n }.toSet
+        val expected = if (name == "q_stream_lsh_admit") 8L else 2L
+        assert(lanes === Set(expected), s"$name state partitions")
+      }
+      // the declared admit entry refuses a split drain; the conf is
+      // restored on that throwing path too
+      val t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+      val tmp = java.nio.file.Files.createTempDirectory("graft_drain_conf")
+      val docs = new java.io.File(tmp.toFile, "documents.parquet").getAbsolutePath
+      try {
+        Seq(3L, 7L).foreach { id =>
+          spark.createDataFrame(Seq((id, t, "en", "web", t.length.toLong)))
+            .toDF("doc_id", "text", "lang", "source", "n_chars")
+            .coalesce(1).write.mode("append").parquet(docs)
+        }
+        val conf = spark.conf.getAll
+        runs(intercept[Exception] {
+          SparkEntry.queries("q_stream_lsh_admit")(spark, tmp.toString).collect()
+        })
+        assert(spark.conf.getAll === conf, "the failed drain changed the session conf")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    } finally spark.streams.removeListener(listener)
+  }
 }
