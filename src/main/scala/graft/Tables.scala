@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Fixture loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -29,8 +30,9 @@ import org.apache.spark.sql.types.StructType
   * file Spark's inference picks), skipping the row-group metadata
   * (0.4–0.6 ms; the full footer costs 8–10 ms), converts it with the
   * converter Spark's inference uses, built from the session conf at call
-  * time (so `nanosAsLong` set by [[eventsRaw]] and NTZ inference apply),
-  * and hands it to `spark.read.schema(...)`. Schema and optimized plan
+  * time (so NTZ inference applies; [[eventsRaw]] converts under a copy of
+  * that conf with `nanosAsLong` on), and hands it to
+  * `spark.read.schema(...)`. Schema and optimized plan
   * are the same as with inference (`TablesSpec`). Nothing is cached: the
   * footer is read on every call, so a rewritten table is picked up as
   * before. Wherever Spark's inference would not read exactly that one
@@ -40,19 +42,30 @@ import org.apache.spark.sql.types.StructType
   * and errors are Spark's own.
   */
 object Tables {
-  private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+  private def load(spark: SparkSession, dir: String, name: String,
+                   nanosAsLong: Boolean = false): DataFrame = {
     val path = s"$dir/$name.parquet"
-    footerSchema(spark, path) match {
+    footerSchema(spark, path, nanosAsLong) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None         => spark.read.parquet(path)
     }
   }
 
   /** The schema Spark's inference would give `path`, read on the driver
-    * from one footer, or None where the rule above defers to Spark. */
-  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    * from one footer, or None where the rule above defers to Spark.
+    * `nanosAsLong` converts TIMESTAMP(NANOS) columns to INT64 as
+    * `spark.sql.legacy.parquet.nanosAsLong` does, without setting it. */
+  private[graft] def footerSchema(spark: SparkSession, path: String,
+                                  nanosAsLong: Boolean = false): Option[StructType] =
     try {
       val conf = spark.sessionState.newHadoopConf()
+      val sqlConf =
+        if (!nanosAsLong) spark.sessionState.conf
+        else {
+          val c = spark.sessionState.conf.clone()
+          c.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+          c
+        }
       val p = new Path(path)
       val listed = p.getFileSystem(conf).listStatus(p).toSeq
       val data = listed.filterNot { f =>
@@ -67,7 +80,7 @@ object Tables {
         val footer = ParquetFooterReader.readFooter(
           HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
         ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          new ParquetToSparkSchemaConverter(sqlConf))
       }
     } catch { case NonFatal(_) => None }
 
@@ -79,14 +92,19 @@ object Tables {
   def orders(s: SparkSession, dir: String): DataFrame    = load(s, dir, "orders")
   def lineitem(s: SparkSession, dir: String): DataFrame  = load(s, dir, "lineitem")
 
-  /** events.ts is parquet TIMESTAMP(NANOS), which Spark's reader rejects;
-    * read it as a raw INT64 (legacy nanosAsLong) and convert. The fixture's
-    * timestamps are micro-aligned (verified: epoch_ns % 1000 == 0) so the
-    * ns→µs integer division is lossless and DuckDB sees identical instants. */
-  def eventsRaw(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    load(s, dir, "events")
-  }
+  /** events.ts has been parquet TIMESTAMP(NANOS), which Spark's reader
+    * rejects; read it as a raw INT64 (legacy nanosAsLong) and convert. The
+    * fixture's timestamps are micro-aligned (verified: epoch_ns % 1000 == 0)
+    * so the ns→µs integer division is lossless and DuckDB sees identical
+    * instants. Only schema conversion needs `nanosAsLong`: with the INT64
+    * schema passed in, Spark's vectorized and row readers both return the
+    * raw nanos with the conf off, so the footer schema is converted under
+    * a copy of the session conf and the session's own is not written. A
+    * NANOS table in a layout the footer rule defers to Spark (partition
+    * directories, summary files, `mergeSchema`) fails as Spark's inference
+    * does unless the session sets `nanosAsLong` itself. */
+  def eventsRaw(s: SparkSession, dir: String): DataFrame =
+    load(s, dir, "events", nanosAsLong = true)
 
   /** Normalize whatever timestamp encoding the fixture was written with to
     * session-local TIMESTAMP (LTZ). Three encodings have been observed across

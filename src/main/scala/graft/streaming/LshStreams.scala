@@ -67,8 +67,8 @@ object LshStreams {
     // with every intermediate INLINED: the pushed condition re-evaluates
     // `filter(split(text))` inside each of the three element_at calls of
     // every shingle — a per-row O(tokens × shingles) re-tokenize that
-    // measured ~10× the whole single-evaluation pass (ScanProbe). With
-    // the early cheap filter the sig kernel runs exactly once per row.
+    // measured ~10× the whole single-evaluation pass (OPTIMIZATION_r18.md).
+    // With the early cheap filter the sig kernel runs exactly once per row.
     val docs = Streams.documentsStream(s, dir)
       .filter(pmod(col("doc_id"), lit(4L)) === 3L)
       .select(col("doc_id"),

@@ -15,43 +15,10 @@ object BenchOne {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // probe hook: GRAFT_SIGS_PATH exercises the persisted minhash-index
-    // path (spark.graft.minhash.sigsPath) for the 100x ingest probes
-    sys.env.get("GRAFT_SIGS_PATH").foreach(p =>
-      spark.conf.set("spark.graft.minhash.sigsPath", p))
-    // probe hook: GRAFT_ADMIT_INDEX_PATH exercises the durable admit
-    // index (spark.graft.stream.admitIndexPath) for the merge-cost probes
-    sys.env.get("GRAFT_ADMIT_INDEX_PATH").foreach(p =>
-      spark.conf.set("spark.graft.stream.admitIndexPath", p))
-    // probe hook: GRAFT_ZONEMAP_PATH exercises the persisted zone-map
-    // manifest (spark.graft.zonemap.manifestPath) for the r14 100x probe
-    sys.env.get("GRAFT_ZONEMAP_PATH").foreach(p =>
-      spark.conf.set("spark.graft.zonemap.manifestPath", p))
-    // probe hook: GRAFT_CHECKPOINT_DIR switches the per-corpus memos to
-    // reliable disk checkpoints (spark.graft.checkpoint.*) — the cluster
-    // deployment mode, and the memory-model knob for the 100x graph
-    // probes: localCheckpoint pins corpus-scale frames in block-manager
-    // storage, which starves execution in a bounded heap
-    sys.env.get("GRAFT_CHECKPOINT_DIR").foreach { p =>
-      spark.conf.set("spark.graft.checkpoint.reliable", "true")
-      spark.conf.set("spark.graft.checkpoint.dir", p)
-    }
-    // probe hooks: persisted graph memos / ANN models (round 15 —
-    // spark.graft.graph.memoPath, spark.graft.ann.modelPath) for the
-    // once-per-corpus 100x probes
-    sys.env.get("GRAFT_GRAPH_MEMO_PATH").foreach(p =>
-      spark.conf.set("spark.graft.graph.memoPath", p))
-    sys.env.get("GRAFT_ANN_MODEL_PATH").foreach(p =>
-      spark.conf.set("spark.graft.ann.modelPath", p))
-    // probe hooks: decode-budget knobs for the r14 multimodal audit-pass
-    // probe (spark.graft.media.*)
-    sys.env.get("GRAFT_MEDIA_FRACTION").foreach(v =>
-      spark.conf.set("spark.graft.media.decodeFraction", v))
-    sys.env.get("GRAFT_MEDIA_STRIDE").foreach(v =>
-      spark.conf.set("spark.graft.media.frameStride", v))
-    // probe hook: arbitrary session confs for isolation experiments,
-    // ';'-separated so list-valued confs keep their commas, e.g.
-    // GRAFT_SQL_CONF="spark.sql.parquet.enableNestedColumnVectorizedReader=false;spark.a=1,2"
+    // session confs for probes and isolation experiments, ';'-separated
+    // so list-valued confs keep their commas, e.g. the persisted stores
+    // (spark.graft.graph.memoPath, spark.graft.zonemap.manifestPath, …):
+    // GRAFT_SQL_CONF="spark.graft.graph.memoPath=/tmp/gm;spark.a=1,2"
     sys.env.get("GRAFT_SQL_CONF").foreach(_.split(";").map(_.trim)
       .filter(_.nonEmpty).foreach { kv =>
         kv.split("=", 2) match {
@@ -61,15 +28,11 @@ object BenchOne {
       })
     // Force with the noop sink, matching graft.Bench (count() lets
     // Catalyst prune measure columns — timings then under-measure).
-    // GRAFT_FORCE=count switches back, ONLY for quantifying exactly that
-    // pruning delta (the r8→r9 measurement-regime attribution).
-    val useCount = sys.env.get("GRAFT_FORCE").contains("count")
     names.foreach { n =>
       val t0 = System.nanoTime()
       val ok = try {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
-        if (useCount) { df.count(); () }
-        else df.write.mode("overwrite").format("noop").save()
+        df.write.mode("overwrite").format("noop").save()
         true
       } catch { case e: Throwable => println(s"TIMING $n FAILED ${e.getMessage}"); false }
       if (ok) println(f"TIMING $n%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")

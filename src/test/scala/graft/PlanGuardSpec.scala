@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Automated twin of the manual `graft.tools.PlanAudit` sweep: no query
+/** Automated twin of the `graft.tools.ExchangeCensus` plan files: no query
   * may plan a CartesianProduct, and BroadcastNestedLoopJoin may appear
   * only where the operator deliberately broadcasts a constant-size
   * subplan (1-row corpus totals, k-row centroid/probe tables, the
@@ -452,8 +452,9 @@ class PlanGuardSpec extends AnyFunSuite {
       // runtime statistics — AQE stage-reuse timing, coalesce-to-one-
       // partition exchange elision, join-strategy re-plans — and was
       // measured floating 4↔6 for the SAME query on the SAME data
-      // purely with host load (tools/FlakeProbe; it broke two full
-      // batteries across r12/r13). The initial physical plan is what
+      // purely with host load (tools/FlakeProbe, in git history at
+      // 4630ac2; the finding is kept in ExchangeCensus's scaladoc; it
+      // broke two full batteries across r12/r13). The initial physical plan is what
       // the CODE shape determines: deterministic under load, and AQE
       // may only remove work from it at runtime, so pinning the static
       // shape still catches every regression this guard exists for.

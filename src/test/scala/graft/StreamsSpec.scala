@@ -1073,11 +1073,9 @@ class StreamsSpec extends AnyFunSuite {
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
         terminated.add(e.runId)
     }
-    // the entries tune the session, and the first events load sets
-    // `nanosAsLong` (Tables.eventsRaw); do both first so the conf
+    // the entries tune the session; do that first so the conf
     // comparison sees only what a drain leaves behind
     Engine.tune(spark)
-    Tables.eventsRaw(spark, sf)
     // runs `body`, then waits for each stream it started to report its
     // termination, so every progress event of those runs has arrived
     def runs(body: => Unit): Set[UUID] = {

@@ -34,11 +34,29 @@ class TablesSpec extends AnyFunSuite {
 
   private def assertParity(dir: String, name: String,
                            load: (SparkSession, String) => DataFrame): Unit = {
-    val mine = load(spark, dir) // eventsRaw sets nanosAsLong before reading
-    val ref = spark.read.parquet(s"$dir/$name.parquet")
+    val mine = load(spark, dir)
+    // eventsRaw reads as inference does with nanosAsLong on, without
+    // setting it, so the reference read sets it
+    def infer = spark.read.parquet(s"$dir/$name.parquet")
+    val ref = if (name == "events") withConf(NanosAsLong, "true")(infer) else infer
     assert(mine.schema === ref.schema, s"$dir: $name schema")
     assert(mine.queryExecution.optimizedPlan
       .sameResult(ref.queryExecution.optimizedPlan), s"$dir: $name plan")
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Writes `events.parquet` under `dir` with a real TIMESTAMP(NANOS) `ts`
+    * column holding `us` (in µs), which Spark itself cannot write. */
+  private def writeNanosEvents(dir: String, us: Seq[Long]): Unit = {
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 event_id; optional int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try us.zipWithIndex.foreach { case (u, i) =>
+      w.write(rows.newGroup().append("event_id", i.toLong).append("ts", u * 1000L))
+    } finally w.close()
   }
 
   private def withConf[T](key: String, value: String)(body: => T): T = {
@@ -81,27 +99,32 @@ class TablesSpec extends AnyFunSuite {
     // a real TIMESTAMP(NANOS) column, which Spark cannot write: the footer
     // path must honor nanosAsLong exactly as inference does
     val dir = TempDirs.create("graft_tables_nanos").toString
-    val schema = MessageTypeParser.parseMessageType(
-      "message m { required int64 event_id; optional int64 ts (TIMESTAMP(NANOS,true)); }")
-    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
-      .withType(schema).build()
-    val rows = new SimpleGroupFactory(schema)
-    try us.zipWithIndex.foreach { case (u, i) =>
-      w.write(rows.newGroup().append("event_id", i.toLong).append("ts", u * 1000L))
-    } finally w.close()
+    writeNanosEvents(dir, us)
     assertParity(dir, "events", Tables.eventsRaw _)
     assert(Tables.eventsRaw(spark, dir).schema("ts").dataType === LongType)
     assert(Tables.events(spark, dir).select(unix_micros($"ts")).as[Long]
       .collect().sorted.toSeq === us)
     // with nanosAsLong off, the footer path gives what inference gives or
     // defers to it (and so fails as it does)
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "false") {
+    withConf(NanosAsLong, "false") {
       val ref = outcome(spark.read.parquet(s"$dir/events.parquet"))
       Tables.footerSchema(spark, s"$dir/events.parquet") match {
         case Some(schema) => assert(Right(schema) === ref)
         case None         => assert(ref.isLeft)
       }
     }
+  }
+
+  test("loading events leaves the session conf unchanged, TIMESTAMP(NANOS) included") {
+    val us = Seq(1700000000000000L, 1700000123456000L)
+    val dir = TempDirs.create("graft_tables_conf").toString
+    writeNanosEvents(dir, us)
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    assert(Tables.events(s, sf).count() > 0)
+    assert(Tables.events(s, dir).select(unix_micros(col("ts")))
+      .collect().map(_.getLong(0)).sorted.toSeq === us)
+    assert(s.conf.getAll === before)
   }
 
   test("layouts whose schema is not one file's footer defer to inference") {
