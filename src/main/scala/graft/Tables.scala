@@ -189,7 +189,8 @@ object Tables {
   *    (pairs/degrees/oriented/adj) per corpus fingerprint, plus — each
   *    in its own lazily-built store — the component label table
   *    (`<path>/components`) and PageRank's degree-attached edge list
-  *    (`<path>/predges`); later sessions adopt instead of rebuilding
+  *    (`<path>/predges`); later sessions adopt instead of rebuilding.
+  *    Each store is a [[graft.util.CorpusMemo.Store]]
   *    ([[graft.operators.Graph]]).
   *  - `spark.graft.graph.joinPartitions` — explicit width for the graph
   *    kernels' giant array-SMJ joins and credit aggregation; when unset
@@ -206,8 +207,9 @@ object Tables {
   *    gate must sample it after each corpus's build (the stderr/logger
   *    warning still fires per build either way).
   *  - `spark.graft.ann.modelPath` — persist the trained k-means
-  *    centroids + PQ codebooks per corpus fingerprint; assignments
-  *    recompute map-side from the k-row model
+  *    centroids + PQ codebooks per corpus fingerprint, one
+  *    [[graft.util.CorpusMemo.Store]] per family (`<path>/kmeans`,
+  *    `<path>/pq`); assignments recompute map-side from the k-row model
   *    ([[graft.operators.Clustering]]).
   *  - `spark.sql.autoBroadcastJoinThreshold` — set here to 64 MB, the
   *    single un-hinted broadcast policy; match to executor memory on a
@@ -236,20 +238,16 @@ object Engine {
 
   def tune(spark: SparkSession): SparkSession = {
     sizeCodegenCache(spark)
-    // expose the custom codegen expressions to the SQL surface (once per
-    // session — re-registration is a no-op guarded by a session conf flag)
-    if (!spark.conf.getOption("graft.registered").contains("true")) {
-      GraftFunctions.builders.foreach { case (name, builder) =>
-        org.apache.spark.sql.GraftShims.registerFunction(spark, name, builder)
-      }
-      // programmatic twin of GraftExtensions' injectOptimizerRule: the
-      // extraOptimizations hook accepts rules after session build
-      if (!spark.experimental.extraOptimizations
-            .contains(graft.plans.LevenshteinLengthGuard)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.LevenshteinLengthGuard
-      }
-      spark.conf.set("graft.registered", "true")
+    // expose the custom codegen expressions to the SQL surface: the
+    // session's function registry says which are already there
+    org.apache.spark.sql.GraftShims
+      .registerMissingFunctions(spark, GraftFunctions.builders)
+    // programmatic twin of GraftExtensions' injectOptimizerRule: the
+    // extraOptimizations hook accepts rules after session build
+    if (!spark.experimental.extraOptimizations
+          .contains(graft.plans.LevenshteinLengthGuard)) {
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.plans.LevenshteinLengthGuard
     }
     val c = spark.conf
     // InferFiltersFromGenerate excluded (round 18, guide §4.4): the rule

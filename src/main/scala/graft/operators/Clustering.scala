@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,13 +94,14 @@ object Clustering {
   /** PERSISTED ANN MODELS (round 15, VERDICT r14 #5): with
     * `spark.graft.ann.modelPath` set, each trained model table — the
     * k-row k-means centroids, the M·K-row PQ codebooks — is built once
-    * per corpus fingerprint and published generationally
-    * ([[graft.util.GenStore]]), the same once-per-corpus trajectory as
-    * the graph memos and zone-map manifests: a multi-session deployment
-    * pays the iterative Lloyd training once per CORPUS, and every later
-    * session's model resolve is a k-row parquet read. The two families
-    * live in SEPARATE stores (`<modelPath>/kmeans`, `<modelPath>/pq`),
-    * each trained lazily by its first consumer — a deployment running
+    * per corpus fingerprint, the same once-per-corpus trajectory as
+    * the graph memos: a multi-session deployment pays the iterative
+    * Lloyd training once per CORPUS, and every later session's model
+    * resolve is a k-row parquet read. Each family is one
+    * [[graft.util.CorpusMemo.Store]] ([[kmStore]] at `<modelPath>/kmeans`,
+    * [[pqStore]] at `<modelPath>/pq`), which persists the table or, with
+    * the path unset, checkpoints it in the session; each is trained
+    * lazily by its first consumer — a deployment running
     * only k-means queries never pays the PQ Lloyd loop, and vice versa
     * (round-15 review). Deliberately NOT persisted: the
     * assignments/encodings — they are corpus-sized (a copy of the
@@ -114,20 +114,6 @@ object Clustering {
     * row count + per-row-group footer min/max of
     * (vec_id, embedding.list.element) — the exact inputs the models
     * derive from. Default-off: declared hashes untouched. */
-  private def persistedGen(s: SparkSession, dir: String, family: String,
-                           table: String, cache: CorpusMemo[Path],
-                           train: (SparkSession, String) => DataFrame)
-      : Option[Path] =
-    s.conf.getOption("spark.graft.ann.modelPath").map { p =>
-      cache(s, dir) {
-        graft.util.GenStore.resolveOrBuild(s, new Path(p, family).toString,
-          fingerprint(s, dir), Seq(table)) { tmp =>
-          train(s, dir).write.mode("overwrite")
-            .parquet(new Path(tmp, table).toString)
-        }
-      }
-    }
-
   private def fingerprint(s: SparkSession, dir: String): String =
     fpCache(s, dir) {
       val (n, digest) = graft.util.FooterStats.digest(s,
@@ -137,33 +123,31 @@ object Clustering {
     }
 
   private val fpCache = CorpusMemo[String]()
-  private val kmGenCache = CorpusMemo[Path]()
-  private val pqGenCache = CorpusMemo[Path]()
+
+  private val ModelPath = "spark.graft.ann.modelPath"
 
   /** Iters Lloyd rounds from the deterministic seed (vectors 0..k−1) —
-    * the training loop alone; [[model]] derives the final assignment. */
-  private def trainCentroids(s: SparkSession, dir: String): DataFrame = {
-    val vecs = qVecsStable(s, dir)
-    var cents = vecs.filter(col("vec_id") < K)
-      .select(col("vec_id").as("cid"), col("qv").as("cv"))
-      .stable
-    for (_ <- 1 to Iters)
-      cents = recenter(assign(vecs, cents)).stable
-    cents
-  }
+    * the training loop alone; [[model]] derives the final assignment.
+    * The last round is left unmaterialized: [[kmStore]] checkpoints or
+    * persists it. */
+  private val kmStore = CorpusMemo.Store(ModelPath, Some("kmeans"), fingerprint)(
+    ("kmeans_centroids", { (s, dir, _) =>
+      val vecs = qVecsStable(s, dir)
+      val seed = vecs.filter(col("vec_id") < K)
+        .select(col("vec_id").as("cid"), col("qv").as("cv"))
+      val cents = (1 until Iters).foldLeft(seed.stable)((c, _) =>
+        recenter(assign(vecs, c)).stable)
+      recenter(assign(vecs, cents))
+    }))
 
   /** Return (final centroids, final assignment): centroids from the
     * persisted model when `spark.graft.ann.modelPath` is set, trained
     * in-session otherwise; the assignment is always the deterministic
     * one-pass broadcast scoring of the corpus against those centroids
-    * (identical either way — see [[persistedGen]]). */
+    * (identical either way — see the persisted-model block above). */
   private def model(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     modelCache(s, dir) {
-      val cents = persistedGen(s, dir, "kmeans", "kmeans_centroids",
-        kmGenCache, trainCentroids) match {
-        case Some(g) => s.read.parquet(new Path(g, "kmeans_centroids").toString)
-        case None => trainCentroids(s, dir)
-      }
+      val cents = kmStore(s, dir, "kmeans_centroids")
       (cents, assign(qVecsStable(s, dir), cents).stable)
     }
 
@@ -358,29 +342,27 @@ object Clustering {
     subVecsCache(s, dir)(subVecs(s, dir).stable)
 
   /** The PQ Lloyd loop alone — all [[PqM]] codebooks trained
-    * simultaneously; [[pqModel]] derives the final encoding. */
-  private def trainPqCodebooks(s: SparkSession, dir: String): DataFrame = {
-    val sub = subVecsStable(s, dir)
-    var cents = sub.filter(col("vec_id") < K)
-      .select(col("m"), col("vec_id").as("cid"), col("qsub").as("cv"))
-      .stable
-    for (_ <- 1 to Iters)
-      cents = pqRecenter(pqAssign(sub, cents)).stable
-    cents
-  }
+    * simultaneously; [[pqModel]] derives the final encoding. The last
+    * round is left unmaterialized: [[pqStore]] checkpoints or persists
+    * it. */
+  private val pqStore = CorpusMemo.Store(ModelPath, Some("pq"), fingerprint)(
+    ("pq_codebooks", { (s, dir, _) =>
+      val sub = subVecsStable(s, dir)
+      val seed = sub.filter(col("vec_id") < K)
+        .select(col("m"), col("vec_id").as("cid"), col("qsub").as("cv"))
+      val cents = (1 until Iters).foldLeft(seed.stable)((c, _) =>
+        pqRecenter(pqAssign(sub, c)).stable)
+      pqRecenter(pqAssign(sub, cents))
+    }))
 
   /** Return (codebooks (m, cid, cv), final per-subvector assignment
     * (vec_id, m, qsub, cid, dist)): codebooks from the persisted model
-    * when `spark.graft.ann.modelPath` is set ([[persistedGen]]),
-    * trained in-session otherwise; the encoding is always the
-    * deterministic one-pass broadcast scoring against those codebooks. */
+    * when `spark.graft.ann.modelPath` is set, trained in-session
+    * otherwise; the encoding is always the deterministic one-pass
+    * broadcast scoring against those codebooks. */
   private def pqModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     pqCache(s, dir) {
-      val cents = persistedGen(s, dir, "pq", "pq_codebooks",
-        pqGenCache, trainPqCodebooks) match {
-        case Some(g) => s.read.parquet(new Path(g, "pq_codebooks").toString)
-        case None => trainPqCodebooks(s, dir)
-      }
+      val cents = pqStore(s, dir, "pq_codebooks")
       (cents, pqAssign(subVecsStable(s, dir), cents).stable)
     }
 

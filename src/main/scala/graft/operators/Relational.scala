@@ -971,21 +971,10 @@ object Relational {
     * on both engines; at scale the engine would `orderBy(zkey)` before the
     * partitioned write, here the key itself plus the top rows of that
     * clustered order are surfaced and hash-checked. */
-  def zorderKey(s: SparkSession, dir: String): DataFrame = {
-    // spread every other bit: x16 -> 32-bit with zeros interleaved
-    def spread(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      (0 until 16).map(i => shiftleft(shiftright(c, i).bitwiseAND(1), 2 * i))
-        .reduce(_ + _)
-    Tables.orders(s, dir)
-      .select(col("o_orderkey"),
-        pmod(col("o_custkey"), lit(65536L)).as("cx"),
-        pmod(expr("datediff(to_date(o_orderdate), '1990-01-01')").cast("long"),
-          lit(65536L)).as("dy"))
-      .select(col("o_orderkey"), col("cx"), col("dy"),
-        (spread(col("cx")) + spread(col("dy")) * 2).as("zkey"))
+  def zorderKey(s: SparkSession, dir: String): DataFrame =
+    ZoneMaps.zkeyed(s, dir)
       .orderBy(col("zkey"), col("o_orderkey"))
       .limit(100)
-  }
 
   /** Zone-map data skipping — the scan-reduction mechanism behind every
     * lakehouse table format: a block-level min/max manifest (in

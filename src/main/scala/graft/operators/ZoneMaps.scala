@@ -90,20 +90,29 @@ object ZoneMaps {
     s2
   }
 
-  /** The zone columns + block ids of both layouts — the SINGLE
-    * definition `Relational.zoneMap`'s in-memory model and the
-    * persisted layout build share, so the two paths cannot drift. */
-  private[graft] def cells(s: SparkSession, dir: String): DataFrame = {
+  /** Orders' `o_orderkey` with the two zone columns — `cx` (custkey)
+    * and `dy` (order day), each mod 2^16 — and their Z-order (Morton)
+    * key `zkey`, the bit interleave of the two. The SINGLE Z-order
+    * derivation: [[cells]] and `Relational.zorderKey` both read it. */
+  private[graft] def zkeyed(s: SparkSession, dir: String): DataFrame = {
+    // spread every other bit: x16 -> 32-bit with zeros interleaved
     def spread(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       (0 until 16).map(i => shiftleft(shiftright(c, i).bitwiseAND(1), 2 * i))
         .reduce(_ + _)
-    val bw = blockRows(s)
     Tables.orders(s, dir)
       .select(col("o_orderkey"),
         pmod(col("o_custkey"), lit(65536L)).as("cx"),
         pmod(expr("datediff(to_date(o_orderdate), '1990-01-01')").cast("long"),
           lit(65536L)).as("dy"))
       .withColumn("zkey", spread(col("cx")) + spread(col("dy")) * 2)
+  }
+
+  /** The zone columns + block ids of both layouts — the SINGLE
+    * definition `Relational.zoneMap`'s in-memory model and the
+    * persisted layout build share, so the two paths cannot drift. */
+  private[graft] def cells(s: SparkSession, dir: String): DataFrame = {
+    val bw = blockRows(s)
+    zkeyed(s, dir)
       .select(col("cx"), col("dy"), explode(array(
         struct(lit("natural").as("layout"),
           expr(s"o_orderkey div $bw").as("blk")),

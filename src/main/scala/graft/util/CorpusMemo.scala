@@ -4,7 +4,8 @@ import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentH
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A per-(session, corpus) memo: the once-per-corpus investments (dedup
   * pair/signature/cluster tables, graph adjacency, k-means/PQ/BPE models,
@@ -90,4 +91,75 @@ object CorpusMemo {
 
   /** Completed entries across all memos (diagnostics/tests). */
   def liveEntries: Int = registered.asScala.map(_.completed).sum
+
+  /** One table's formula: (session, corpus dir, lookup) => frame, where
+    * the lookup returns the tables declared before it. */
+  type Formula = (SparkSession, String, String => DataFrame) => DataFrame
+
+  /** A set of once-per-corpus tables that persist to a [[GenStore]]
+    * generation when the opt-in conf `key` is set, and live in the
+    * session otherwise. Declare one with its tables in build order,
+    * {{{
+    *   private val store = CorpusMemo.Store(key, Some("sub"), fp)(
+    *     ("a", (s, dir, _) => …), ("b", (_, _, t) => f(t("a"))))
+    * }}}
+    * and read a table with `store(s, dir, "b")`, memoized per
+    * (session, corpus, table).
+    *  - key unset: each table is `Checkpoints.stable` of its formula,
+    *    whose lookup reads the earlier tables through the same memos;
+    *  - key set: [[gen]] resolves the committed generation at
+    *    `<key value>[/<sub>]` for fingerprint `fp(s, dir)`, or builds
+    *    one, writing the tables in declared order with each formula's
+    *    lookup reading the earlier ones back from the temp generation
+    *    (peak lineage one stage deep); tables read that generation's
+    *    parquet.
+    *
+    * Every memo inside is a registered [[CorpusMemo]], so [[invalidate]]
+    * drops the store's entries. Stores that stay off this handle: the
+    * minhash sigsPath index (`Pipeline.minhashSigs`), which serves
+    * archived corpora that cannot be fingerprinted; the zone-map
+    * manifests (`ZoneMaps.resolveOrBuild`), which re-resolve on every
+    * call because `blockRows` can change within a session; and the
+    * in-session-only `memo(s, dir)(x.stable)` sites, where a store would
+    * hide nothing. */
+  final class Store private (key: String, sub: Option[String],
+                             fp: (SparkSession, String) => String,
+                             tables: Seq[(String, Formula)]) {
+    private val gens = CorpusMemo[Path]()
+    private val frames =
+      tables.map { case (t, f) => t -> (CorpusMemo[DataFrame](), f) }.toMap
+
+    /** The committed generation serving this corpus, built on first
+      * use; None while `key` is unset. */
+    def gen(s: SparkSession, dir: String): Option[Path] =
+      s.conf.getOption(key).map { p =>
+        gens(s, dir) {
+          GenStore.resolveOrBuild(s, sub.fold(p)(new Path(p, _).toString),
+            fp(s, dir), tables.map(_._1)) { tmp =>
+            def read(t: String) = s.read.parquet(new Path(tmp, t).toString)
+            tables.foreach { case (t, f) =>
+              f(s, dir, read).write.mode("overwrite")
+                .parquet(new Path(tmp, t).toString)
+            }
+          }
+        }
+      }
+
+    def apply(s: SparkSession, dir: String, table: String): DataFrame = {
+      val (memo, formula) = frames(table)
+      memo(s, dir) {
+        gen(s, dir) match {
+          case Some(g) => s.read.parquet(new Path(g, table).toString)
+          case None => Checkpoints.stable(formula(s, dir, apply(s, dir, _)))
+        }
+      }
+    }
+  }
+
+  object Store {
+    def apply(key: String, sub: Option[String],
+              fp: (SparkSession, String) => String)
+             (tables: (String, Formula)*): Store =
+      new Store(key, sub, fp, tables)
+  }
 }

@@ -4,12 +4,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Generational resolve-or-build protocol for persisted per-corpus
-  * investments — ONE implementation of the publish discipline, shared
-  * by the MinHash signature index (`spark.graft.minhash.sigsPath`), the
-  * zone-map manifests, the graph memo tables
-  * (`spark.graft.graph.memoPath`) and the ANN model tables
-  * (`spark.graft.ann.modelPath`), so a protocol fix lands everywhere
-  * (the MetaFiles lesson: two copies had diverged by round 12). The
+  * investments — ONE implementation of the publish discipline, so a
+  * protocol fix lands everywhere (the MetaFiles lesson: two copies had
+  * diverged by round 12). Three callers:
+  *  - [[CorpusMemo.Store]], the store handle behind the graph memo
+  *    tables (`spark.graft.graph.memoPath`: the basket graph, the
+  *    component labels, PageRank's edges) and the ANN model tables
+  *    (`spark.graft.ann.modelPath`: k-means centroids, PQ codebooks);
+  *  - the MinHash signature index (`spark.graft.minhash.sigsPath`);
+  *  - the zone-map manifests (`spark.graft.zonemap.manifestPath`).
+  *
+  * The
   * sigsPath index also serves an ARCHIVED corpus, one that can no longer
   * be fingerprinted, through [[resolve]] with a provenance predicate.
   *

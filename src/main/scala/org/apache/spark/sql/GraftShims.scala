@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to the `private[sql]` Column ↔ Expression converters, needed to
@@ -13,12 +14,17 @@ object GraftShims {
     * the spark package need this alias to declare `inputTypes`. */
   type AbsDataType = org.apache.spark.sql.types.AbstractDataType
 
-  /** Register a custom expression as a SQL-callable temp function
+  /** Register each custom expression the session's function registry
+    * does not already hold as a SQL-callable temp function
     * (sessionState is private[sql]). */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+  def registerMissingFunctions(spark: SparkSession,
+      builders: Seq[(String, Seq[Expression] => Expression)]): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+  }
 
   /** Create Spark's JVM-wide cache of compiled generated classes (the
     * Janino LRU in `CodeGenerator`) with capacity `entries(explicit)`,

@@ -35,6 +35,24 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("Engine.tune registers every builder on a fresh session and writes no marker into its conf") {
+    val s = SparkTestSession.spark.newSession()
+    val names = GraftFunctions.builders.map(_._1)
+    assert(names.size === 11)
+    assert(names.forall(n => !s.catalog.functionExists(n)),
+      "a fresh session starts without the engine's functions")
+    Engine.tune(s)
+    Engine.tune(s)
+    assert(names.filterNot(s.catalog.functionExists) === Nil)
+    val row = s.sql(
+      """SELECT poly_hash('abc') AS h,
+        |       sorted_intersect_count(array(1L, 2L, 5L), array(2L, 5L, 7L)) AS n""".stripMargin).head()
+    assert(row.getLong(0) === "abc".foldLeft(0L)((h, c) => (h * 31 + c) % 1000000007L))
+    assert(row.get(1).toString.toLong === 2L)
+    assert(!s.conf.getAll.contains("graft.registered"),
+      "the function registry, not a conf flag, says what is registered")
+  }
+
   test("levenshtein length-gap guard fires, preserves results, stays idempotent") {
     import org.apache.spark.sql.functions._
     val spark = SparkTestSession.spark
