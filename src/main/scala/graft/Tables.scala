@@ -213,7 +213,17 @@ object Tables {
   *    ([[graft.operators.Clustering]]).
   *  - `spark.sql.autoBroadcastJoinThreshold` — set here to 64 MB, the
   *    single un-hinted broadcast policy; match to executor memory on a
-  *    real cluster. */
+  *    real cluster.
+  *  - `fs.AbstractFileSystem.file.impl` — set here to
+  *    [[graft.util.LocalFs]], which every Hadoop conf the session makes
+  *    copies, so the `file:` FileContext behind every streaming
+  *    checkpoint runs no shell commands: without libhadoop, Hadoop's own
+  *    local filesystem forks a `chmod` or `readlink` process for nearly
+  *    every checkpoint file (1 610 in one `perfbench` streaming run of a
+  *    warm-up and a timed pass). Checksum sidecars and
+  *    rename-with-overwrite are unchanged. A value already in the
+  *    session conf, or a non-default one in the SparkContext's Hadoop
+  *    conf, wins. */
 object Engine {
   /** Generated-class cache capacity: one pass over the whole declared
     * surface uses about 3 350 classes (sf0.001 to sf0.1), 405 of them
@@ -283,6 +293,11 @@ object Engine {
     // any corpus scale. On a real cluster this is the knob to match to
     // executor memory.
     c.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+    // the fork-free `file:` FileContext (see the class comment)
+    import graft.util.LocalFs.{HadoopDefault, ImplKey}
+    if (c.getOption(ImplKey).isEmpty &&
+        Option(spark.sparkContext.hadoopConfiguration.get(ImplKey)).forall(_ == HadoopDefault))
+      c.set(ImplKey, classOf[graft.util.LocalFs].getName)
     spark
   }
 }

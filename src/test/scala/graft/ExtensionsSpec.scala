@@ -53,6 +53,30 @@ class ExtensionsSpec extends AnyFunSuite {
       "the function registry, not a conf flag, says what is registered")
   }
 
+  test("Engine.tune routes file: FileContext through graft's LocalFs unless a value is already set") {
+    import graft.util.LocalFs
+    val base = SparkTestSession.spark
+    val fresh = base.newSession()
+    assert(!fresh.conf.getAll.contains(LocalFs.ImplKey))
+    Engine.tune(fresh)
+    assert(fresh.conf.get(LocalFs.ImplKey) === classOf[LocalFs].getName)
+    val conf = fresh.conf.getAll
+    Engine.tune(fresh)
+    assert(fresh.conf.getAll === conf, "a second tune changes nothing")
+    // the deployment wins: a value already in the session conf is kept ...
+    val pinned = base.newSession()
+    pinned.conf.set(LocalFs.ImplKey, LocalFs.HadoopDefault)
+    Engine.tune(pinned)
+    assert(pinned.conf.get(LocalFs.ImplKey) === LocalFs.HadoopDefault)
+    // ... and so is a non-default one in the SparkContext's Hadoop conf
+    val hadoop = base.sparkContext.hadoopConfiguration
+    val prev = hadoop.get(LocalFs.ImplKey)
+    assert(prev === LocalFs.HadoopDefault)
+    hadoop.set(LocalFs.ImplKey, "example.DeploymentFs")
+    try assert(!Engine.tune(base.newSession()).conf.getAll.contains(LocalFs.ImplKey))
+    finally hadoop.set(LocalFs.ImplKey, prev)
+  }
+
   test("levenshtein length-gap guard fires, preserves results, stays idempotent") {
     import org.apache.spark.sql.functions._
     val spark = SparkTestSession.spark

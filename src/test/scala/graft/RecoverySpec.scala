@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -119,5 +120,57 @@ class RecoverySpec extends AnyFunSuite {
       assert(boundary.values.sum === firstHalf.count() + secondHalf.count(),
         "the restart-spanning window aggregated rows from both runs")
     }
+  }
+
+  test("a windowed checkpoint resumes across Hadoop's LocalFs and graft's, both ways") {
+    import graft.util.LocalFs
+    // an untuned session opens its checkpoint FileContext on Hadoop's
+    // LocalFs, a tuned one on graft's
+    val stock = spark.newSession()
+    val tuned = Engine.tune(spark.newSession())
+    assert(!stock.conf.getAll.contains(LocalFs.ImplKey))
+    assert(tuned.conf.get(LocalFs.ImplKey) === classOf[LocalFs].getName)
+    val ev = Tables.events(spark, sf).select(col("ts"), col("event_type"))
+    val cut = lit("2024-01-15 12:30:00").cast("timestamp")
+    // the windowed restart above, its first run on `first` and its
+    // second on `second`
+    def restart(first: SparkSession, second: SparkSession): Map[(String, String), Long] = {
+      val root = tempRoot()
+      val (src, sink, ckpt) = (s"$root/src", s"$root/sink", s"$root/ckpt")
+      def runOnce(s: SparkSession): Unit = {
+        val agg = s.readStream.schema(ev.schema).parquet(src)
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss")
+            .as("hour"), col("event_type"), col("n"))
+        val q = agg.writeStream.format("parquet")
+          .option("path", sink).option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally q.stop()
+      }
+      ev.filter(col("ts") < cut).write.mode("append").parquet(src)
+      runOnce(first)
+      ev.filter(col("ts") >= cut).write.mode("append").parquet(src)
+      runOnce(second)
+      assert(new java.io.File(s"$ckpt/state/0/0/.1.delta.crc").isFile,
+        "state commits carry Hadoop's .crc sidecars")
+      val got = spark.read.parquet(sink)
+        .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
+      assert(got.map(_._1).distinct.length === got.length,
+        "each closed window emitted exactly once across both runs")
+      got.toMap
+    }
+    val mx = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
+    val want = ev
+      .groupBy(date_format(date_trunc("hour", col("ts")),
+        "yyyy-MM-dd HH:mm:ss").as("hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .filter(to_timestamp(col("hour"), "yyyy-MM-dd HH:mm:ss")
+        + expr("INTERVAL 1 HOUR") <= lit(mx) - expr("INTERVAL 1 HOUR"))
+      .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
+    assert(want.nonEmpty)
+    assert(restart(stock, tuned) === want)
+    assert(restart(tuned, stock) === want)
   }
 }
