@@ -226,9 +226,10 @@ object Tables {
   *    conf, wins. */
 object Engine {
   /** Generated-class cache capacity: one pass over the whole declared
-    * surface uses about 3 350 classes (sf0.001 to sf0.1), 405 of them
-    * recompiled on every pass (ROADMAP), so the LRU never evicts a class
-    * still in use. A cached class holds about 30 KB of heap. */
+    * surface uses about 3 350 classes (sf0.001 to sf0.1), 89–109 of
+    * them (all batch, none streaming) recompiled on every pass (ROADMAP),
+    * so the LRU never evicts a class still in use. A cached class holds
+    * about 30 KB of heap. */
   val CodegenCacheEntries = 4096
 
   /** The capacity to create the generated-class cache with: the

@@ -96,6 +96,17 @@ object Streams {
     *     emit fewer rows, not fail.
     *   - the RocksDB state-store provider when `rocksDb` is set
     *     (`transformWithState` requires it).
+    *   - `spark.sql.artifact.isolation.enabled = false`, unless the
+    *     caller's conf sets the key itself (then its value wins). With
+    *     isolation on, each run's clone has its own session UUID, and the
+    *     executor gives every UUID a fresh task class loader; Spark's
+    *     generated-class cache is keyed on that loader, so every run
+    *     recompiled all of its generated code (57 classes per `perfbench`
+    *     streaming pass). Off, the stream's tasks run on the executor's
+    *     default loader and compile once per JVM. graft adds no artifacts
+    *     (jars, files, classes) to a session, so the isolated loader held
+    *     nothing the default one lacks. The caller's own isolation stays
+    *     as its conf says.
     *
     * The keys are set on the caller's session only while `start()` runs,
     * then restored: the stream's execution clones the session when it is
@@ -126,7 +137,7 @@ object Streams {
       case Complete(write) => w.outputMode("complete")
         .foreachBatch { (batch: Dataset[Row], _: Long) => write(batch) }
     }
-    val confs = Seq("spark.sql.shuffle.partitions" -> lanes.toString,
+    val policy = Seq("spark.sql.shuffle.partitions" -> lanes.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) ++
       Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -134,7 +145,12 @@ object Streams {
     // restore would then pin it; getAll holds only the keys really set
     val conf = out.sparkSession.conf
     val set = conf.getAll
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val confs = policy ++ Option.when(!set.contains(isolation))(isolation -> "false")
     val prev = confs.map { case (k, _) => k -> set.get(k) }
+    // a session fixes its own isolation at its first job: fix the
+    // caller's now, under its own conf, not inside the window below
+    org.apache.spark.sql.GraftShims.isolatedJobs(out.sparkSession)
     val q = try {
       confs.foreach { case (k, v) => conf.set(k, v) }
       writer.start()

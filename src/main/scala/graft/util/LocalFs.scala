@@ -5,7 +5,7 @@ import java.net.URI
 import java.nio.file.{Files, NoSuchFileException}
 import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsConstants, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -16,10 +16,16 @@ import org.apache.hadoop.fs.permission.FsPermission
   * reads, and Spark's streaming checkpoints (offsets, commits, source
   * logs, state deltas, checksum sidecars) do both for every file they
   * write. Still a `ChecksumFs`, so `.crc` sidecars are written, and
-  * checked on the reads that checked them before. [[graft.Engine.tune]]
+  * checked on every read: `ChecksumFs` verifies only `open(path,
+  * bufferSize)`, and `FilterFs` hands the one-argument `open(path)` that
+  * Spark's checkpoint file manager calls straight to the raw filesystem,
+  * so here that call goes through the checked one. [[graft.Engine.tune]]
   * routes the session's FileContext here through [[LocalFs.ImplKey]]. */
 final class LocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new RawLocalFs(conf))
+    extends ChecksumFs(new RawLocalFs(conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object LocalFs {
   /** The Hadoop key that names the `file` scheme's FileContext class. */

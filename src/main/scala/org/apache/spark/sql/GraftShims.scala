@@ -46,6 +46,13 @@ object GraftShims {
     SQLConf.withExistingConf(sized)(CodeGenerator.compileTime)
   }
 
+  /** Whether `spark`'s jobs run on their own executor class loader
+    * (`spark.sql.artifact.isolation.enabled`). Spark reads the key once
+    * per session, at this call or the session's first job, whichever
+    * comes first, and keeps the answer for the session's lifetime. */
+  def isolatedJobs(spark: SparkSession): Boolean =
+    spark.asInstanceOf[classic.SparkSession].artifactManager.state != null
+
   /** Presentation-sort elision at the declared-query seam (optimization
     * round 17, guide §2.4 "an orderBy used only to make output
     * deterministic").

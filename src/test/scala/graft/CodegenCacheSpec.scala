@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * declared query surface ([[Engine.sizeCodegenCache]]): a query list
   * that ran once does not recompile its code on the next run, the
   * session conf is never written to do so, and a capacity the deployment
-  * set explicitly wins. */
+  * set explicitly wins. A stream drained again compiles nothing either:
+  * [[graft.streaming.Streams]] starts it without a per-run class loader. */
 class CodegenCacheSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.Sf
@@ -33,6 +34,19 @@ class CodegenCacheSpec extends AnyFunSuite {
     val first = compiles(runStarJoin())
     val second = compiles(runStarJoin())
     assert(second === 0, s"recompiled $second classes (first run compiled $first)")
+  }
+
+  test("a second drain of every declared stream compiles no generated class") {
+    // streams plan without AQE, so their generated code does not vary
+    // with stage order between runs
+    val streams = SparkEntry.queries.keys.filter(_.startsWith("q_stream_")).toSeq.sorted
+    assert(streams.size === 21)
+    def drainAll(): Seq[Long] = streams.map { q =>
+      compiles(SparkEntry.queries(q)(spark, sf).write.mode("overwrite").format("noop").save())
+    }
+    val first = drainAll()
+    val second = streams.zip(drainAll()).filter(_._2 > 0)
+    assert(second.isEmpty, s"recompiled $second (first run compiled ${first.sum})")
   }
 
   test("tune on a tuned session leaves the session conf as it was") {

@@ -89,6 +89,22 @@ class LocalFsSpec extends AnyFunSuite {
     assert(perms("b") === "604" && perms("moved") === "600" && perms("sticky") === "1777")
   }
 
+  test("LocalFs checks the sidecar on a one-argument open too") {
+    withTempDir { root =>
+      val fc = fileContext(classOf[LocalFs].getName)
+      val p = new Path(root.toURI.toString, "f")
+      val out = fc.create(p, EnumSet.of(CreateFlag.CREATE))
+      try out.write(("alpha " * 200).getBytes("UTF-8")) finally out.close()
+      val raf = new RandomAccessFile(new File(root, "f"), "rw")
+      try { raf.seek(7); val x = raf.read(); raf.seek(7); raf.write(x ^ 0xff) } finally raf.close()
+      // the call Spark's checkpoint file manager makes
+      intercept[ChecksumException] {
+        val in = fc.open(p)
+        try IOUtils.readFully(in, new Array[Byte](1200), 0, 1200) finally in.close()
+      }
+    }
+  }
+
   test("streaming checkpoints start no readlink or chmod process") {
     val spark = Engine.tune(SparkTestSession.spark)
     assert(spark.conf.get(LocalFs.ImplKey) === classOf[LocalFs].getName)

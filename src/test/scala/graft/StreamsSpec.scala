@@ -1056,6 +1056,30 @@ class StreamsSpec extends AnyFunSuite {
     assert(stream.nonEmpty)
   }
 
+  test("an explicit artifact-isolation value wins over the drain's default") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val key = "spark.sql.artifact.isolation.enabled"
+    val s = spark.newSession()
+    s.conf.set(key, "true")
+    def compiles(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      SparkEntry.queries("q_stream_window")(s, sf).write.mode("overwrite").format("noop").save()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val first = compiles()
+    val second = compiles()
+    // isolated, each run's tasks get a new class loader and recompile
+    assert(second > 0, s"the second run compiled nothing (first compiled $first)")
+    assert(s.conf.get(key) === "true")
+  }
+
+  test("a drain as a fresh session's first job leaves that session's own isolation on") {
+    val s = spark.newSession()
+    SparkEntry.queries("q_stream_window")(s, sf).write.mode("overwrite").format("noop").save()
+    // Spark's default; only the stream's own clone runs without it
+    assert(org.apache.spark.sql.GraftShims.isolatedJobs(s))
+  }
+
   test("every declared stream drains on its state lanes and leaves the session conf unchanged") {
     import java.util.UUID
     import java.util.concurrent.ConcurrentLinkedQueue
