@@ -15,13 +15,18 @@ object Fns {
 
   /** Tokenizer of the reference word-count app
     * (`/root/reference/src/mrapps/wc.go:21-34`): split on any non-letter,
-    * case-sensitive, empties dropped. Fixture corpus is ASCII so the
-    * `[a-zA-Z]` class is exactly `unicode.IsLetter` here, and Java regex /
-    * DuckDB RE2 agree on it. Returns array<string> including possible empty
-    * first element — callers filter `w <> ''` after explode. */
+    * case-sensitive. Fixture corpus is ASCII so the `[a-zA-Z]` class is
+    * exactly `unicode.IsLetter` here, and Java regex / DuckDB RE2 agree on
+    * it. [[tokensArr]] returns array<string> including a possible empty
+    * first element (callers that explode it filter `w <> ''` after);
+    * [[words]] is the same array with the empties dropped. */
   val TokenPattern = "[^a-zA-Z]+"
 
   def tokensArr(text: Column): Column = split(text, TokenPattern)
+
+  /** The tokens of `text` with empties dropped — one expression for every
+    * token-array consumer, so they stay token-for-token identical. */
+  def words(text: Column): Column = filter(tokensArr(text), w => w =!= lit(""))
 
   /** Word-bigram array of a pre-tokenized (empties already filtered)
     * array column — one shared expression so every bigram consumer

@@ -278,8 +278,7 @@ object Clustering {
     val toks = Tables.documents(s, dir)
       .join(asg.select(col("vec_id").as("doc_id"), col("cid")), Seq("doc_id"))
       .select(col("cid"),
-        explode(filter(Fns.tokensArr(col("text")), t => t =!= lit("")))
-          .as("word"))
+        explode(Fns.words(col("text"))).as("word"))
     val cw = toks.groupBy("cid", "word").agg(count(lit(1)).as("n_cw"))
     val c = cw.groupBy("cid").agg(sum("n_cw").as("n_c"))
     val wTot = cw.groupBy("word").agg(sum("n_cw").as("n_w"))

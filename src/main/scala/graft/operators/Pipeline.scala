@@ -922,7 +922,7 @@ object Pipeline {
     * re-aggregated to the |langs|×3 census. */
   def ngramDiversity(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
-      .select(col("lang"), filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(col("lang"), Fns.words(col("text")).as("t"))
     // ONE tokenize pass (round 17): the old three-branch union scanned
     // and re-tokenized the corpus once per n — at 100 TB, three full
     // passes where one suffices (guide §1.2: remove unnecessary passes).
@@ -1087,7 +1087,7 @@ object Pipeline {
   /** Per-token word counts of a documents slice (CM sketch input). */
   private[graft] def cmWcOf(docs: DataFrame): DataFrame =
     docs
-      .select(explode(filter(Fns.tokensArr(col("text")), w => w =!= lit("")))
+      .select(explode(Fns.words(col("text")))
         .as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
@@ -1177,7 +1177,7 @@ object Pipeline {
     // where HLL needs the linear-counting correction, whose ln() is not
     // cross-engine reproducible.
     val words = Tables.documents(s, dir)
-      .select(filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(Fns.words(col("text")).as("t"))
       .select(explode(when(size(col("t")) >= 3,
           transform(sequence(lit(0), size(col("t")) - 3),
             i => concat_ws(" ", element_at(col("t"), i + 1),
@@ -1300,7 +1300,7 @@ object Pipeline {
     // the one-char regex probe is near-free and row-set-identical
     val d = docs
       .filter(col("text").rlike("[a-zA-Z]"))
-      .select(col("doc_id"), filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(col("doc_id"), Fns.words(col("text")).as("t"))
     d.select(col("doc_id"), explode(
         transform(sequence(lit(1), size(col("t")), lit(ChunkStride)),
           st => struct(st.as("chunk_start"),
@@ -1361,7 +1361,7 @@ object Pipeline {
     * the empty-filtered token stream) — positional explode + min. */
   def tokenPositions(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
-      .select(col("doc_id"), filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(col("doc_id"), Fns.words(col("text")).as("t"))
     d.select(col("doc_id"), posexplode(col("t")).as(Seq("pos", "word")))
       .groupBy("doc_id", "word")
       .agg(min(col("pos") + 1).cast("long").as("first_pos"))
@@ -1393,7 +1393,7 @@ object Pipeline {
     * ratios of integers → bit-stable across engines. */
   def textStats(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"), col("text"),
-      filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      Fns.words(col("text")).as("t"))
     d.select(
         col("doc_id"),
         length(col("text")).cast("long").as("n_chars"),
@@ -1424,7 +1424,7 @@ object Pipeline {
     * sweep); same rationale as [[ngramJaccard]] (round 17). */
   private[graft] def qualityScores(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"), col("text"),
-      filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      Fns.words(col("text")).as("t"))
     val scored = d.select(
         col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
@@ -1464,7 +1464,7 @@ object Pipeline {
     * the fixture). */
   private[graft] def distinctFracs(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"),
-      filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      Fns.words(col("text")).as("t"))
     d.select(col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
         size(array_distinct(col("t"))).cast("long").as("n_distinct"))
@@ -1484,7 +1484,7 @@ object Pipeline {
     * comparisons on them) are bit-exact vs the oracle. */
   def gopherQuality(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"),
-      filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      Fns.words(col("text")).as("t"))
     // ONE tokenize pass (round 17): the per-doc scalars ride the bigram
     // explode (explode_outer keeps bigram-less docs — the old left
     // join's no-match rows) and re-aggregate as max() through the two
@@ -1544,7 +1544,7 @@ object Pipeline {
     * collision within one document). */
   def repetitionFilter(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"), col("text"),
-      filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      Fns.words(col("text")).as("t"))
     // sum of token lengths ≡ count of letter chars (tokens are the
     // maximal letter runs) — one O(n) scan, same trick as textStats
     // ONE tokenize pass (round 17, same move as [[gopherQuality]]): the
@@ -1886,7 +1886,7 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .filter(col("text").rlike("[a-zA-Z][^a-zA-Z]+[a-zA-Z]"))
       .select(col("doc_id"), col("lang"),
-        filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+        Fns.words(col("text")).as("t"))
     val bg = d
       .select(col("doc_id"), col("lang"),
         explode(transform(sequence(lit(0), size(col("t")) - 2),
@@ -1929,7 +1929,7 @@ object Pipeline {
     * is the deterministic rule itself (oracle implements the same rule). */
   def langId(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
-      filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      Fns.words(col("text")).as("t"))
     val withScores = LangMarkers.foldLeft(d) { case (df, (lang, markers)) =>
       df.withColumn(s"s_$lang",
         size(filter(col("t"), w => w.isin(markers.map(lit): _*))).cast("long"))
@@ -2100,7 +2100,7 @@ object Pipeline {
     * 2n−3 per doc and the only exchange is the final (w, c) count. */
   def skipgrams(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
-      .select(filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(Fns.words(col("text")).as("t"))
     def offs(k: Int) =
       when(size(col("t")) > k,
         transform(sequence(lit(1), size(col("t")) - k),
@@ -2158,7 +2158,7 @@ object Pipeline {
     * combined count; ties broken lexicographically for determinism. */
   def bigrams(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
-      .select(filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(Fns.words(col("text")).as("t"))
     d.select(explode(Fns.bigramsArr(col("t"))).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("bigram"))
@@ -2229,7 +2229,7 @@ object Pipeline {
     val W = org.apache.spark.sql.expressions.Window
     // vocabulary: distinct words with corpus frequency, split into chars
     var vocab = Tables.documents(s, dir)
-      .select(explode(filter(Fns.tokensArr(col("text")), w => w =!= lit("")))
+      .select(explode(Fns.words(col("text")))
         .as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
       .withColumn("toks", split(regexp_replace(col("word"), "(.)", "$1 "), " "))
@@ -2301,7 +2301,7 @@ object Pipeline {
     * tokenization. */
   def nextToken(s: SparkSession, dir: String): DataFrame = {
     val bg = Tables.documents(s, dir)
-      .select(filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(Fns.words(col("text")).as("t"))
       .select(explode(Fns.bigramsArr(col("t"))).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("cnt"))
       .select(substring_index(col("bigram"), " ", 1).as("head"),
@@ -2401,7 +2401,7 @@ object Pipeline {
     * (lift, bigram) — a total order, so the cutoff is deterministic. */
   def collocations(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
-      .select(filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(Fns.words(col("text")).as("t"))
     val uni = d.select(explode(col("t")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
     val bgs = d.select(explode(Fns.bigramsArr(col("t"))).as("bigram"))
@@ -2818,7 +2818,7 @@ object Pipeline {
   def bm25(s: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"),
-        filter(tokensArr(col("text")), t => t =!= lit("")).as("t"))
+        Fns.words(col("text")).as("t"))
     // `.stable` (round 18): dl feeds both the corpus stats aggregate and
     // the per-doc score join — two compiled subtrees, each re-running
     // the scan+tokenize underneath. One narrow row per doc (the same
@@ -2912,7 +2912,7 @@ object Pipeline {
   def oovFilter(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"),
-        filter(tokensArr(col("text")), t => t =!= lit("")).as("t"))
+        Fns.words(col("text")).as("t"))
     // tokenize ONCE: the (doc, bigram) multiset feeds both the global
     // vocabulary (second-level aggregation) and the per-doc scoring.
     // Both branches sit in one action, so the (doc_id, bigram) shuffle
@@ -2957,7 +2957,7 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .filter(col("text").rlike(SpanPrefilter))
       .select(col("doc_id"),
-        filter(tokensArr(col("text")), t => t =!= lit("")).as("t"))
+        Fns.words(col("text")).as("t"))
     val spans = d
       .select(col("doc_id"),
         explode(transform(sequence(lit(0), size(col("t")) - SpanTokens),

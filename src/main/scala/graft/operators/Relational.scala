@@ -1366,7 +1366,7 @@ object Relational {
     * stopword overlap test — each with an exact DuckDB list twin. */
   def arrayFunctions(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
-      .select(col("doc_id"), filter(tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(col("doc_id"), words(col("text")).as("t"))
     d.select(
         col("doc_id"),
         size(array_distinct(col("t"))).cast("long").as("n_distinct"),
@@ -1391,7 +1391,7 @@ object Relational {
   def mapFunctions(s: SparkSession, dir: String): DataFrame = {
     val wc = Tables.documents(s, dir)
       .select(col("doc_id"),
-        explode(filter(tokensArr(col("text")), w => w =!= lit(""))).as("w"))
+        explode(words(col("text"))).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("n"))
     val maps = wc.groupBy("doc_id")
       .agg(map_from_entries(collect_list(struct(col("w"), col("n")))).as("m"))
@@ -1470,7 +1470,7 @@ object Relational {
     * DuckDB oracle checks it hash-exact — no boundary-tie hazard. */
   def approxTopK(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .select(explode(filter(tokensArr(col("text")), w => w =!= lit(""))).as("w"))
+      .select(explode(words(col("text"))).as("w"))
       .agg(expr("approx_top_k(w, 50, 10000)").as("tk"))
       .select(explode(col("tk")).as("e"))
       .select(col("e.item").as("word"), col("e.count").as("cnt"))
@@ -1836,10 +1836,17 @@ object Relational {
     * broadcast threshold on its own, and no other query's plan is touched.
     * `RelationalSpec` asserts the might_contain probe lands in the plan.
     * The isolated session is memoized per parent session (not per
-    * corpus, so not a [[graft.util.CorpusMemo]]) —
-    * a fresh `newSession` per call would accumulate one SessionState
-    * (conf + listeners) per invocation for the SparkContext's lifetime
-    * under the bench/soak harnesses. */
+    * corpus, so not a [[graft.util.CorpusMemo]]), because a fresh child
+    * per call recompiles the query's generated code on every call. A
+    * child's SQL conf starts from the SparkContext's, not the parent
+    * session's, so artifact isolation is on in it (Spark's default) even
+    * when the parent turned it off: each child has its own session UUID,
+    * its tasks get a fresh executor class loader, and the generated-class
+    * cache, keyed on that loader, misses. Measured at sf0.001: a second
+    * call on the cached child compiles 0 classes, on a fresh child 23,
+    * every time. The cost is not listeners: the SparkContext's listener
+    * bus held 4 listeners before and after 20 fresh children each ran
+    * this join. */
   private val bloomSessionCache =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
 

@@ -201,7 +201,7 @@ object Selection {
     import org.apache.spark.sql.expressions.Window
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("text"),
-        filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+        Fns.words(col("text")).as("t"))
       .select(col("source"), col("lang"),
         size(col("t")).cast("long").as("n_tokens"),
         length(col("text")).cast("long").as("n_chars"),

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.MetaFiles
 
 /** The DURABLE ADMIT INDEX lifecycle (`spark.graft.stream.admitIndexPath`)
   * — extracted from `Streams.scala` in round 13 (VERDICT #6, pure move:
@@ -58,21 +59,6 @@ object AdmitIndex {
   private val AdmitPointerFile = "_GRAFT_CURRENT"
   private val SweepPendingFile = "_GRAFT_SWEEP_PENDING"
 
-  // shared metadata-file protocol (round 12: one implementation with an
-  // atomic-replace publish — see graft.util.MetaFiles for the
-  // missing-window contract of the non-FileContext fallback)
-  private[streaming] def dataFilesIn(fs: org.apache.hadoop.fs.FileSystem,
-                                     dir: org.apache.hadoop.fs.Path): Seq[String] =
-    graft.util.MetaFiles.dataFiles(fs, dir)
-
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                            f: org.apache.hadoop.fs.Path): Option[String] =
-    graft.util.MetaFiles.read(fs, f)
-
-  private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                             f: org.apache.hadoop.fs.Path, v: String): Unit =
-    graft.util.MetaFiles.write(fs, f, v)
-
   /** Test-only interleaving hook: runs once per durable-index merge,
     * right after the first append and before the pointer re-check —
     * `StreamsSpec` injects a compaction here to prove the fencing loop
@@ -98,7 +84,7 @@ object AdmitIndex {
     if (!fs.exists(hp)) return None
     def committed(g: org.apache.hadoop.fs.Path) =
       fs.exists(g) && fs.exists(new org.apache.hadoop.fs.Path(g, "_SUCCESS"))
-    readSmallFile(fs, new org.apache.hadoop.fs.Path(hp, AdmitPointerFile))
+    MetaFiles.read(fs, new org.apache.hadoop.fs.Path(hp, AdmitPointerFile))
       .map(n => new org.apache.hadoop.fs.Path(hp, n)).filter(committed)
       .orElse {
         fs.listStatus(hp).toSeq
@@ -149,7 +135,7 @@ object AdmitIndex {
         st.getPath.getName.startsWith(SweepPendingFile))
       .map(_.getPath)
     recs.foreach { rec =>
-      readSmallFile(fs, rec).foreach { v =>
+      MetaFiles.read(fs, rec).foreach { v =>
         val lines = v.split("\n").toSeq
         val src = new org.apache.hadoop.fs.Path(hp, lines.head)
         val snapNames = lines.tail.toSet
@@ -167,7 +153,7 @@ object AdmitIndex {
             if (!fs.exists(src)) true
             else if (cur.getName == src.getName) false
             else {
-              val late = dataFilesIn(fs, src).filterNot(f =>
+              val late = MetaFiles.dataFiles(fs, src).filterNot(f =>
                 snapNames(new org.apache.hadoop.fs.Path(f).getName))
               if (late.nonEmpty) {
                 val missing = s.read.parquet(late: _*)
@@ -275,7 +261,7 @@ object AdmitIndex {
       // are the markers written. A crash anywhere in the loop leaves
       // the markers unwritten, so the next drain retries idempotently.
       val pointer = new org.apache.hadoop.fs.Path(hp, AdmitPointerFile)
-      val pointerHealthy = readSmallFile(fs, pointer)
+      val pointerHealthy = MetaFiles.read(fs, pointer)
         .map(n => new org.apache.hadoop.fs.Path(hp, n))
         .exists(g => fs.exists(new org.apache.hadoop.fs.Path(g, "_SUCCESS")))
       var gen = admitGenDir(fs, hp)
@@ -295,10 +281,10 @@ object AdmitIndex {
           // and undo a completed prune until the next compaction, so
           // heal only if the pointer is STILL unhealthy; the fencing
           // loop's re-check below handles everything else.
-          if (!pointerHealthy && !readSmallFile(fs, pointer)
+          if (!pointerHealthy && !MetaFiles.read(fs, pointer)
                 .map(n => new org.apache.hadoop.fs.Path(hp, n))
                 .exists(g => fs.exists(new org.apache.hadoop.fs.Path(g, "_SUCCESS"))))
-            writeSmallFile(fs, pointer, gen.getName)
+            MetaFiles.write(fs, pointer, gen.getName)
           admitMergePostAppendHook()
         }
         val cur = admitGenDir(fs, hp).getOrElse(gen)
@@ -399,7 +385,7 @@ object AdmitIndex {
     // "files a racing drain appended after this point" against it — a
     // directory read would leave the snapshot boundary implicit in
     // Spark's file-index timing.
-    val snap = dataFilesIn(fs, gen)
+    val snap = MetaFiles.dataFiles(fs, gen)
     if (snap.isEmpty) return // a just-created empty generation: nothing to do
     // .distinct(): exact-duplicate rows can only enter through the
     // documented double-append window (merge-side fence and compactor
@@ -444,10 +430,10 @@ object AdmitIndex {
     // late rows before reading.
     val sweepRec = new org.apache.hadoop.fs.Path(hp, SweepPendingFile +
       "-" + java.lang.Long.toHexString(System.nanoTime()))
-    writeSmallFile(fs, sweepRec,
+    MetaFiles.write(fs, sweepRec,
       (gen.getName +: snap.map(f =>
         new org.apache.hadoop.fs.Path(f).getName)).mkString("\n"))
-    writeSmallFile(fs, new org.apache.hadoop.fs.Path(hp, AdmitPointerFile),
+    MetaFiles.write(fs, new org.apache.hadoop.fs.Path(hp, AdmitPointerFile),
       newGen.getName)
     // POST-REPOINT SWEEP (round 12, review): the merge-side fence only
     // covers drains whose pointer re-check runs AFTER this repoint; a
@@ -461,7 +447,7 @@ object AdmitIndex {
     // that arrive after THIS listing belong to merges that must see the
     // moved pointer on their re-check (the listing happens after the
     // repoint), so the two fences cover every interleaving.
-    val late = dataFilesIn(fs, gen).filterNot(snap.toSet)
+    val late = MetaFiles.dataFiles(fs, gen).filterNot(snap.toSet)
     if (late.nonEmpty) {
       val missing = inWindow(s.read.parquet(late: _*))
         .join(s.read.parquet(newGen.toString)

@@ -43,10 +43,7 @@ object LshStreams {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_band_hits"),
         min(col("index_doc")).as("first_match"))
-    val (data, ckpt) = Streams.sinkDirs()
-    Streams.drain(probed,
-      Streams.Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
-    Streams.readSink(s, data, probed.schema).orderBy("doc_id")
+    Streams.drain(probed, Streams.Complete()).orderBy("doc_id")
   }
 
   /** The new-snapshot slice's MinHash band stream: per-row 64-perm
@@ -72,7 +69,7 @@ object LshStreams {
     val docs = Streams.documentsStream(s, dir)
       .filter(pmod(col("doc_id"), lit(4L)) === 3L)
       .select(col("doc_id"),
-        filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+        Fns.words(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"),
         transform(sequence(lit(0), size(col("t")) - 3),
@@ -266,9 +263,9 @@ object LshStreams {
     // no-data batches before the kill). This stream has no watermark, so
     // the finalizing no-data batch contributes nothing here — the TTL
     // drain runs without it.
-    Streams.drain(out, if (singleBatch) Streams.AppendOneBatch else Streams.Append,
-      data, ckpt, lanes = lanes, rocksDb = true, noDataBatches = ttlMs.isEmpty)
-    val drained = Streams.readSink(s, data, out.schema)
+    val drained = Streams.drain(out,
+      if (singleBatch) Streams.AppendOneBatch else Streams.Append, lanes = lanes,
+      rocksDb = true, noDataBatches = ttlMs.isEmpty, dirs = (data, ckpt))
     // DURABLE ADMIT INDEX (`spark.graft.stream.admitIndexPath`, round 11):
     // the RocksDB carrier state is CHECKPOINT-scoped — a wiped checkpoint,
     // an index migration, or a fresh ingest pipeline loses every prior
@@ -289,7 +286,7 @@ object LshStreams {
       // settled admissions and admit their twins permanently
       AdmitIndex.recoverPendingSweep(s, fs, hp)
       val snapFiles = AdmitIndex.admitGenDir(fs, hp)
-        .map(g => AdmitIndex.dataFilesIn(fs, g)).getOrElse(Seq.empty)
+        .map(g => graft.util.MetaFiles.dataFiles(fs, g)).getOrElse(Seq.empty)
       (fs, hp, snapFiles)
     }
     durableIx.foreach { case (fs, hp, snapFiles) =>

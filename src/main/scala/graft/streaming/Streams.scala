@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Event record for the stateful session stream. */
@@ -48,20 +49,23 @@ case class SessOut(user_id: Long, n_sessions: Long, n_events: Long)
   * these operators are the 100 TB-pipeline extension: the same event
   * analytics, run incrementally.
   *
-  * All queries read the events parquet through `readStream` and write to
-  * FILE sinks, so the whole source → transform → sink path is the
-  * production shape: results land as parquet written by executors
-  * (never materialized on the driver), `Trigger.AvailableNow` drains the
-  * source one-shot, and the harness reads the sink directory back. On a
+  * All queries read the events or documents parquet through `readStream`
+  * and write to FILE sinks, so the whole source → transform → sink path is
+  * the production shape: results land as files written by executors
+  * (never materialized on the driver) and `Trigger.AvailableNow` drains the
+  * source one-shot. A flavor supplies only its stream and a [[Sink]] kind;
+  * [[drain]] owns the rest of the lifecycle, as the reference's worker owns
+  * every file a job touches: it makes the sink and checkpoint dirs, runs
+  * the stream, and reads the sink back on the caller's session. On a
   * cluster the same code runs on a schedule with a durable checkpoint.
   */
 object Streams {
 
-  /** How [[drain]] writes each micro-batch. */
+  /** How [[drain]] writes each micro-batch into the sink dir. */
   private[streaming] sealed trait Sink
 
-  /** Append mode into a parquet FILE sink at `data`: executors write the
-    * result files and the driver never holds the rows. */
+  /** Append mode into a parquet FILE sink: executors write the result
+    * files and the driver never holds the rows. */
   private[streaming] case object Append extends Sink
 
   /** [[Append]] that ENFORCES the drain fitting in one non-empty
@@ -75,16 +79,33 @@ object Streams {
   private[streaming] case object AppendOneBatch extends Sink
 
   /** Complete mode through `foreachBatch`: the parquet file sink is
-    * append-only by contract, so each trigger's full aggregate snapshot is
-    * handed to `write`, which overwrites the previous one (a distributed
-    * `batch.write`, never a driver collect). */
-  private[streaming] final case class Complete(write: DataFrame => Unit) extends Sink
+    * append-only by contract, so each trigger's full aggregate snapshot,
+    * passed through `shape`, overwrites the previous one in `format`
+    * (`parquet`, or `graftkv` for the kv connector's job-level commit) — a
+    * distributed `batch.write`, never a driver collect. */
+  private[streaming] final case class Complete(shape: DataFrame => DataFrame = identity,
+                                               format: String = "parquet") extends Sink
 
   /** Run `out` one-shot (`Trigger.AvailableNow`: every available batch,
-    * then the finalizing no-data batch) into `sink`, checkpointing at
-    * `ckpt`, and block until it terminates. `data` is the parquet path of
-    * the two append sinks; a [[Complete]] write names its own target.
-    * Every streaming flavor starts here, under one conf policy:
+    * then the finalizing no-data batch) into `sink`, block until it
+    * terminates, and return what the sink holds, read on `out`'s session.
+    * Every streaming flavor starts here and owns no file of its own:
+    *
+    *   - `dirs` is the (sink data, checkpoint) pair. By default it is a
+    *     fresh pair under [[graft.util.TempDirs]], removed at JVM
+    *     shutdown. Only [[LshStreams.streamLshAdmitAt]] passes its own:
+    *     its resume path re-drains a kept checkpoint, and its durable
+    *     admit index merges the sink's files.
+    *   - The result is read with the sink's schema, so no inference job
+    *     runs: `out.schema` for the append sinks, and for [[Complete]] the
+    *     schema of `shape` over an empty frame of `out.schema` (analysis
+    *     only). A parquet sink is read with that schema; a `graftkv`
+    *     snapshot through `format("graftkv")`, whose schema is fixed.
+    *   - Zero batches (an empty scheduling window, routine for a
+    *     production one-shot run) leave no sink dir; the result is then an
+    *     empty frame of that schema, for every sink kind.
+    *
+    * The stream runs under one conf policy:
     *
     *   - `spark.sql.shuffle.partitions = lanes`, which is the number of
     *     state-store partitions. Per-partition store setup dominates these
@@ -114,9 +135,11 @@ object Streams {
     * body and state store reads the clone's copy. The caller's conf is
     * therefore never observed changed outside `start()`. A resumed
     * checkpoint keeps the lane count and provider it was created with. */
-  private[streaming] def drain(out: Dataset[_], sink: Sink, data: String, ckpt: String,
-                               lanes: Int = 2, rocksDb: Boolean = false,
-                               noDataBatches: Boolean = true): Unit = {
+  private[streaming] def drain(out: Dataset[_], sink: Sink, lanes: Int = 2,
+                               rocksDb: Boolean = false, noDataBatches: Boolean = true,
+                               dirs: (String, String) = sinkDirs()): DataFrame = {
+    val (data, ckpt) = dirs
+    val s = out.sparkSession
     val w = out.toDF().writeStream.option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
     val writer = sink match {
@@ -134,8 +157,10 @@ object Streams {
             batch.write.mode("append").parquet(data)
           }
         }
-      case Complete(write) => w.outputMode("complete")
-        .foreachBatch { (batch: Dataset[Row], _: Long) => write(batch) }
+      case Complete(shape, format) => w.outputMode("complete")
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+          shape(batch).write.mode("overwrite").format(format).save(data)
+        }
     }
     val policy = Seq("spark.sql.shuffle.partitions" -> lanes.toString,
       "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) ++
@@ -143,14 +168,14 @@ object Streams {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // getOption would report a registered key's default as set, and the
     // restore would then pin it; getAll holds only the keys really set
-    val conf = out.sparkSession.conf
+    val conf = s.conf
     val set = conf.getAll
     val isolation = "spark.sql.artifact.isolation.enabled"
     val confs = policy ++ Option.when(!set.contains(isolation))(isolation -> "false")
     val prev = confs.map { case (k, _) => k -> set.get(k) }
     // a session fixes its own isolation at its first job: fix the
     // caller's now, under its own conf, not inside the window below
-    org.apache.spark.sql.GraftShims.isolatedJobs(out.sparkSession)
+    org.apache.spark.sql.GraftShims.isolatedJobs(s)
     val q = try {
       confs.foreach { case (k, v) => conf.set(k, v) }
       writer.start()
@@ -159,6 +184,16 @@ object Streams {
       case (k, None)    => conf.unset(k)
     }
     try q.awaitTermination() finally q.stop()
+
+    def empty(schema: StructType) =
+      s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val (schema, format) = sink match {
+      case Complete(shape, format) => (shape(empty(out.schema)).schema, format)
+      case _                       => (out.schema, "parquet")
+    }
+    if (!new java.io.File(data).exists()) empty(schema)
+    else if (format == "parquet") s.read.schema(schema).parquet(data)
+    else s.read.format(format).load(data)
   }
 
   /** Fresh (data, checkpoint) dirs for a one-shot file sink — registered
@@ -169,32 +204,35 @@ object Streams {
      new java.io.File(root.toFile, "ckpt").getAbsolutePath)
   }
 
-  /** Read a sink directory back, tolerating the zero-batch case: if the
-    * source had nothing to process (an empty scheduling window — routine
-    * for a production one-shot run), no batch ever fires and the sink dir
-    * is never created; the result is then an empty frame of the query's
-    * schema, not a path error. */
-  private[streaming] def readSink(s: SparkSession, data: String,
-                                  schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (new java.io.File(data).exists())
-      s.read.schema(schema).parquet(data)
-    else
-      s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-
-  /** The events table as a stream, tolerant of both fixture layouts: a
-    * single `events.parquet` FILE beside the other tables (driver
-    * fixtures — the file source needs a directory, so the parent is
-    * scanned with a name glob) or an `events.parquet/` DIRECTORY of part
-    * files (any real deployment, and the 10× scale probe). */
-  private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.eventsRaw(s, dir).schema
-    val f = new java.io.File(dir, "events.parquet")
-    val src =
-      if (f.isDirectory) s.readStream.schema(schema).parquet(f.getAbsolutePath)
-      else s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-    Tables.normalizeEvents(src)
+  /** A fixture table as a stream, tolerant of both layouts: a single
+    * `<table>.parquet` FILE beside the other tables (the sf fixtures — the
+    * file source needs a directory, so the parent is scanned with a name
+    * glob) or a `<table>.parquet/` DIRECTORY of part files (any real
+    * deployment, and the 10× scale probe). */
+  private def tableStream(s: SparkSession, dir: String, table: String,
+                          schema: StructType,
+                          options: Map[String, String] = Map.empty): DataFrame = {
+    val f = new java.io.File(dir, s"$table.parquet")
+    val r = s.readStream.schema(schema).options(options)
+    if (f.isDirectory) r.parquet(f.getAbsolutePath)
+    else r.option("pathGlobFilter", f.getName).parquet(dir)
   }
+
+  /** The events table as a stream, normalized like the batch table. */
+  private def eventStream(s: SparkSession, dir: String): DataFrame =
+    Tables.normalizeEvents(tableStream(s, dir, "events", Tables.eventsRaw(s, dir).schema))
+
+  /** The documents table as a stream. `maxFilesPerTrigger=1` forces
+    * multi-batch processing where layout allows, so incremental state
+    * genuinely carries across micro-batches. */
+  private[streaming] def documentsStream(s: SparkSession, dir: String): DataFrame =
+    tableStream(s, dir, "documents", Tables.documents(s, dir).schema,
+      Map("maxFilesPerTrigger" -> "1"))
+
+  /** Event time in epoch microseconds, the fold order of the stateful
+    * flavors. */
+  private def micros(t: java.sql.Timestamp): Long =
+    t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
 
   /** Tumbling 1-hour event-time window, streaming form of
     * [[graft.operators.Relational.tumblingWindow]]. Complete output mode:
@@ -207,9 +245,7 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
               col("event_type"), col("n"))
-    val (data, ckpt) = sinkDirs()
-    drain(agg, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
-    readSink(s, data, agg.schema).orderBy("hour", "event_type")
+    drain(agg, Complete()).orderBy("hour", "event_type")
   }
 
   /** Watermarked tumbling window in APPEND mode: the streaming engine
@@ -227,9 +263,7 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
               col("event_type"), col("n"))
-    val (data, ckpt) = sinkDirs()
-    drain(agg, Append, data, ckpt)
-    readSink(s, data, agg.schema).orderBy("hour", "event_type")
+    drain(agg, Append).orderBy("hour", "event_type")
   }
 
   /** Streaming exact deduplication: `dropDuplicates` on (user_id, minute)
@@ -244,9 +278,7 @@ object Streams {
       .withWatermark("m", "1 hour")
       .dropDuplicates("user_id", "m")
       .select(col("user_id"), date_format(col("m"), "yyyy-MM-dd HH:mm").as("minute"))
-    val (data, ckpt) = sinkDirs()
-    drain(deduped, Append, data, ckpt)
-    readSink(s, data, deduped.schema).orderBy("user_id", "minute")
+    drain(deduped, Append).orderBy("user_id", "minute")
   }
 
   /** Stream-static join: the event stream enriched per micro-batch against
@@ -264,9 +296,7 @@ object Streams {
         when(coalesce(col("n_orders"), lit(0L)) >= 12, "heavy")
           .otherwise("light").as("tier"))
       .groupBy("event_type", "tier").agg(count(lit(1)).as("n"))
-    val (data, ckpt) = sinkDirs()
-    drain(joined, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
-    readSink(s, data, joined.schema).orderBy("event_type", "tier")
+    drain(joined, Complete()).orderBy("event_type", "tier")
   }
 
   /** Stream-stream inner join with a time-interval condition: views joined
@@ -288,9 +318,7 @@ object Streams {
         col("purchase_ts") >= col("view_ts") &&
         col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
       .select(col("user_id"), col("view_id"), col("purchase_id"))
-    val (data, ckpt) = sinkDirs()
-    drain(joined, Append, data, ckpt)
-    readSink(s, data, joined.schema).orderBy("user_id", "view_id", "purchase_id")
+    drain(joined, Append).orderBy("user_id", "view_id", "purchase_id")
   }
 
   /** Stream-stream LEFT OUTER interval join: like [[streamStreamJoin]],
@@ -320,9 +348,7 @@ object Streams {
         "leftOuter")
       .select(col("user_id"), col("view_id"),
         coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"))
-    val (data, ckpt) = sinkDirs()
-    drain(joined, Append, data, ckpt)
-    readSink(s, data, joined.schema).orderBy("user_id", "view_id", "purchase_id")
+    drain(joined, Append).orderBy("user_id", "view_id", "purchase_id")
   }
 
   /** Streaming leaderboard: complete-mode running counts per user, with
@@ -335,10 +361,8 @@ object Streams {
   def streamTopk(s: SparkSession, dir: String): DataFrame = {
     val stream = eventStream(s, dir)
     val counts = stream.groupBy("user_id").agg(count(lit(1)).as("n"))
-    val (data, ckpt) = sinkDirs()
-    drain(counts, Complete(_.orderBy(col("n").desc, col("user_id")).limit(10)
-      .write.mode("overwrite").parquet(data)), data, ckpt)
-    readSink(s, data, counts.schema).orderBy(col("n").desc, col("user_id"))
+    drain(counts, Complete(_.orderBy(col("n").desc, col("user_id")).limit(10)))
+      .orderBy(col("n").desc, col("user_id"))
   }
 
   /** Streaming aggregate into the `graftkv` V2 sink — the engine's own
@@ -351,37 +375,12 @@ object Streams {
     * serving layer needs. Read-back is via `format("graftkv")`, closing
     * stream → V2 sink → V2 source in one declared query. */
   def streamKvSink(s: SparkSession, dir: String): DataFrame = {
-    val (data, ckpt) = sinkDirs()
     val agg = eventStream(s, dir)
       .groupBy("event_type").agg(count(lit(1)).as("n"))
       .select(col("event_type").as("key"), col("n").cast("string").as("value"))
-    drain(agg, Complete(_.write.format("graftkv").mode("overwrite").save(data)),
-      data, ckpt)
-    // zero-batch tolerance, same contract as readSink: no batch → no dir
-    if (new java.io.File(data).exists())
-      s.read.format("graftkv").load(data)
-        .select(col("key"), col("value").cast("bigint").as("n"))
-        .orderBy("key")
-    else {
-      import s.implicits._
-      s.emptyDataset[(String, Long)].toDF("key", "n")
-    }
-  }
-
-  /** The documents table as a stream, tolerant of the same two fixture
-    * layouts as [[eventStream]]: a single `documents.parquet` file beside
-    * the other tables, or a directory of part files. `maxFilesPerTrigger=1`
-    * forces multi-batch processing where layout allows, so incremental
-    * state genuinely carries across micro-batches. */
-  private[streaming] def documentsStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.documents(s, dir).schema
-    val f = new java.io.File(dir, "documents.parquet")
-    if (f.isDirectory)
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(f.getAbsolutePath)
-    else
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    drain(agg, Complete(format = "graftkv"))
+      .select(col("key"), col("value").cast("bigint").as("n"))
+      .orderBy("key")
   }
 
   /** Streaming CDC chunk dedup — the incremental first-occurrence census
@@ -403,7 +402,6 @@ object Streams {
     * chunk hash (never an occurrence list), the same bounded-state
     * discipline as the batch census's sort-based `row_number`. */
   def streamCdcDedup(s: SparkSession, dir: String): DataFrame = {
-    val (data, ckpt) = sinkDirs()
     val census = graft.operators.Pipeline.cdcChunksOf(documentsStream(s, dir))
       .groupBy("chunk_hash")
       .agg(min(struct(col("doc_id"), col("chunk_idx"), col("chunk_len")))
@@ -413,25 +411,15 @@ object Streams {
       col("chunk_hash").cast("string").as("key"),
       concat_ws(":", col("o.doc_id"), col("o.chunk_idx"), col("o.chunk_len"),
                 col("n_occ")).as("value"))
-    drain(snapshot,
-      Complete(_.write.format("graftkv").mode("overwrite").save(data)), data, ckpt)
-    // zero-batch tolerance, same contract as readSink: no batch → no dir
-    if (new java.io.File(data).exists()) {
-      val parts = split(col("value"), ":")
-      s.read.format("graftkv").load(data)
-        .select(col("key").cast("bigint").as("chunk_hash"),
-          parts.getItem(0).cast("bigint").as("owner_doc"),
-          parts.getItem(1).cast("bigint").as("owner_idx"),
-          parts.getItem(2).cast("bigint").as("chunk_len"),
-          parts.getItem(3).cast("bigint").as("n_occ"))
-        .withColumn("dup_bytes", (col("n_occ") - 1) * col("chunk_len"))
-        .orderBy("chunk_hash")
-    } else {
-      import s.implicits._
-      s.emptyDataset[(Long, Long, Long, Long, Long, Long)]
-        .toDF("chunk_hash", "owner_doc", "owner_idx", "chunk_len", "n_occ",
-          "dup_bytes")
-    }
+    val parts = split(col("value"), ":")
+    drain(snapshot, Complete(format = "graftkv"))
+      .select(col("key").cast("bigint").as("chunk_hash"),
+        parts.getItem(0).cast("bigint").as("owner_doc"),
+        parts.getItem(1).cast("bigint").as("owner_idx"),
+        parts.getItem(2).cast("bigint").as("chunk_len"),
+        parts.getItem(3).cast("bigint").as("n_occ"))
+      .withColumn("dup_bytes", (col("n_occ") - 1) * col("chunk_len"))
+      .orderBy("chunk_hash")
   }
 
   /** Streaming per-source document quota — the incremental twin of
@@ -447,7 +435,6 @@ object Streams {
     * fixed-width pairs (never an occurrence list); each trigger
     * snapshots the full quota table to the sink, final snapshot wins. */
   def streamDomainCap(s: SparkSession, dir: String, cap: Int = 15): DataFrame = {
-    val (data, ckpt) = sinkDirs()
     val topk = udaf(new graft.functions.BoundedTopK(cap))
     val kept = documentsStream(s, dir)
       .select(col("source"),
@@ -459,12 +446,7 @@ object Streams {
     drain(kept, Complete(_.select(col("source"),
         posexplode(col("kept.items")).as(Seq("pos", "e")))
       .select(col("source"), col("e.doc_id").as("doc_id"),
-        (col("pos") + 1).cast("long").as("rk"))
-      .write.mode("overwrite").parquet(data)), data, ckpt)
-    import org.apache.spark.sql.types._
-    readSink(s, data, StructType(Seq(
-        StructField("source", StringType), StructField("doc_id", LongType),
-        StructField("rk", LongType))))
+        (col("pos") + 1).cast("long").as("rk"))))
       .orderBy("source", "rk")
   }
 
@@ -483,7 +465,6 @@ object Streams {
     * per language is ≤ `k` fixed-width pairs; each trigger snapshots the
     * sample table to the sink, final snapshot wins. */
   def streamPpsSample(s: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    val (data, ckpt) = sinkDirs()
     val topk = udaf(new graft.functions.BoundedTopK(k))
     val kept = documentsStream(s, dir)
       .select(col("lang"),
@@ -495,12 +476,7 @@ object Streams {
     drain(kept, Complete(_.select(col("lang"),
         posexplode(col("kept.items")).as(Seq("pos", "e")))
       .select(col("lang"), col("e.doc_id").as("doc_id"),
-        (col("pos") + 1).cast("long").as("rk"))
-      .write.mode("overwrite").parquet(data)), data, ckpt)
-    import org.apache.spark.sql.types._
-    readSink(s, data, StructType(Seq(
-        StructField("lang", StringType), StructField("doc_id", LongType),
-        StructField("rk", LongType))))
+        (col("pos") + 1).cast("long").as("rk"))))
       .orderBy("lang", "rk")
   }
 
@@ -523,8 +499,6 @@ object Streams {
       override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
         st = getHandle.getValueState[CurProfile]("cur",
           Encs.product[CurProfile], TTLConfig.NONE)
-      private def micros(t: java.sql.Timestamp): Long =
-        t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
       override def handleInputRows(user: Long, rows: Iterator[EvT],
                                    timerValues: TimerValues): Iterator[CurProfile] = {
         val evs = rows.toArray.sortBy(e => (micros(e.ts), e.event_id))
@@ -552,14 +526,12 @@ object Streams {
       .as[EvT]
     val out = stream.groupByKey(_.user_id)
       .transformWithState(new CurrentProcessor, TimeMode.None(), OutputMode.Append())
-    val (data, ckpt) = sinkDirs()
-    drain(out, Append, data, ckpt, rocksDb = true)
     // one snapshot lands per (user, batch); keep the LATEST per user —
     // n_events is strictly increasing across a user's snapshots, so the
     // struct max is the final profile even if the AvailableNow drain
     // split into several micro-batches (maxFilesPerTrigger, resumed
     // checkpoints). With a single batch this is a no-op.
-    readSink(s, data, out.schema)
+    drain(out, Append, rocksDb = true)
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("last_type"))).as("s"))
       .select(col("user_id"), col("s.n_events").as("n_events"),
@@ -591,9 +563,6 @@ object Streams {
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
         col("value")).as[GfEv]
 
-    def micros(t: java.sql.Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-
     def fn(user: Long, events: Iterator[GfEv],
            state: GroupState[GfState]): Iterator[GfOut] = {
       val evs = events.toArray.sortBy(e => (micros(e.ts), e.event_id))
@@ -608,9 +577,7 @@ object Streams {
 
     val out = stream.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-    val (data, ckpt) = sinkDirs()
-    drain(out, AppendOneBatch, data, ckpt)
-    readSink(s, data, out.schema)
+    drain(out, AppendOneBatch)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("locf_cents"))
       .orderBy("event_id")
@@ -626,9 +593,6 @@ object Streams {
     import s.implicits._
     val stream = eventStream(s, dir)
       .select(col("user_id"), col("ts"), col("event_id")).as[Ev]
-
-    def micros(t: java.sql.Timestamp): Long =
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
 
     def fn(user: Long, events: Iterator[Ev], state: GroupState[SessState]): Iterator[SessOut] = {
       val evs = events.toArray.sortBy(e => (micros(e.ts), e.event_id))
@@ -651,9 +615,7 @@ object Streams {
     // user (n_events strictly increases across a user's snapshots) so the
     // result is identical even if the AvailableNow drain splits into
     // several micro-batches — same discipline as streamCurrentState
-    val (data, ckpt) = sinkDirs()
-    drain(out, Append, data, ckpt)
-    readSink(s, data, out.schema)
+    drain(out, Append)
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("s"))
       .select(col("user_id"), col("s.n_sessions").as("n_sessions"),
@@ -696,9 +658,7 @@ object Streams {
       .join(broadcast(bounds), Seq("k"))
       .groupBy(col("event_type"), binCol.as("bin"))
       .agg(count(lit(1)).as("cl"))
-    val (data, ckpt) = sinkDirs()
-    drain(live, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
-    val drained = readSink(s, data, live.schema)
+    val drained = drain(live, Complete())
     // full outer so a bin populated on only one side still contributes
     // its full share to the distance
     val cells = refCells
@@ -733,7 +693,7 @@ object Streams {
   def streamHll(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Fns
     val shingled = documentsStream(s, dir)
-      .select(filter(Fns.tokensArr(col("text")), w => w =!= lit("")).as("t"))
+      .select(Fns.words(col("text")).as("t"))
       .select(explode(when(size(col("t")) >= 3,
           transform(sequence(lit(0), size(col("t")) - 3),
             i => concat_ws(" ", element_at(col("t"), i + 1),
@@ -745,9 +705,7 @@ object Streams {
       .select(pmod(col("h"), lit(256L)).as("bucket"),
         graft.operators.Pipeline.hllRhoOf(expr("h div 256")).as("rho"))
       .groupBy("bucket").agg(max(col("rho")).as("m"))
-    val (data, ckpt) = sinkDirs()
-    drain(regs, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
-    val drained = readSink(s, data, regs.schema)
+    val drained = drain(regs, Complete())
     // post-drain: fill the never-observed buckets and reduce to the
     // single-row estimate — identical arithmetic to the batch census
     val full = s.range(0, 256).toDF("bucket")
@@ -775,9 +733,7 @@ object Streams {
     val cells = eventStream(s, dir)
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("c"))
-    val (data, ckpt) = sinkDirs()
-    drain(cells, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
-    val drained = readSink(s, data, cells.schema)
+    val drained = drain(cells, Complete())
     val W = org.apache.spark.sql.expressions.Window
     val w = W.orderBy("h").rowsBetween(W.unboundedPreceding, W.currentRow)
     val tot = drained.agg(sum(col("c")).as("s"), count(lit(1)).as("hh"))
@@ -818,9 +774,7 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("cents"), col("n"))
-    val (data, ckpt) = sinkDirs()
-    drain(cells, Complete(_.write.mode("overwrite").parquet(data)), data, ckpt)
-    val drained = readSink(s, data, cells.schema)
+    val drained = drain(cells, Complete())
     val wh = org.apache.spark.sql.expressions.Window.partitionBy("hour")
       .orderBy("cents")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -865,8 +819,6 @@ object Streams {
       .agg(count(lit(1)).as("wau"))
       .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("wau"))
-    val (data, ckpt) = sinkDirs()
-    drain(agg, Append, data, ckpt)
-    readSink(s, data, agg.schema).orderBy("day")
+    drain(agg, Append).orderBy("day")
   }
 }

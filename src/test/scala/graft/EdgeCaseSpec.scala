@@ -26,8 +26,9 @@ class EdgeCaseSpec extends AnyFunSuite {
     dir.toString
   }
 
-  // a representative query per operator family (streaming + the I/O
-  // roundtrips excluded: the file-source machinery needs real files)
+  // a representative query per operator family, and every stream flavor
+  // (the I/O roundtrips excluded: their file-source machinery needs real
+  // files)
   private val families = Seq(
     "q_wordcount", "q_grouped_agg", "q_join_multi", "q_window_rank",
     "q_dedup_exact", "q_dedup_ngram", "q_dedup_minhash", "q_dedup_clusters",
@@ -57,14 +58,33 @@ class EdgeCaseSpec extends AnyFunSuite {
     // round-8 wave: data selection & evaluation
     "q_dsir", "q_rank_fusion", "q_source_similarity", "q_langid_eval",
     "q_quality_sweep", "q_lsh_pr_sweep", "q_stream_lsh_ingest",
-    "q_multimodal_dedup", "q_dataset_card")
+    "q_multimodal_dedup", "q_dataset_card",
+    // the remaining stream flavors (q_stream_hll has its own case below:
+    // its empty-input answer is one estimate row)
+    "q_stream_window_wm", "q_stream_sessions", "q_stream_static_join",
+    "q_stream_stream_join", "q_stream_cdc_dedup", "q_stream_domain_cap",
+    "q_stream_pps_sample", "q_stream_lsh_admit", "q_stream_gap_fill",
+    "q_stream_active_users", "q_stream_percentile", "q_stream_changepoint",
+    "q_stream_drift")
+
+  /** A stream flavor's zero-row answer must carry the columns and types
+    * of its answer on real data (nullability aside): the zero-batch
+    * read-back builds its frame from a schema, not from sink files. */
+  private def assertStreamSchema(name: String, empty: org.apache.spark.sql.DataFrame): Unit =
+    if (name.startsWith("q_stream_")) {
+      def cols(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+      assert(cols(empty) === cols(SparkEntry.queries(name)(spark, SparkTestSession.Sf)),
+        s"$name zero-row schema")
+    }
 
   // per-family registered tests: one broken family fails by name instead
   // of aborting the whole empty-input sweep
   families.foreach { name =>
     test(s"$name runs on zero-row inputs") {
-      val n = SparkEntry.queries(name)(spark, emptyDir).count()
+      val df = SparkEntry.queries(name)(spark, emptyDir)
+      val n = df.count()
       assert(n === 0L, s"$name returned $n rows on empty input")
+      assertStreamSchema(name, df)
     }
   }
 
@@ -73,5 +93,16 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(r.length === 1)
     assert(r.head.getLong(0) === 0L && r.head.getLong(1) === 0L &&
            r.head.getLong(2) === 0L && r.head.getDouble(3) === 0.0)
+  }
+
+  test("stream HLL of an empty corpus is the all-zero-register estimate row") {
+    // 256 empty registers: harmonic sum 256, so the raw estimate is
+    // floor(0.7213 / (1 + 1.079/256) * 65536 / 256) = 183
+    val df = SparkEntry.queries("q_stream_hll")(spark, emptyDir)
+    val r = df.collect()
+    assert(r.length === 1)
+    assert(r.head.getLong(0) === 183L && r.head.getLong(1) === 256L &&
+           r.head.getLong(2) === 0L)
+    assertStreamSchema("q_stream_hll", df)
   }
 }
