@@ -255,17 +255,9 @@ object LshStreams {
     // per-key work scales with the increment on a real deployment, and
     // resume requires a constant lane count across runs — this constant
     // is part of the checkpoint contract.
-    //
-    // In TTL mode the engine runs under TimeMode.ProcessingTime, and every
-    // no-data batch ADVANCES processing time — which, with TTL state live,
-    // makes the engine schedule another no-data batch: an infinite
-    // instant-batch loop under AvailableNow (observed: 5,600+ committed
-    // no-data batches before the kill). This stream has no watermark, so
-    // the finalizing no-data batch contributes nothing here — the TTL
-    // drain runs without it.
     val drained = Streams.drain(out,
       if (singleBatch) Streams.AppendOneBatch else Streams.Append, lanes = lanes,
-      rocksDb = true, noDataBatches = ttlMs.isEmpty, dirs = (data, ckpt))
+      rocksDb = true, dirs = (data, ckpt))
     // DURABLE ADMIT INDEX (`spark.graft.stream.admitIndexPath`, round 11):
     // the RocksDB carrier state is CHECKPOINT-scoped — a wiped checkpoint,
     // an index migration, or a fresh ingest pipeline loses every prior

@@ -87,8 +87,9 @@ object Streams {
                                                format: String = "parquet") extends Sink
 
   /** Run `out` one-shot (`Trigger.AvailableNow`: every available batch,
-    * then the finalizing no-data batch) into `sink`, block until it
-    * terminates, and return what the sink holds, read on `out`'s session.
+    * then the finalizing no-data batch where [[runsNoDataBatch]] says an
+    * operator can still emit) into `sink`, block until it terminates, and
+    * return what the sink holds, read on `out`'s session.
     * Every streaming flavor starts here and owns no file of its own:
     *
     *   - `dirs` is the (sink data, checkpoint) pair. By default it is a
@@ -111,10 +112,9 @@ object Streams {
     *     state-store partitions. Per-partition store setup dominates these
     *     fixture-sized micro-batches (2 lanes measured ~15% faster than 4,
     *     which beat 8); on a real cluster it scales with key cardinality.
-    *   - `noDataMicroBatches.enabled = noDataBatches`. The append-mode
-    *     flavors rely on the finalizing no-data batch to advance the
-    *     watermark past the last input; without it they would silently
-    *     emit fewer rows, not fail.
+    *   - `noDataMicroBatches.enabled = runsNoDataBatch(out)`, derived
+    *     from the plan: on only where a stateful operator emits when the
+    *     watermark passes the last input.
     *   - the RocksDB state-store provider when `rocksDb` is set
     *     (`transformWithState` requires it).
     *   - `spark.sql.artifact.isolation.enabled = false`, unless the
@@ -136,7 +136,7 @@ object Streams {
     * therefore never observed changed outside `start()`. A resumed
     * checkpoint keeps the lane count and provider it was created with. */
   private[streaming] def drain(out: Dataset[_], sink: Sink, lanes: Int = 2,
-                               rocksDb: Boolean = false, noDataBatches: Boolean = true,
+                               rocksDb: Boolean = false,
                                dirs: (String, String) = sinkDirs()): DataFrame = {
     val (data, ckpt) = dirs
     val s = out.sparkSession
@@ -163,7 +163,7 @@ object Streams {
         }
     }
     val policy = Seq("spark.sql.shuffle.partitions" -> lanes.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) ++
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> runsNoDataBatch(out).toString) ++
       Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // getOption would report a registered key's default as set, and the
@@ -194,6 +194,51 @@ object Streams {
     if (!new java.io.File(data).exists()) empty(schema)
     else if (format == "parquet") s.read.schema(schema).parquet(data)
     else s.read.format(format).load(data)
+  }
+
+  /** Whether [[drain]] runs the finalizing no-data micro-batch for `out`,
+    * decided on its analyzed plan. That batch reads no input: it only moves
+    * the watermark past the last input, so it matters only where a
+    * stateful operator can emit a row when the watermark moves.
+    *
+    *   - No `EventTimeWatermark` in the plan: no batch, since nothing can
+    *     close. This also covers the admit stream's TTL mode
+    *     (`TimeMode.ProcessingTime`): there every no-data batch advances
+    *     processing time, which with live TTL state schedules another one,
+    *     an endless loop under `AvailableNow` (5 600+ committed no-data
+    *     batches before the kill).
+    *   - A watermark is present: run it, unless every stateful operator
+    *     emits only when an input row arrives. Those are an inner join of
+    *     two streams, `Deduplicate` (`dropDuplicates`) and
+    *     `DeduplicateWithinWatermark`; their no-data batch only evicts
+    *     state from a checkpoint that is thrown away. Every other stateful
+    *     node keeps the batch: an aggregate (window and session window
+    *     included) emits its closed groups then, an outer or semi join its
+    *     expired unmatched rows, `flatMapGroupsWithState` and
+    *     `transformWithState` their timers. So does any streaming node the
+    *     match below does not list as stateless (projections, filters,
+    *     sources, unions, typed maps, generators, a join with a static
+    *     side). Without the batch these would silently emit fewer rows,
+    *     not fail.
+    *   - Complete sinks: Spark never schedules a no-data batch for a
+    *     complete-mode aggregate, so the answer changes nothing there.
+    *
+    * A skipped batch leaves the final watermark out of the offset log.
+    * Only a resumed checkpoint could see that, and the one caller that
+    * resumes, [[LshStreams.streamLshAdmitAt]], has no watermark. */
+  private[graft] def runsNoDataBatch(out: Dataset[_]): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val plan = out.queryExecution.analyzed
+    plan.exists(_.isInstanceOf[EventTimeWatermark]) && plan.exists {
+      case p if !p.isStreaming => false
+      case j: Join => j.left.isStreaming && j.right.isStreaming && j.joinType != Inner
+      case _: Deduplicate | _: DeduplicateWithinWatermark | _: EventTimeWatermark |
+           _: Project | _: Filter | _: SubqueryAlias | _: Union | _: LeafNode |
+           _: SerializeFromObject | _: DeserializeToObject | _: MapElements |
+           _: TypedFilter | _: Generate => false
+      case _ => true
+    }
   }
 
   /** Fresh (data, checkpoint) dirs for a one-shot file sink — registered
@@ -252,9 +297,9 @@ object Streams {
     * emits a window only once its end is at or below the final watermark
     * (max event time − 1 h) — the closed-window contract a production
     * stream appends to its sink, verified here against a batch oracle that
-    * reproduces exactly the closed set. (`processAllAvailable` runs the
-    * finalizing no-data batch that advances the watermark past the last
-    * input, closing every eligible window.) */
+    * reproduces exactly the closed set. (The aggregate keeps [[drain]]'s
+    * finalizing no-data batch, which advances the watermark past the last
+    * input and closes every eligible window before `AvailableNow` ends.) */
   def streamWindowWatermarked(s: SparkSession, dir: String): DataFrame = {
     val stream = eventStream(s, dir)
     val agg = stream

@@ -1080,6 +1080,89 @@ class StreamsSpec extends AnyFunSuite {
     assert(org.apache.spark.sql.GraftShims.isolatedJobs(s))
   }
 
+  test("the finalizing no-data batch runs only where an operator can emit on the watermark") {
+    import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues}
+    import spark.implicits._
+    def rate(ts: String) = spark.readStream.format("rate").load()
+      .select(col("value").as(s"k_$ts"), col("timestamp").as(ts))
+    def wm(ts: String) = rate(ts).withWatermark(ts, "1 hour")
+    val cond = col("k_l") === col("k_r") && col("r") >= col("l") &&
+      col("r") <= col("l") + expr("INTERVAL 30 MINUTES")
+    val inner = wm("l").join(wm("r"), cond)
+    class Keys extends StatefulProcessor[Long, (Long, java.sql.Timestamp), Long] {
+      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = ()
+      override def handleInputRows(key: Long, rows: Iterator[(Long, java.sql.Timestamp)],
+                                   timerValues: TimerValues): Iterator[Long] = Iterator(key)
+    }
+    val processingTime = rate("t").as[(Long, java.sql.Timestamp)].groupByKey(_._1 % 4)
+      .transformWithState(new Keys, TimeMode.ProcessingTime(), OutputMode.Append())
+    val skip = Seq(
+      "an inner stream-stream join" -> inner,
+      "dropDuplicates with a watermark" -> wm("t").dropDuplicates("k_t", "t"),
+      "dropDuplicatesWithinWatermark" -> wm("t").dropDuplicatesWithinWatermark("k_t"),
+      "no watermark: an aggregate" -> rate("t").groupBy("k_t").count(),
+      "no watermark: a processing-time transformWithState" -> processingTime)
+    val keep = Seq(
+      "a left outer join" -> wm("l").join(wm("r"), cond, "leftOuter"),
+      "an append-mode window aggregate" -> wm("t").groupBy(window(col("t"), "1 hour")).count(),
+      "a session_window aggregate" ->
+        wm("t").groupBy(session_window(col("t"), "10 minutes")).count(),
+      "an inner join feeding a window aggregate" ->
+        inner.groupBy(window(col("l"), "1 hour")).count())
+    skip.foreach { case (what, df) => assert(!Streams.runsNoDataBatch(df), what) }
+    keep.foreach { case (what, df) => assert(Streams.runsNoDataBatch(df), what) }
+  }
+
+  test("the flavors that skip the no-data batch give the same rows with it") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    def events = Tables.normalizeEvents(spark.readStream
+      .schema(Tables.eventsRaw(spark, sf).schema)
+      .option("pathGlobFilter", "events.parquet").parquet(sf))
+    // drains `df` with the no-data batch on and returns its rows in order
+    def withNoDataBatch(df: DataFrame, order: String*): Seq[org.apache.spark.sql.Row] = {
+      val name = "graft_nodata_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_nodata")
+      val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+      val prev = spark.conf.getAll.get(key) // getOption would pin the default
+      spark.conf.set(key, "true")
+      try {
+        val q = df.writeStream.format("memory").queryName(name).outputMode("append")
+          .option("checkpointLocation", ckpt.toString).trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally q.stop()
+        assert(q.recentProgress.last.numInputRows === 0L, "no no-data batch ran")
+        spark.table(name).orderBy(order.map(col): _*).collect().toSeq
+      } finally {
+        prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        spark.catalog.dropTempView(name)
+        org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+      }
+    }
+    val views = events.filter(col("event_type") === "view")
+      .select(col("user_id"), col("ts").as("view_ts"), col("event_id").as("view_id"))
+      .withWatermark("view_ts", "1 hour")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
+              col("event_id").as("purchase_id"))
+      .withWatermark("purchase_ts", "1 hour")
+    val joined = views.join(purchases,
+        col("user_id") === col("p_user") &&
+        col("purchase_ts") >= col("view_ts") &&
+        col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
+      .select(col("user_id"), col("view_id"), col("purchase_id"))
+    val join = Streams.streamStreamJoin(spark, sf).collect().toSeq
+    assert(join.nonEmpty)
+    assert(withNoDataBatch(joined, "user_id", "view_id", "purchase_id") === join)
+    val deduped = events
+      .select(col("user_id"), date_trunc("minute", col("ts")).as("m"))
+      .withWatermark("m", "1 hour")
+      .dropDuplicates("user_id", "m")
+      .select(col("user_id"), date_format(col("m"), "yyyy-MM-dd HH:mm").as("minute"))
+    val dedup = Streams.streamDedup(spark, sf).collect().toSeq
+    assert(dedup.nonEmpty)
+    assert(withNoDataBatch(deduped, "user_id", "minute") === dedup)
+  }
+
   test("every declared stream drains on its state lanes and leaves the session conf unchanged") {
     import java.util.UUID
     import java.util.concurrent.ConcurrentLinkedQueue
@@ -1089,11 +1172,14 @@ class StreamsSpec extends AnyFunSuite {
     val started = new ConcurrentLinkedQueue[UUID]()
     val terminated = new ConcurrentLinkedQueue[UUID]()
     val partitions = new ConcurrentLinkedQueue[(UUID, Long)]()
+    val batches = new ConcurrentLinkedQueue[(UUID, Long, Long)]()
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.runId)
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
         e.progress.stateOperators.foreach(op =>
           partitions.add(e.progress.runId -> op.numShufflePartitions))
+        batches.add((e.progress.runId, e.progress.batchId, e.progress.numInputRows))
+      }
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
         terminated.add(e.runId)
     }
@@ -1123,6 +1209,14 @@ class StreamsSpec extends AnyFunSuite {
         val lanes = partitions.asScala.collect { case (id, n) if ids(id) => n }.toSet
         val expected = if (name == "q_stream_lsh_admit") 8L else 2L
         assert(lanes === Set(expected), s"$name state partitions")
+        // input rows per batch, in batch order: a finalizing no-data
+        // batch reads 0 rows
+        val rows = batches.asScala.toSeq.collect { case (id, b, n) if ids(id) => b -> n }
+          .sortBy(_._1).map(_._2)
+        if (Set("q_stream_stream_join", "q_stream_dedup")(name))
+          assert(rows.nonEmpty && !rows.contains(0L), s"$name ran a no-data batch: $rows")
+        if (Set("q_stream_window_wm", "q_stream_outer_join", "q_stream_active_users")(name))
+          assert(rows.lastOption.contains(0L), s"$name ended without a no-data batch: $rows")
       }
       // the declared admit entry refuses a split drain; the conf is
       // restored on that throwing path too
