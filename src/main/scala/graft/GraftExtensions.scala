@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.functions.PolyHashExpr
 
 /** The single registry of the engine's SQL-callable custom expressions —
   * consumed by BOTH registration paths ([[GraftExtensions]] for conf-built
@@ -10,8 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * can never drift apart. */
 object GraftFunctions {
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "poly_hash"      -> (es => graft.functions.PolyHashExpr(es.head, 31L, 1000000007L)),
-    "poly_hash2"     -> (es => graft.functions.PolyHashExpr(es.head, 131L, 1000000009L)),
+    "poly_hash"      -> (es => PolyHashExpr(es.head, PolyHashExpr.Base, PolyHashExpr.Mod)),
+    "poly_hash2"     -> (es => PolyHashExpr(es.head, PolyHashExpr.Base2, PolyHashExpr.Mod2)),
     "fold_dot"       -> (es => graft.functions.FoldDotProduct(es(0), es(1))),
     "fnv1a32"        -> (es => graft.functions.Fnv1aExpr(es.head)),
     "explode_ngrams" -> (es => graft.functions.NgramGenerator(es(0), es(1))),

@@ -1,15 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.functions._
 
 /** Shared column-level building blocks.
   *
-  * Everything here is built from `org.apache.spark.sql.functions` higher-order
-  * functions so the expressions stay inside whole-stage codegen — no Scala
-  * UDFs on the hot path. Each helper has an exact ANSI-SQL twin used by the
-  * DuckDB oracles (see [[graft.Oracles]]), which is why the hash/fold
-  * algorithms are simple and portable rather than Spark-internal (Murmur3).
+  * Everything here is built from `org.apache.spark.sql.functions` or from
+  * the native kernels in `VectorExpressions.scala` (this object is the one
+  * Column constructor of the hash and fold kernels), so the expressions
+  * stay inside whole-stage codegen — no Scala UDFs on the hot path. Each
+  * helper has an exact ANSI-SQL twin used by the DuckDB oracles (see
+  * [[graft.Oracles]]), which is why the hash/fold algorithms are simple
+  * and portable rather than Spark-internal (Murmur3).
   */
 object Fns {
 
@@ -38,6 +40,16 @@ object Fns {
           i => concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2))))
       .otherwise(array().cast("array<string>"))
 
+  /** Word-trigram array of a pre-tokenized array column: the 3-token
+    * shingles of the minhash family and the HLL census, empty below three
+    * tokens. */
+  def trigramsArr(t: Column): Column =
+    when(size(t) >= 3,
+        transform(sequence(lit(0), size(t) - 3),
+          i => concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2),
+            element_at(t, i + 3))))
+      .otherwise(array().cast("array<string>"))
+
   /** Unicode tokenizer: exact `unicode.IsLetter` semantics of the reference
     * (`/root/reference/src/mrapps/wc.go:23`) on any corpus, via the \p{L}
     * Unicode-letter property class — Java regex and DuckDB RE2 agree on
@@ -54,12 +66,12 @@ object Fns {
     * Used for document fingerprinting and SimHash token hashes; backed by
     * the codegen'd [[PolyHashExpr]]. */
   def polyHash(str: Column): Column =
-    VectorExpressions.polyHash(str, 31L, 1000000007L)
+    GraftShims.column(PolyHashExpr(GraftShims.expression(str), PolyHashExpr.Base, PolyHashExpr.Mod))
 
   /** Second independent polynomial hash (base 131 mod 1e9+9) for algorithms
     * needing two hash families (MinHash permutations via h1 + i*h2). */
   def polyHash2(str: Column): Column =
-    VectorExpressions.polyHash(str, 131L, 1000000009L)
+    GraftShims.column(PolyHashExpr(GraftShims.expression(str), PolyHashExpr.Base2, PolyHashExpr.Mod2))
 
   /** Dot product of two array<double> columns as a strict left-to-right fold,
     * so the result is bit-identical to the DuckDB oracle's
@@ -67,7 +79,8 @@ object Fns {
     * Backed by the codegen'd [[FoldDotProduct]] expression (the equivalent
     * `aggregate(zip_with(...))` composition is interpreted and ~20× slower
     * on the pairwise-similarity hot path). */
-  def dotD(a: Column, b: Column): Column = VectorExpressions.foldDot(a, b)
+  def dotD(a: Column, b: Column): Column =
+    GraftShims.column(FoldDotProduct(GraftShims.expression(a), GraftShims.expression(b)))
 
   /** L2 norm, same fold discipline as [[dotD]]. */
   def normD(a: Column): Column = sqrt(dotD(a, a))
@@ -75,7 +88,8 @@ object Fns {
   /** Squared Euclidean distance over two array<bigint> columns — the
     * codegen'd integer fold [[FoldSqDiff]]; order-independent and exact,
     * so any engine reproduces it bit-for-bit (the k-means oracle does). */
-  def sqDistL(a: Column, b: Column): Column = VectorExpressions.foldSqDiff(a, b)
+  def sqDistL(a: Column, b: Column): Column =
+    GraftShims.column(FoldSqDiff(GraftShims.expression(a), GraftShims.expression(b)))
 
   /** Cosine similarity between two array<double> columns. */
   def cosineD(a: Column, b: Column): Column = dotD(a, b) / (normD(a) * normD(b))
@@ -93,5 +107,6 @@ object Fns {
   /** Content-defined chunk boundary positions of a string column — the
     * codegen'd O(n) rolling-hash scan [[CdcBoundariesExpr]] (window 16,
     * boundary when window hash ≡ 0 mod 32). */
-  def cdcBoundaries(c: Column): Column = VectorExpressions.cdcBoundaries(c)
+  def cdcBoundaries(c: Column): Column =
+    GraftShims.column(CdcBoundariesExpr(GraftShims.expression(c)))
 }

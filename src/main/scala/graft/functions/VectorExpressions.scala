@@ -6,6 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftShims.AbsDataType
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+// The engine's native Catalyst kernels. One body per kernel: its
+// arithmetic lives in one method on its companion object, `nullSafeEval`
+// calls that method, and `doGenCode` is a single static call into it, so
+// the interpreted and the generated path cannot diverge. Each kernel has
+// one Column constructor: `Fns` for the hash and fold helpers,
+// `object VectorExpressions` for the rest.
 
 /** Strict left-to-right dot product over two array<double> columns as a
   * native Catalyst expression with whole-stage codegen.
@@ -29,33 +37,24 @@ case class FoldDotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "fold_dot_product"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FoldDotProduct.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.FoldDotProduct.fold($a, $b)")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object FoldDotProduct {
+  def fold(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
     while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Squared Euclidean distance Σ(aᵢ−bᵢ)² over two array<bigint> columns as
@@ -76,9 +75,18 @@ case class FoldSqDiff(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "fold_sq_diff"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FoldSqDiff.fold(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.FoldSqDiff.fold($a, $b)")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object FoldSqDiff {
+  def fold(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0L
     var i = 0
@@ -89,26 +97,6 @@ case class FoldSqDiff(left: Expression, right: Expression)
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = $a.getLong($i) - $b.getLong($i);
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Polynomial rolling hash h ← (h·base + byte) mod m over a string's bytes,
@@ -117,43 +105,45 @@ case class FoldSqDiff(left: Expression, right: Expression)
   * (the fixture corpus contract — TESTDATA charset is `[a-z0-9 .,]`);
   * multi-byte code points would diverge from the codepoint-based oracle. */
 case class PolyHashExpr(child: Expression, base: Long, mod: Long)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression {
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
   override def prettyName: String = "poly_hash"
 
-  override def nullSafeEval(v: Any): Any = {
-    val bs = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-    var h = 0L
-    var i = 0
-    while (i < bs.length) { h = (h * base + (bs(i) & 0xff)) % mod; i += 1 }
-    h
-  }
+  override def nullSafeEval(v: Any): Any =
+    PolyHashExpr.hash(v.asInstanceOf[UTF8String], base, mod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => {
-      val bs = ctx.freshName("bs")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      // CodegenContext keys helper methods by name — the name MUST be fresh
-      // per expression instance, or two PolyHashExpr with different
-      // base/mod would silently share one body.
-      val fname = ctx.freshName("graftPolyHash")
-      val method = ctx.addNewFunction(fname,
-        s"""
-           |private long $fname(org.apache.spark.unsafe.types.UTF8String s) {
-           |  byte[] $bs = s.getBytes();
-           |  long $h = 0L;
-           |  for (int $i = 0; $i < $bs.length; $i++) {
-           |    $h = ($h * ${base}L + ($bs[$i] & 0xff)) % ${mod}L;
-           |  }
-           |  return $h;
-           |}
-         """.stripMargin)
-      s"$method($c)"
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.PolyHashExpr.hash($c, ${base}L, ${mod}L)")
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** The engine's two polynomial hash families, named once: `poly_hash`
+  * (base 31 mod 1e9+7) and `poly_hash2` (base 131 mod 1e9+9). */
+object PolyHashExpr {
+  final val Base = 31L
+  final val Mod = 1000000007L
+  final val Base2 = 131L
+  final val Mod2 = 1000000009L
+
+  /** h ← (h·base + byte) mod `mod` over the bytes of `s`. The reduction
+    * waits until h·base + 255 could overflow: each step keeps h's residue,
+    * so the final `% mod` equals reducing at every byte, at a division per
+    * few bytes instead of per byte (`mod` is an argument, so the JIT cannot
+    * turn `% mod` into a multiplication as it does for a constant). */
+  def hash(s: UTF8String, base: Long, mod: Long): Long = {
+    val limit = (Long.MaxValue - 0xff) / base
+    val bs = s.getBytes
+    var h = 0L
+    var i = 0
+    while (i < bs.length) {
+      if (h > limit) h %= mod
+      h = h * base + (bs(i) & 0xff)
+      i += 1
+    }
+    h % mod
+  }
 }
 
 /** FNV-1a 32-bit hash of a string's bytes, codegen'd — the reference's
@@ -162,14 +152,22 @@ case class PolyHashExpr(child: Expression, base: Long, mod: Long)
   * value in a long; the oracle emulates the 32-bit wrap with
   * `(xor(h, c) * 16777619) % 4294967296` (exact in int64 for the ASCII
   * corpus, where byte ≡ codepoint). */
-case class Fnv1aExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+case class Fnv1aExpr(child: Expression) extends UnaryExpression {
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
   override def prettyName: String = "fnv1a32"
 
-  override def nullSafeEval(v: Any): Any = {
-    val bs = v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
+  override def nullSafeEval(v: Any): Any = Fnv1aExpr.hash(v.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Fnv1aExpr.hash($c)")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object Fnv1aExpr {
+  def hash(s: UTF8String): Long = {
+    val bs = s.getBytes
     var h = 2166136261L
     var i = 0
     while (i < bs.length) {
@@ -178,28 +176,6 @@ case class Fnv1aExpr(child: Expression)
     }
     h
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => {
-      val bs = ctx.freshName("bs")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val fname = ctx.freshName("graftFnv1a")
-      val method = ctx.addNewFunction(fname,
-        s"""
-           |private long $fname(org.apache.spark.unsafe.types.UTF8String s) {
-           |  byte[] $bs = s.getBytes();
-           |  long $h = 2166136261L;
-           |  for (int $i = 0; $i < $bs.length; $i++) {
-           |    $h = (($h ^ ($bs[$i] & 0xffL)) * 16777619L) & 0xffffffffL;
-           |  }
-           |  return $h;
-           |}
-         """.stripMargin)
-      s"$method($c)"
-    })
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Intersection size of two ASCENDING-sorted array<bigint> columns via a
@@ -225,47 +201,29 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "sorted_intersect_count"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SortedIntersectCount.count($a, $b)")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object SortedIntersectCount {
+  def count(x: ArrayData, y: ArrayData): Long = {
     val (nx, ny) = (x.numElements(), y.numElements())
-    var (i, j) = (0, 0)
+    var i = 0; var j = 0
     var c = 0L
     while (i < nx && j < ny) {
-      val (xv, yv) = (x.getLong(i), y.getLong(j))
+      val xv = x.getLong(i); val yv = y.getLong(j)
       if (xv == yv) { c += 1; i += 1; j += 1 }
       else if (xv < yv) i += 1
       else j += 1
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val c = ctx.freshName("c")
-      s"""
-         |int $nx = $a.numElements();
-         |int $ny = $b.numElements();
-         |int $i = 0, $j = 0;
-         |long $c = 0L;
-         |while ($i < $nx && $j < $ny) {
-         |  long $xv = $a.getLong($i);
-         |  long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $c++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Two-pointer merge INTERSECTION of two sorted `array<bigint>` columns —
@@ -325,7 +283,7 @@ case class CharHistExpr(child: Expression) extends UnaryExpression
   override def prettyName: String = "char_hist"
 
   override def nullSafeEval(v: Any): Any =
-    CharHistExpr.hist(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    CharHistExpr.hist(v.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
@@ -337,7 +295,7 @@ case class CharHistExpr(child: Expression) extends UnaryExpression
 object CharHistExpr {
   final val Buckets = 128
 
-  def hist(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def hist(s: UTF8String): ArrayData = {
     val str = s.toString
     val h = new Array[Long](Buckets)
     var i = 0
@@ -366,9 +324,18 @@ case class BagDistance(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "bag_distance"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    BagDistance.distance(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.BagDistance.distance($a, $b)")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object BagDistance {
+  def distance(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var pa = 0L
     var pb = 0L
@@ -380,27 +347,6 @@ case class BagDistance(left: Expression, right: Expression)
     }
     math.max(pa, pb)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      val pa = ctx.freshName("pa")
-      val pb = ctx.freshName("pb")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $pa = 0L; long $pb = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = $a.getLong($i) - $b.getLong($i);
-         |  if ($d > 0) { $pa += $d; } else { $pb -= $d; }
-         |}
-         |${ev.value} = java.lang.Math.max($pa, $pb);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Content-defined chunk boundaries (the rsync/LBFS rolling-hash trick):
@@ -428,7 +374,7 @@ case class CdcBoundariesExpr(child: Expression) extends UnaryExpression
 
   override def nullSafeEval(v: Any): Any =
     CdcBoundariesExpr.boundaries(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+      v.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
@@ -440,8 +386,8 @@ case class CdcBoundariesExpr(child: Expression) extends UnaryExpression
 object CdcBoundariesExpr {
   final val Window = 16
   final val Mask = 32
-  private final val P = 1000000007L
-  private final val B = 31L
+  private final val P = PolyHashExpr.Mod
+  private final val B = PolyHashExpr.Base
   /** B^(Window−1) mod P — the drop-term multiplier of the rolling update. */
   private final val Pw: Long = {
     var x = 1L; var k = 0
@@ -455,7 +401,7 @@ object CdcBoundariesExpr {
     * kept in a ring buffer for the drop term. For ASCII input every
     * codepoint equals its byte, so this is value-identical to the
     * byte-rolling formulation it replaces. */
-  def boundaries(s: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def boundaries(s: UTF8String): ArrayData = {
     val str = s.toString
     val out = new scala.collection.mutable.ArrayBuffer[Int]()
     val ring = new Array[Long](Window)
@@ -518,7 +464,7 @@ object MinhashSigExpr {
   private final val M = 2147483647L
 
   /** The signature array, or null for an empty shingle set. */
-  def sig(arr: ArrayData): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def sig(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return null
     val mins = new Array[Long](Perms)
@@ -531,8 +477,8 @@ object MinhashSigExpr {
       var i = 0
       while (i < bs.length) {
         val b = bs(i) & 0xff
-        h1 = (h1 * 31L + b) % 1000000007L
-        h2 = (h2 * 131L + b) % 1000000009L
+        h1 = (h1 * PolyHashExpr.Base + b) % PolyHashExpr.Mod
+        h2 = (h2 * PolyHashExpr.Base2 + b) % PolyHashExpr.Mod2
         i += 1
       }
       // h1 + 63·h2 < 6.4e10 — no overflow, operands non-negative, so the
@@ -550,18 +496,6 @@ object MinhashSigExpr {
 }
 
 object VectorExpressions {
-  /** Column wrapper for [[FoldDotProduct]]. */
-  def foldDot(a: Column, b: Column): Column =
-    GraftShims.column(FoldDotProduct(GraftShims.expression(a), GraftShims.expression(b)))
-
-  /** Column wrapper for [[FoldSqDiff]]. */
-  def foldSqDiff(a: Column, b: Column): Column =
-    GraftShims.column(FoldSqDiff(GraftShims.expression(a), GraftShims.expression(b)))
-
-  /** Column wrapper for [[PolyHashExpr]]. */
-  def polyHash(c: Column, base: Long, mod: Long): Column =
-    GraftShims.column(PolyHashExpr(GraftShims.expression(c), base, mod))
-
   /** Column wrapper for [[Fnv1aExpr]]. */
   def fnv1a(c: Column): Column =
     GraftShims.column(Fnv1aExpr(GraftShims.expression(c)))
@@ -573,10 +507,6 @@ object VectorExpressions {
   /** Column wrapper for [[SortedIntersect]]. */
   def sortedIntersect(a: Column, b: Column): Column =
     GraftShims.column(SortedIntersect(GraftShims.expression(a), GraftShims.expression(b)))
-
-  /** Column wrapper for [[CdcBoundariesExpr]]. */
-  def cdcBoundaries(c: Column): Column =
-    GraftShims.column(CdcBoundariesExpr(GraftShims.expression(c)))
 
   /** Column wrapper for [[CharHistExpr]]. */
   def charHist(c: Column): Column =

@@ -46,13 +46,7 @@ object Pipeline {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), Fns.tokensArr(col("text")).as("t"))
       .select(col("doc_id"), filter(col("t"), w => w =!= lit("")).as("t"))
-    d.select(col("doc_id"),
-        explode(when(size(col("t")) >= 3,
-            transform(sequence(lit(0), size(col("t")) - 3),
-              i => concat_ws(" ", element_at(col("t"), i + 1),
-                                  element_at(col("t"), i + 2),
-                                  element_at(col("t"), i + 3))))
-          .otherwise(array().cast("array<string>"))).as("sh"))
+    d.select(col("doc_id"), explode(Fns.trigramsArr(col("t"))).as("sh"))
   }
 
   /** Distinct word 3-gram shingle set per document. Shingles seen in more
@@ -1125,31 +1119,56 @@ object Pipeline {
     * hash suffix (h div 256), capped at 23 — P(rho ≥ k) = 2^−(k−1), the
     * Flajolet–Martin geometric observable. A 22-branch CASE chain, so
     * both engines evaluate the identical integer expression. */
-  private[graft] def hllRhoOf(suffix: Column): Column =
+  private def hllRho(suffix: Column): Column =
     (1 to 22).foldLeft(when(suffix === 0L, lit(23L))) { case (acc, i) =>
       acc.when(pmod(suffix, lit(1L << i)) === lit(1L << (i - 1)), lit(i.toLong))
     }.otherwise(lit(23L))
-  private def hllRho(suffix: Column): Column = hllRhoOf(suffix)
 
-  /** HLL register table (bucket 0..255 → max rho) of a string stream —
-    * linear in its input and max-mergeable (shard registers max-merge to
-    * the corpus registers; asserted in `PipelineSpec`). The poly hash is
-    * scrambled through an odd-multiplier affine map into 30 bits first:
-    * polyHash is near-identity on short strings (a 1-letter token hashes
-    * below 256, zeroing the rank suffix), and the odd multiplier is
-    * invertible mod 2³⁰ so the scramble stays collision-free. Empty
-    * buckets surface as rho 0 so the table is always exactly 256 rows. */
-  private[graft] def hllRegistersOf(words: DataFrame): DataFrame = {
-    val regs = words
+  /** The 3-token shingles of a documents frame, batch or streaming, one
+    * per row in column `word` — the HLL census's input. */
+  private[graft] def hllWords(docs: DataFrame): DataFrame =
+    docs.select(Fns.words(col("text")).as("t"))
+      .select(explode(Fns.trigramsArr(col("t"))).as("word"))
+
+  /** The observed HLL registers (bucket → max rho, only the buckets some
+    * word hit) of a string frame, batch or streaming — linear in its
+    * input and max-mergeable (shard registers max-merge to the corpus
+    * registers; asserted in `PipelineSpec`). The poly hash is scrambled
+    * through an odd-multiplier affine map into 30 bits first: polyHash is
+    * near-identity on short strings (a 1-letter token hashes below 256,
+    * zeroing the rank suffix), and the odd multiplier is invertible mod
+    * 2³⁰ so the scramble stays collision-free. */
+  private[graft] def hllObserved(words: DataFrame): DataFrame =
+    words
       .select(pmod(Fns.polyHash(col("word")) * lit(2654435761L) + lit(40503L),
         lit(1073741824L)).as("h"))
       .select(pmod(col("h"), lit(256L)).as("bucket"),
         hllRho(expr("h div 256")).as("rho"))
       .groupBy("bucket").agg(max(col("rho")).as("m"))
-    words.sparkSession.range(0, 256).toDF("bucket")
+
+  /** [[hllObserved]] registers with the empty buckets as rho 0, so the
+    * table is always exactly 256 rows. */
+  private[graft] def hllFilled(regs: DataFrame): DataFrame =
+    regs.sparkSession.range(0, 256).toDF("bucket")
       .join(regs, Seq("bucket"), "left")
       .na.fill(0L, Seq("m"))
-  }
+
+  /** HLL register table (bucket 0..255 → max rho) of a string frame. */
+  private[graft] def hllRegistersOf(words: DataFrame): DataFrame =
+    hllFilled(hllObserved(words))
+
+  /** Harmonic sum, empty-register count and max rank of a 256-row
+    * register table, as one row. */
+  private[graft] def hllStats(regs: DataFrame): DataFrame =
+    regs.agg(
+      sum(pow(lit(2.0), -col("m").cast("double"))).as("harm"),
+      sum(when(col("m") === 0L, 1L).otherwise(0L)).as("n_zero"),
+      max(col("m")).as("max_rho"))
+
+  /** The raw 256-register estimate over [[hllStats]]' `harm`. */
+  private[graft] def hllEstimate: Column =
+    floor(lit(0.7213) / (lit(1.0) + lit(1.079) / lit(256.0)) *
+      lit(65536.0) / col("harm")).cast("long")
 
   /** Deterministic HyperLogLog census — the exactly-replayable twin of
     * the engine-internal `approx_count_distinct` sketch (`q_approx_
@@ -1176,23 +1195,11 @@ object Pipeline {
     // The 31-word fixture VOCABULARY would sit in the sparse regime
     // where HLL needs the linear-counting correction, whose ln() is not
     // cross-engine reproducible.
-    val words = Tables.documents(s, dir)
-      .select(Fns.words(col("text")).as("t"))
-      .select(explode(when(size(col("t")) >= 3,
-          transform(sequence(lit(0), size(col("t")) - 3),
-            i => concat_ws(" ", element_at(col("t"), i + 1),
-              element_at(col("t"), i + 2), element_at(col("t"), i + 3))))
-        .otherwise(array().cast("array<string>"))).as("word"))
-    val regs = hllRegistersOf(words)
-    val stats = regs.agg(
-      sum(pow(lit(2.0), -col("m").cast("double"))).as("harm"),
-      sum(when(col("m") === 0L, 1L).otherwise(0L)).as("n_zero"),
-      max(col("m")).as("max_rho"))
+    val words = hllWords(Tables.documents(s, dir))
+    val stats = hllStats(hllRegistersOf(words))
     val exact = words.distinct().agg(count(lit(1)).as("n_exact"))
     exact.crossJoin(broadcast(stats))
-      .withColumn("est_hll",
-        floor(lit(0.7213) / (lit(1.0) + lit(1.079) / lit(256.0)) *
-          lit(65536.0) / col("harm")).cast("long"))
+      .withColumn("est_hll", hllEstimate)
       .select(col("n_exact"), col("est_hll"), col("n_zero"), col("max_rho"),
         expr("abs(est_hll - n_exact) * 1000000L div n_exact").as("err_ppm"))
   }
@@ -3012,7 +3019,7 @@ private[graft] object LshPlanes {
     (0 until Dim).map(d => (math.floorMod(mix(p * Dim + d), 1000) - 500) / 512.0)
 
   // Planes materialized driver-side as literal arrays: the per-row work is
-  // one codegen'd foldDot per plane instead of interpreted regeneration.
+  // one codegen'd `Fns.dotD` per plane instead of interpreted regeneration.
   private def plane(p: Int): Column = array(planeValues(p).map(lit): _*)
 
   private def bucketFor(v: Column, t: Int): Column = {

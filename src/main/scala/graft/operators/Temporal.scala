@@ -387,12 +387,19 @@ object Temporal {
     * every window after that runs over the CELL table (hours, not
     * events) — the bounded-domain discipline of the equi-depth ranks.
     * At 100 TB, H is still just the number of hours in the corpus. */
-  def changepoint(s: SparkSession, dir: String): DataFrame = {
+  def changepoint(s: SparkSession, dir: String): DataFrame =
+    changepointOf(hourlyCells(Tables.events(s, dir)))
+
+  /** Hourly event-count cells `(h, c)` of an events frame, batch or
+    * streaming. */
+  private[graft] def hourlyCells(events: DataFrame): DataFrame =
+    events.groupBy(date_trunc("hour", col("ts")).as("h"))
+      .agg(count(lit(1)).as("c"))
+
+  /** The max-CUSUM split row of an [[hourlyCells]] table. */
+  private[graft] def changepointOf(cells: DataFrame): DataFrame = {
     val w = Window.orderBy("h")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cells = Tables.events(s, dir)
-      .groupBy(date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
     val tot = cells.agg(sum(col("c")).as("s"), count(lit(1)).as("hh"))
     val scored = cells.crossJoin(broadcast(tot))
       .withColumn("idx", row_number().over(Window.orderBy("h")).cast("long"))

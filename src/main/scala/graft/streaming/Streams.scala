@@ -349,22 +349,8 @@ object Streams {
     * so join state is purged once the interval can no longer match — the
     * bounded-state form; inner-join matches emit as they arrive, so one
     * pass over the fixture equals the batch interval join. */
-  def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    def src = eventStream(s, dir)
-    val views = src.filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts").as("view_ts"), col("event_id").as("view_id"))
-      .withWatermark("view_ts", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-              col("event_id").as("purchase_id"))
-      .withWatermark("purchase_ts", "1 hour")
-    val joined = views.join(purchases,
-        col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("view_ts") &&
-        col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
-      .select(col("user_id"), col("view_id"), col("purchase_id"))
-    drain(joined, Append).orderBy("user_id", "view_id", "purchase_id")
-  }
+  def streamStreamJoin(s: SparkSession, dir: String): DataFrame =
+    viewPurchaseJoin(s, dir, "inner")
 
   /** Stream-stream LEFT OUTER interval join: like [[streamStreamJoin]],
     * but views with no qualifying purchase are also emitted (null-padded,
@@ -377,7 +363,13 @@ object Streams {
     * still inside that horizon are retained as state, not emitted — the
     * bounded-state outer-join contract. The oracle reproduces exactly
     * this closed set: inner matches ∪ expired unmatched views. */
-  def streamOuterJoin(s: SparkSession, dir: String): DataFrame = {
+  def streamOuterJoin(s: SparkSession, dir: String): DataFrame =
+    viewPurchaseJoin(s, dir, "leftOuter")
+
+  /** The watermarked views/purchases interval join of [[streamStreamJoin]]
+    * (`inner`) and [[streamOuterJoin]] (`leftOuter`, unmatched views
+    * carry purchase_id -1), drained and sorted. */
+  private def viewPurchaseJoin(s: SparkSession, dir: String, joinType: String): DataFrame = {
     def src = eventStream(s, dir)
     val views = src.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("view_ts"), col("event_id").as("view_id"))
@@ -386,13 +378,15 @@ object Streams {
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
               col("event_id").as("purchase_id"))
       .withWatermark("purchase_ts", "1 hour")
+    val purchaseId =
+      if (joinType == "inner") col("purchase_id")
+      else coalesce(col("purchase_id"), lit(-1L)).as("purchase_id")
     val joined = views.join(purchases,
         col("user_id") === col("p_user") &&
         col("purchase_ts") >= col("view_ts") &&
         col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"),
-        "leftOuter")
-      .select(col("user_id"), col("view_id"),
-        coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"))
+        joinType)
+      .select(col("user_id"), col("view_id"), purchaseId)
     drain(joined, Append).orderBy("user_id", "view_id", "purchase_id")
   }
 
@@ -736,33 +730,12 @@ object Streams {
     * fixed-width rows no matter how much data arrives: the reason HLL
     * (not a distinct set) is the production shape for this monitor. */
   def streamHll(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Fns
-    val shingled = documentsStream(s, dir)
-      .select(Fns.words(col("text")).as("t"))
-      .select(explode(when(size(col("t")) >= 3,
-          transform(sequence(lit(0), size(col("t")) - 3),
-            i => concat_ws(" ", element_at(col("t"), i + 1),
-              element_at(col("t"), i + 2), element_at(col("t"), i + 3))))
-        .otherwise(array().cast("array<string>"))).as("word"))
-    val regs = shingled
-      .select(pmod(Fns.polyHash(col("word")) * lit(2654435761L) + lit(40503L),
-        lit(1073741824L)).as("h"))
-      .select(pmod(col("h"), lit(256L)).as("bucket"),
-        graft.operators.Pipeline.hllRhoOf(expr("h div 256")).as("rho"))
-      .groupBy("bucket").agg(max(col("rho")).as("m"))
-    val drained = drain(regs, Complete())
+    import graft.operators.Pipeline.{hllEstimate, hllFilled, hllObserved, hllStats, hllWords}
+    val drained = drain(hllObserved(hllWords(documentsStream(s, dir))), Complete())
     // post-drain: fill the never-observed buckets and reduce to the
-    // single-row estimate — identical arithmetic to the batch census
-    val full = s.range(0, 256).toDF("bucket")
-      .join(drained, Seq("bucket"), "left").na.fill(0L, Seq("m"))
-    full.agg(
-        sum(pow(lit(2.0), -col("m").cast("double"))).as("harm"),
-        sum(when(col("m") === 0L, 1L).otherwise(0L)).as("n_zero"),
-        max(col("m")).as("max_rho"))
-      .select(
-        floor(lit(0.7213) / (lit(1.0) + lit(1.079) / lit(256.0)) *
-          lit(65536.0) / col("harm")).cast("long").as("est_hll"),
-        col("n_zero"), col("max_rho"))
+    // single-row estimate — the batch census's own formulas
+    hllStats(hllFilled(drained))
+      .select(hllEstimate.as("est_hll"), col("n_zero"), col("max_rho"))
   }
 
   /** 19th flavor — live changepoint monitor: the streaming twin of
@@ -775,29 +748,8 @@ object Streams {
     * split row — the property that lets an alerting pipeline page on the
     * streaming result and trust the batch backfill to agree. */
   def streamChangepoint(s: SparkSession, dir: String): DataFrame = {
-    val cells = eventStream(s, dir)
-      .groupBy(date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
-    val drained = drain(cells, Complete())
-    val W = org.apache.spark.sql.expressions.Window
-    val w = W.orderBy("h").rowsBetween(W.unboundedPreceding, W.currentRow)
-    val tot = drained.agg(sum(col("c")).as("s"), count(lit(1)).as("hh"))
-    drained.crossJoin(broadcast(tot))
-      .withColumn("idx", row_number().over(W.orderBy("h")).cast("long"))
-      .withColumn("sh", sum(col("c")).over(w))
-      .withColumn("dev", abs(expr(
-        "cast(sh as decimal(38,0)) * hh - cast(idx as decimal(38,0)) * s")))
-      .withColumn("best", max(struct(col("dev"),
-        (-col("idx")).as("ni"))).over(W.partitionBy(lit(1))))
-      .filter(col("idx") === -col("best.ni"))
-      .select(date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("split_hour"),
-        col("sh").as("n_before"), (col("s") - col("sh")).as("n_after"),
-        expr("sh * 1000L div idx").as("rate_before_milli"),
-        when(col("hh") === col("idx"), lit(0L))
-          .otherwise(expr("(s - sh) * 1000L div (hh - idx)"))
-          .as("rate_after_milli"),
-        expr("cast(cast(best.dev as decimal(38,0)) * 1000000 div" +
-          " (cast(s as decimal(38,0)) * hh) as bigint)").as("dev_ppm"))
+    import graft.operators.Temporal.{changepointOf, hourlyCells}
+    changepointOf(drain(hourlyCells(eventStream(s, dir)), Complete()))
   }
 
   /** 18th flavor — streaming EXACT percentile monitor: the live

@@ -117,7 +117,9 @@ object MetaFiles {
 
   def read(fs: FileSystem, f: Path): Option[String] =
     if (!fs.exists(f)) None
-    else {
+    // the open is inside the try: a concurrent publish's delete-then-rename
+    // can remove `f` between the exists check and the open
+    else try {
       val in = fs.open(f)
       try {
         val buf = new java.io.ByteArrayOutputStream()
@@ -126,9 +128,8 @@ object MetaFiles {
         while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
         Some(new String(buf.toByteArray,
           java.nio.charset.StandardCharsets.UTF_8).trim).filter(_.nonEmpty)
-      } catch { case _: java.io.IOException => None }
-      finally in.close()
-    }
+      } finally in.close()
+    } catch { case _: java.io.IOException => None }
 
   /** Visible DATA files directly inside `dir` (never a directory read:
     * callers must not partition-discover subdirectories, and commit

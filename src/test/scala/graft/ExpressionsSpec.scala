@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{Fns, VectorExpressions}
@@ -11,14 +12,58 @@ class ExpressionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  test("FoldDotProduct == aggregate(zip_with(...)) bitwise") {
-    val df = Seq(
+  // the kernels' inputs, shared by their own cases and the generated-path case
+  private def dotFrame = Seq(
       (Seq(1.0, 2.5, -3.0), Seq(0.5, -1.0, 2.0)),
       (Seq(0.1, 0.2, 0.3), Seq(0.3, 0.2, 0.1)),
       (Seq.empty[Double], Seq.empty[Double])
     ).toDF("a", "b")
+  private def hashFrame = Seq("the fast key", "abc", "").toDF("s")
+  private def fnvFrame = Seq("", "a", "foobar").toDF("s")
+  private def sortedSetsFrame = {
+    val rnd = new scala.util.Random(7)
+    Seq.fill(200)((
+      rnd.shuffle((0L to 50L).toList).take(rnd.nextInt(20)).sorted,
+      rnd.shuffle((0L to 50L).toList).take(rnd.nextInt(20)).sorted))
+      .toDF("a", "b")
+  }
+  private def intersectFrame = Seq(
+      (Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 5L, 10L)),
+      (Seq.empty[Long], Seq(1L)),
+      (Seq(1L, 2L), Seq(3L, 4L)),
+      (Seq(7L), Seq(7L))).toDF("a", "b")
+  private val cdcAscii = Seq.tabulate(400)(i => ('a' + i % 26).toChar).mkString
+  private val cdcAstral = cdcAscii.map(c => new String(
+    Character.toChars(c.toInt + 0x1D400 - 'a'.toInt))).mkString
+  private def namePairsFrame = {
+    val rnd = new scala.util.Random(11)
+    def name() = "Entity#" + Seq.fill(9)(rnd.nextInt(10)).mkString
+    def mutate(s: String): String = {
+      val ops = rnd.nextInt(9)
+      (0 until ops).foldLeft(s) { (t, _) =>
+        val i = rnd.nextInt(t.length)
+        rnd.nextInt(3) match {
+          case 0 => t.updated(i, ('a' + rnd.nextInt(26)).toChar).mkString // sub
+          case 1 => t.take(i) + ('0' + rnd.nextInt(10)).toChar + t.drop(i) // ins
+          case _ => t.take(i) + t.drop(i + 1)                              // del
+        }
+      }
+    }
+    Seq.fill(300)((name(), if (rnd.nextBoolean()) name() else null))
+      .map { case (a, b) => (a, if (b == null) mutate(a) else b) }
+      .toDF("a", "b")
+  }
+  private def shinglesFrame = Seq(
+      Seq("a b c", "b c d", "c d e"),
+      Seq("x y z"),
+      Seq("a b c", "a b c"), // duplicates: minima are multiplicity-blind
+      Seq.empty[String]
+    ).toDF("shs")
+
+  test("FoldDotProduct == aggregate(zip_with(...)) bitwise") {
+    val df = dotFrame
     val rows = df.select(
-      VectorExpressions.foldDot(col("a"), col("b")).as("fast"),
+      Fns.dotD(col("a"), col("b")).as("fast"),
       aggregate(zip_with(col("a"), col("b"), (x, y) => x * y), lit(0.0), (s, v) => s + v).as("slow")
     ).collect()
     rows.foreach { r =>
@@ -29,14 +74,14 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("FoldDotProduct known value and fold order") {
     val got = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))).toDF("a", "b")
-      .select(VectorExpressions.foldDot(col("a"), col("b"))).as[Double].head()
+      .select(Fns.dotD(col("a"), col("b"))).as[Double].head()
     assert(got === 32.0)
   }
 
   test("PolyHashExpr matches the character fold and differs across bases") {
     // regression: two instances with different base/mod in ONE projection
     // must not share a generated helper method
-    val rows = Seq("the fast key", "abc", "").toDF("s").select(
+    val rows = hashFrame.select(
       Fns.polyHash(col("s")).as("h1"),
       Fns.polyHash2(col("s")).as("h2"),
       aggregate(split(col("s"), ""), lit(0L),
@@ -58,18 +103,13 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("Fnv1aExpr matches the published FNV-1a 32 test vectors") {
     // "" -> offset basis; "a" -> 0xe40c292c; "foobar" -> 0xbf9cf968
-    val got = Seq("", "a", "foobar").toDF("s")
+    val got = fnvFrame
       .select(VectorExpressions.fnv1a(col("s"))).as[Long].collect()
     assert(got.toSeq === Seq(2166136261L, 0xe40c292cL, 0xbf9cf968L))
   }
 
   test("SortedIntersectCount == size(array_intersect) on random sorted sets") {
-    val rnd = new scala.util.Random(7)
-    val rows = Seq.fill(200)((
-      rnd.shuffle((0L to 50L).toList).take(rnd.nextInt(20)).sorted,
-      rnd.shuffle((0L to 50L).toList).take(rnd.nextInt(20)).sorted))
-    val df = rows.toDF("a", "b")
-    df.select(
+    sortedSetsFrame.select(
         VectorExpressions.sortedIntersectCount(col("a"), col("b")).as("fast"),
         size(array_intersect(col("a"), col("b"))).cast("long").as("slow"))
       .collect()
@@ -83,13 +123,7 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("sorted_intersect elements equal array_intersect on sorted sets") {
-    import spark.implicits._
-    val rows = Seq(
-      (Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 5L, 10L)),
-      (Seq.empty[Long], Seq(1L)),
-      (Seq(1L, 2L), Seq(3L, 4L)),
-      (Seq(7L), Seq(7L)))
-    rows.toDF("a", "b")
+    intersectFrame
       .select(
         VectorExpressions.sortedIntersect(col("a"), col("b")).as("fast"),
         array_intersect(col("a"), col("b")).as("slow"))
@@ -128,9 +162,7 @@ class ExpressionsSpec extends AnyFunSuite {
     // the same codepoint sequence shifted into multibyte space must yield
     // IDENTICAL boundary positions iff hashes fold codepoints (they differ
     // under byte-rolling: é is two UTF-8 bytes)
-    val ascii = Seq.tabulate(400)(i => ('a' + i % 26).toChar).mkString
-    val astral = ascii.map(c => new String(
-      Character.toChars(c.toInt + 0x1D400 - 'a'.toInt))).mkString
+    val (ascii, astral) = (cdcAscii, cdcAstral)
     val got = Seq((1L, ascii)).toDF("id", "s")
       .select(Fns.cdcBoundaries(col("s"))).collect().head.getSeq[Int](0)
     assert(got.nonEmpty, "fixture string produced no boundaries; lengthen it")
@@ -145,22 +177,7 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("bag_distance is a lossless lower bound on levenshtein") {
-    val rnd = new scala.util.Random(11)
-    def name() = "Entity#" + Seq.fill(9)(rnd.nextInt(10)).mkString
-    def mutate(s: String): String = {
-      val ops = rnd.nextInt(9)
-      (0 until ops).foldLeft(s) { (t, _) =>
-        val i = rnd.nextInt(t.length)
-        rnd.nextInt(3) match {
-          case 0 => t.updated(i, ('a' + rnd.nextInt(26)).toChar).mkString // sub
-          case 1 => t.take(i) + ('0' + rnd.nextInt(10)).toChar + t.drop(i) // ins
-          case _ => t.take(i) + t.drop(i + 1)                              // del
-        }
-      }
-    }
-    val pairs = Seq.fill(300)((name(), if (rnd.nextBoolean()) name() else null))
-      .map { case (a, b) => (a, if (b == null) mutate(a) else b) }
-    val rows = pairs.toDF("a", "b")
+    val rows = namePairsFrame
       .select(
         graft.functions.VectorExpressions.bagDistance(
           graft.functions.VectorExpressions.charHist(col("a")),
@@ -177,12 +194,7 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("MinhashSigExpr == the interpreted HOF composition, empty -> null") {
-    val df = Seq(
-      Seq("a b c", "b c d", "c d e"),
-      Seq("x y z"),
-      Seq("a b c", "a b c"), // duplicates: minima are multiplicity-blind
-      Seq.empty[String]
-    ).toDF("shs")
+    val df = shinglesFrame
     val slow = transform(sequence(lit(0), lit(63)), i =>
       array_min(zip_with(
         transform(col("shs"), sh => Fns.polyHash(sh)),
@@ -200,6 +212,65 @@ class ExpressionsSpec extends AnyFunSuite {
     Engine.tune(spark)
     assert(spark.sql("SELECT minhash_sig(array('a b c'))[0] IS NOT NULL")
       .collect()(0).getBoolean(0))
+  }
+
+  test("every kernel's generated code returns its interpreted rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    val sqRnd = new scala.util.Random(7)
+    val sqFrame = Seq.fill(20)(
+      (Array.fill(64)(sqRnd.nextLong() % 4000000L),
+       Array.fill(64)(sqRnd.nextLong() % 4000000L))).toDF("a", "b")
+    val (a, b, s) = (col("a"), col("b"), col("s"))
+    val nullLongs = lit(null).cast("array<bigint>")
+    val cases: Seq[(String, DataFrame, Seq[Column])] = Seq(
+      ("fold_dot_product", dotFrame, Seq(Fns.dotD(a, b))),
+      ("fold_sq_diff", sqFrame, Seq(Fns.sqDistL(a, b))),
+      ("poly_hash", hashFrame, Seq(Fns.polyHash(s), Fns.polyHash2(s))),
+      ("fnv1a32", fnvFrame, Seq(VectorExpressions.fnv1a(s))),
+      ("sorted_intersect_count", sortedSetsFrame,
+        Seq(VectorExpressions.sortedIntersectCount(a, b),
+          VectorExpressions.sortedIntersectCount(nullLongs, b))),
+      ("sorted_intersect", intersectFrame,
+        Seq(VectorExpressions.sortedIntersect(a, b),
+          VectorExpressions.sortedIntersect(nullLongs, b))),
+      ("cdc_boundaries", Seq(cdcAscii, cdcAstral).toDF("s"), Seq(Fns.cdcBoundaries(s))),
+      ("char_hist", namePairsFrame, Seq(VectorExpressions.charHist(a))),
+      ("bag_distance", namePairsFrame, Seq(VectorExpressions.bagDistance(
+        VectorExpressions.charHist(a), VectorExpressions.charHist(b)))),
+      ("minhash_sig", shinglesFrame, Seq(VectorExpressions.minhashSig(col("shs")))))
+    // doubles compared by their bits; arrays as lists
+    def cells(rows: Array[Row]): Seq[Seq[Any]] = rows.toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case xs: scala.collection.Seq[_] => xs.toList
+      case x => x
+    })
+    val keys = Seq("spark.sql.codegen.fallback", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    cases.foreach { case (name, frame, kernels) =>
+      // over a local relation, ConvertToLocalRelation evaluates the
+      // projection with the interpreted projection while it optimizes
+      val interpreted = frame.select(kernels: _*)
+      assert(interpreted.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], name)
+      val want = cells(interpreted.collect())
+      // the same rows as a scan: the projection runs in generated code, and
+      // a generated class that fails to compile fails the case
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      try {
+        val generated = frame.localCheckpoint().select(kernels: _*)
+        val got = cells(generated.collect())
+        val inCodegen = generated.queryExecution.executedPlan.collect {
+          case w: WholeStageCodegenExec => w.collect { case p: ProjectExec => p }
+        }.flatten
+        assert(inCodegen.exists(_.projectList.exists(_.exists(_.prettyName == name))),
+          s"$name: no ProjectExec running the kernel inside WholeStageCodegenExec")
+        assert(got === want, name)
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   test("cosine of identical vectors is 1.0") {

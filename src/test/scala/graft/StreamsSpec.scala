@@ -108,6 +108,28 @@ class StreamsSpec extends AnyFunSuite {
     outer.filter(_._3 == -1L).foreach { case (_, vid, _) =>
       assert(!matchedViews.contains(vid), s"view $vid emitted null despite a match")
     }
+    // the expired unmatched views, as the oracle defines them: the final
+    // watermark is the least of the two sides' max ts (ms precision) − 1 h,
+    // and a view expires once view_ts + 30 min falls below it. Only the
+    // finalizing no-data batch emits the ones the last data batch left.
+    val ev = Tables.events(spark, sf)
+    def side(t: String) = max(when(col("event_type") === t, col("ts")))
+    val wm = ev.agg(least(side("view"), side("purchase")).as("m"))
+      .select(date_trunc("millisecond", col("m")) - expr("INTERVAL 1 HOUR"))
+      .head().getTimestamp(0)
+    val views = ev.filter(col("event_type") === "view")
+      .select(col("user_id"), col("ts").as("view_ts"), col("event_id").as("view_id"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"))
+    val expired = views
+      .filter(col("view_ts") + expr("INTERVAL 30 MINUTES") < lit(wm))
+      .join(purchases, col("user_id") === col("p_user") &&
+        col("purchase_ts") >= col("view_ts") &&
+        col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"), "left_anti")
+      .collect().map(r => (r.getLong(0), r.getLong(2), -1L)).toSet
+    assert(expired.nonEmpty, "fixture has no expired unmatched view")
+    assert(outer.filter(_._3 == -1L) === expired,
+      "unmatched rows must be exactly the views expired at the final watermark")
   }
 
   test("transformWithState current profile equals batch last-event argmax") {
