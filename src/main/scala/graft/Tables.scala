@@ -193,9 +193,12 @@ object Tables {
   *    Each store is a [[graft.util.CorpusMemo.Store]]
   *    ([[graft.operators.Graph]]).
   *  - `spark.graft.graph.joinPartitions` — explicit width for the graph
-  *    kernels' giant array-SMJ joins and credit aggregation; when unset
-  *    the persisted-memo path sizes it from table bytes against the
-  *    per-task heap share ([[graft.operators.Graph.arrayJoinPartitions]]).
+  *    kernels' giant array-SMJ joins, credit aggregation and components
+  *    contraction; when unset the persisted-memo path sizes the joins
+  *    from table bytes against the per-task heap share
+  *    ([[graft.operators.Graph.arrayJoinPartitions]]) and the contraction
+  *    from its edge list's measured bytes
+  *    ([[graft.operators.Graph.contractionWidth]]).
   *  - `spark.graft.ngram.observedCappedPpm` — OUTPUT, not input: the
   *    pair-memo build publishes its measured stop-shingle dropped
   *    fraction here (integer ppm) so deployments can gate on the df-cap

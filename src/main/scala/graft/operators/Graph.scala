@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.util.{CorpusMemo, FooterStats}
@@ -175,34 +178,32 @@ object Graph {
       // getExecutorInfos includes the driver row; floor at 1 either way
       s.sparkContext.statusTracker.getExecutorInfos.length - 1)
 
-  /** Resolve a sized width for this corpus's heavy stages — None off
-    * the persisted-memo path (test/bench SFs: session defaults are
-    * right there, and plans stay byte-identical to r15's). Memoized per
-    * (session, corpus) in the caller's memo, one per width family:
+  /** The explicit width of the graph kernels: the array joins, and the
+    * components contraction's `contractParts`. */
+  private val JoinPartitions = "spark.graft.graph.joinPartitions"
+
+  /** The array joins' width for this corpus — None off the
+    * persisted-memo path (test/bench SFs: session defaults are right
+    * there, and plans stay byte-identical to r15's), else sized from the
+    * persisted oriented+adj bytes. Memoized per (session, corpus):
     * committed generations are immutable, and on an object store
     * getContentSummary is a recursive remote listing worth paying once,
-    * not per kernel invocation. The explicit
-    * `spark.graft.graph.joinPartitions` override governs the whole
-    * graph-kernel width family. */
-  private def sizedPartsOf(s: SparkSession, dir: String,
-                           memo: CorpusMemo[Int], tables: Seq[String],
-                           expansion: Int, cap: Int): Option[Int] =
-    s.conf.getOption("spark.graft.graph.joinPartitions").map(_.toInt)
+    * not per kernel invocation. [[JoinPartitions]] overrides it. */
+  private def joinPartsOf(s: SparkSession, dir: String): Option[Int] =
+    s.conf.getOption(JoinPartitions).map(_.toInt)
       .orElse(basket.gen(s, dir).map { g =>
-        memo(s, dir) {
+        joinPartsCache(s, dir) {
           val fs = g.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val bytes = tables
+          val bytes = Seq("oriented", "adj")
             .map(t => fs.getContentSummary(new Path(g, t)).getLength).sum
           val (heap, cores) = taskBudgetInputs(s)
-          sizedPartitions(
-            scala.util.Try(s.conf.get("spark.sql.shuffle.partitions").toInt)
-              .getOrElse(s.sparkContext.defaultParallelism),
-            cores, heap, bytes, expansion, cap)
+          arrayJoinPartitions(sessionParts(s), cores, heap, bytes)
         }
       })
 
-  private def joinPartsOf(s: SparkSession, dir: String): Option[Int] =
-    sizedPartsOf(s, dir, joinPartsCache, Seq("oriented", "adj"), 6, 4000)
+  private def sessionParts(s: SparkSession): Int =
+    scala.util.Try(s.conf.get("spark.sql.shuffle.partitions").toInt)
+      .getOrElse(s.sparkContext.defaultParallelism)
 
   private val joinPartsCache = CorpusMemo[Int]()
 
@@ -556,8 +557,9 @@ object Graph {
     }))
 
   /** Connected components of the basket graph — the [[Pipeline
-    * .minLabelComponents]] kernel (convergent min-label propagation with
-    * a loud non-convergence guard) applied to the product co-purchase
+    * .minLabelComponents]] kernel (one union-find task when the edge
+    * list fits, convergent min-label propagation with a loud
+    * non-convergence guard when it does not) applied to the co-purchase
     * topology, reported as the component-size census: how many isolated
     * product clusters exist and how much of the catalog the giant
     * component swallows. The assortment-connectivity diagnostic —
@@ -565,10 +567,11 @@ object Graph {
     * already know the kernel from `q_dedup_clusters`.
     *
     * Scale shape: rides the memoized [[pairSupport]] edge projection;
-    * each superstep is one edges⋈labels equi-join + min-aggregation
-    * (label table is vertex-sized), rounds bounded by component
-    * diameter; the census re-aggregates the vertex-sized label table
-    * twice. */
+    * an edge list within one task's heap share is labelled by a single
+    * union-find task, a larger one by supersteps (one edges⋈labels
+    * equi-join + min-aggregation each, label table vertex-sized, rounds
+    * bounded by component diameter); the census re-aggregates the
+    * vertex-sized label table twice. */
   /** Persisted component labels (round 16): the convergent min-label
     * loop is the most superstep-heavy kernel in the family (145 s per
     * session at the honest-100× corpus) and its output is a VERTEX-sized
@@ -599,13 +602,46 @@ object Graph {
                                          pairBytes: Long): Int =
     sizedPartitions(sessionParts, cores, heapBytes, pairBytes, 36, 8000)
 
-  /** Contraction width for this corpus — sized from the persisted pairs
-    * table's bytes; None off the persisted-memo path (session default —
-    * dedup clusters and test/bench SFs unchanged). */
-  private def contractPartsOf(s: SparkSession, dir: String): Option[Int] =
-    sizedPartsOf(s, dir, contractPartsCache, Seq("pairs"), 36, 8000)
+  /** The contraction width an edge list needs — the one width policy of
+    * the union-find kernel: [[unionFindPartitions]] over the edge list's
+    * [[measuredBytes]], with no session-default floor, so an edge list
+    * whose working set fits one task's heap share gets width 1
+    * ([[Pipeline.minLabelComponents]] then runs one union-find task and
+    * no supersteps). None when the bytes cannot be measured. */
+  private[graft] def contractionWidth(edges: DataFrame): Option[Int] =
+    measuredBytes(edges.queryExecution.analyzed).map { bytes =>
+      val (heap, cores) = taskBudgetInputs(edges.sparkSession)
+      unionFindPartitions(1, cores, heap, bytes)
+    }
 
-  private val contractPartsCache = CorpusMemo[Int]()
+  /** The components build's width when its edge list does not fit one
+    * task: [[JoinPartitions]] when set, else on the persisted-memo path
+    * the heap-keyed width of the persisted pairs, never below the
+    * session default (round 16: at the honest-100× corpus the session
+    * default was an OOM coin flip). None otherwise, so the kernel
+    * measures the edge list itself: one task when it fits, the session
+    * width when it does not. */
+  private def contractPartsOf(s: SparkSession, dir: String): Option[Int] =
+    s.conf.getOption(JoinPartitions).map(_.toInt).orElse(
+      basket.gen(s, dir).flatMap(_ =>
+        contractionWidth(distinctEdges(s, dir)).filter(_ > 1)
+          .map(math.max(sessionParts(s), _))))
+
+  /** Stored bytes of the one table a plan reads through projections and
+    * filters only: the block manager's (or the checkpoint files') bytes
+    * of a checkpoint, or the file bytes of a parquet read. A plan
+    * estimate is never used: an explode or join above the table can
+    * produce far more rows than its estimate, so any other node or leaf
+    * makes the bytes unmeasurable (None). */
+  private[graft] def measuredBytes(p: LogicalPlan): Option[Long] = p match {
+    case r: LogicalRDD => GraftShims.storedBytes(r.rdd)
+    case r: LogicalRelation => r.relation match {
+      case h: HadoopFsRelation => Some(h.location.sizeInBytes)
+      case _ => None
+    }
+    case _: Project | _: Filter => measuredBytes(p.children.head)
+    case _ => None
+  }
 
   def components(s: SparkSession, dir: String): DataFrame = {
     // the vertex→component label table is the same kind of per-corpus

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.util.Checkpoints.StableOps
-import graft.util.{CorpusMemo, GenStore}
+import graft.util.{CorpusMemo, GenStore, UnionFind}
 import graft.functions.Fns
 import graft.functions.Fns._
 
@@ -13,12 +13,12 @@ import graft.functions.Fns._
   * and `embeddings` fixtures.
   *
   * Scale notes: each operator is a constant number of shuffles regardless
-  * of corpus size (the one exception is the iterative label propagation in
-  * [[dedupClusters]], whose rounds scale with component diameter, not
-  * corpus size); pairwise comparisons are always gated by a blocking step
-  * (shared shingle with a document-frequency cap, LSH band bucket,
-  * hyperplane bucket) so the candidate set grows ~linearly, never the full
-  * O(n²) cross product.
+  * of corpus size (the one exception is the iterative label propagation
+  * behind [[dedupClusters]] when the pair graph outgrows one task, whose
+  * rounds scale with component diameter, not corpus size); pairwise
+  * comparisons are always gated by a blocking step (shared shingle with
+  * a document-frequency cap, LSH band bucket, hyperplane bucket) so the
+  * candidate set grows ~linearly, never the full O(n²) cross product.
   */
 object Pipeline {
 
@@ -569,46 +569,82 @@ object Pipeline {
   /** Connected components over the near-dup pair graph: every doc in a
     * pair gets the minimum doc_id of its component as `cluster_id` — the
     * canonicalization step that turns pairwise near-dup hits into "keep
-    * one per group" decisions. Min-label propagation run TO CONVERGENCE
-    * (GraphX-Pregel style: one superstep + one changed-label count per
-    * round, each over the tiny materialized pair graph), so a component of
-    * any diameter labels correctly — no fixed round count to outgrow on a
-    * corpus with longer near-dup chains. The spec cross-checks against an
-    * exact union-find and a synthetic diameter-6 chain; the oracle
+    * one per group" decisions. [[minLabelComponents]] labels exactly
+    * (one task's union-find when the pair graph fits, min-label
+    * propagation to convergence when it does not), so a component of any
+    * diameter labels correctly. The spec cross-checks both paths against
+    * an exact union-find and a synthetic diameter-6 chain; the oracle
     * computes the true transitive closure. */
   // the cluster table is the corpus's dedup decision table — computed once
   // per (session, dir) and reused by dedupApply / curationPipeline, the way
   // a production pipeline materializes it once per corpus snapshot. The
-  // table is tiny (one row per doc that appears in any near-dup pair).
+  // table is tiny (one row per doc that appears in any near-dup pair), and
+  // minLabelComponents already returns it checkpointed.
   private val clustersCache = CorpusMemo[DataFrame]()
 
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    clustersCache(s, dir)(computeClusters(s, dir).stable).orderBy("doc_id")
+    clustersCache(s, dir)(computeClusters(s, dir)).orderBy("doc_id")
 
   private def computeClusters(s: SparkSession, dir: String): DataFrame =
     minLabelComponents(ngramJaccard(s, dir).select(col("doc_a"), col("doc_b")))
 
-  /** Min-label propagation to convergence over an undirected pair graph
-    * (two Long columns: endpoints of each edge). Returns one row per
-    * vertex: (doc_id, cluster_id = min vertex id of its component).
+  private val LongPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+
+  /** The edges of a two-column pair frame as Long tuples. */
+  private def longEdges(pairs: DataFrame): Dataset[(Long, Long)] = {
+    val Array(a, b) = pairs.columns
+    pairs.select(col(a).cast("long"), col(b).cast("long")).as(LongPair)
+  }
+
+  /** Connected components of an undirected pair graph (two integral
+    * columns: the endpoints of each edge). Returns one row per vertex,
+    * (doc_id, cluster_id = min vertex id of its component), read from
+    * one checkpoint (so a caller's `.stable` on it materializes nothing).
     *
-    * The first `floorRounds` supersteps (push labels across edges, keep
-    * the min per vertex) run as pure lineage — one plan, one
-    * materialization. After that each round materializes and counts
-    * changed labels (a join-free filter over the label table, which has
-    * one row per vertex appearing in any pair, NOT per corpus row),
-    * stopping the first round nothing improves; min-label propagation
-    * needs at most `diameter` improving rounds, and `maxRounds` only
-    * guards against a pathological non-terminating plan, not correctness.
-    *
-    * Both the edge list and each round's labels are localCheckpoint'ed:
-    * without it every round replays the full upstream candidate pipeline
-    * through its lineage (measured 10× slower) and the plan tree doubles
-    * per round. This is the standard iterative-graph pattern (GraphX
-    * materializes per superstep the same way). */
+    * `contractParts` = Some(1) runs one union-find task and Some(n > 1)
+    * forces contraction at width n plus supersteps. With None the width
+    * comes from [[Graph.contractionWidth]]: the union-find heap model
+    * (36× bytes against a task's heap share) over MEASURED bytes, never a
+    * plan estimate — the near-dup pair table is an explode of up to
+    * dfCap² pairs per shingle, which a plan estimate can undercount.
+    *  - The edge list's bytes (a checkpoint's block-manager bytes or a
+    *    parquet read's file bytes, under projections and filters) fit
+    *    one task: one task runs a union-find over the whole edge list.
+    *    Union by minimum id makes each root its component's minimum, so
+    *    its (v, root) rows are the exact labels: no superstep, changed-
+    *    label count or round cap runs, and the build is one job.
+    *  - They do not fit, or cannot be measured: contraction at the
+    *    session width, then the materialized forest is measured; one
+    *    task labels it when it fits, supersteps to convergence
+    *    ([[propagateLabels]]) when it does not. A filtered input (the
+    *    near-dup pairs over the pair-stats table) measures as its whole
+    *    table, so the forest is where its true size shows. */
   def minLabelComponents(pairs: DataFrame, floorRounds: Int = 4,
                          maxRounds: Int = 64,
-                         contractParts: Option[Int] = None): DataFrame = {
+                         contractParts: Option[Int] = None): DataFrame =
+    if (contractParts.fold(Graph.contractionWidth(pairs).contains(1))(_ == 1))
+      unionFindLabels(pairs)
+    else {
+      val forest = contractedForest(pairs, contractParts.getOrElse(
+        pairs.sparkSession.sessionState.conf.numShufflePartitions))
+      if (contractParts.isEmpty && Graph.contractionWidth(forest).contains(1))
+        unionFindLabels(forest)
+      else propagateLabels(forest, floorRounds, maxRounds)
+    }
+
+  /** The width-1 path: one task's union-find over every edge. coalesce,
+    * not repartition: the single task reads the upstream partitions
+    * directly, with no shuffle. */
+  private def unionFindLabels(pairs: DataFrame): DataFrame =
+    longEdges(pairs).coalesce(1).mapPartitions { it =>
+      val uf = new UnionFind
+      it.foreach { case (x, y) => uf.union(x, y) }
+      uf.vertices.map(v => (v, uf.find(v)))
+    }(LongPair).toDF("doc_id", "cluster_id").stable
+
+  /** Each partition's spanning forest of its edges, both directions, as
+    * (src, dst) hash-partitioned on src and materialized. */
+  private def contractedForest(pairs: DataFrame, parts: Int): DataFrame = {
     val Array(a, b) = pairs.columns
     // LOCAL CONTRACTION before any superstep: each partition runs an
     // in-memory union-find over its own edges and emits one (v, local
@@ -632,69 +668,54 @@ object Pipeline {
     // Both edge directions are emitted here so the contracted table needs
     // no second union pass; self-pairs keep isolated-self-edge vertices
     // visible to the label init below.
-    // `contractParts` (round 16): per-task union-find memory grows with
-    // edges-per-partition, so the partition count must GROW with the
-    // edge list — at the honest-100× corpus the session default (32)
-    // put ~7.5 M directed edges through each task's parent map (one
-    // probe session OOM'd, the rerun passed — a coin flip, not a
-    // memory model; the boxed-HashMap era cost ~110 B/entry, and even
-    // the primitive map below wants a real bound).
+    // `parts` must GROW with the edge list: per-task union-find memory
+    // grows with edges-per-partition, and at the honest-100× corpus the
+    // session default (32) put ~7.5 M directed edges through each task's
+    // parent map (round 16: one probe session OOM'd, the rerun passed).
     // Callers that know the edge table's size pass a heap-keyed count
-    // ([[graft.operators.Graph.unionFindPartitions]]); None keeps the
-    // session default (test SFs, the doc near-dup graph). Wider
-    // contraction trades collapse ratio for a deterministic bound —
-    // correctness holds under ANY partitioning (see above).
-    val raw = pairs.union(pairs.select(col(b), col(a)))
-      .toDF("src", "dst")
-      .repartition(contractParts.getOrElse(
-        pairs.sparkSession.sessionState.conf.numShufflePartitions))
-    val contractedPairs = {
-      import org.apache.spark.sql.Encoders
-      raw.select(col("src").cast("long"), col("dst").cast("long"))
-        .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+    // ([[Graph.components]] on its persisted store). The parent table is
+    // primitive and the output streamed, so a task's peak is the parent
+    // table alone.
+    val contractedPairs =
+      longEdges(pairs.union(pairs.select(col(b), col(a))).repartition(parts))
         .mapPartitions { it =>
-          // primitive open-addressing parent table + STREAMED output
-          // (round 16): the boxed java.util.HashMap cost ~100 B/entry
-          // and the buffered ArrayBuffer another ~100 B/pair — at the
-          // honest-100× corpus that was ~250 MB/task × 32 concurrent,
-          // an OOM even after the width fix. The flat-array map is
-          // ~24 B/entry and the output iterator materializes nothing;
-          // per-task peak is now the parent table alone.
-          val parent = new graft.util.LongLongMap(1 << 12)
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-            var c = x
-            while (c != r) { val n = parent.getOrElse(c, c); parent.put(c, r); c = n }
-            r
-          }
-          def add(x: Long): Unit =
-            if (!parent.contains(x)) parent.put(x, x)
-          it.foreach { case (x, y) =>
-            add(x); add(y)
-            val rx = find(x); val ry = find(y)
-            if (rx != ry) {
-              if (rx < ry) parent.put(ry, rx) else parent.put(rx, ry)
-            }
-          }
-          // no NEW keys are inserted below (find only path-compresses
-          // existing ones), so the snapshot iteration is stable
-          parent.keysSnapshot.flatMap { v =>
-            val r = find(v)
+          val uf = new UnionFind
+          it.foreach { case (x, y) => uf.union(x, y) }
+          uf.vertices.flatMap { v =>
+            val r = uf.find(v)
             if (r == v) Iterator.single((v, r)) else Iterator((v, r), (r, v))
           }
-        }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+        }(LongPair)
         .toDF("src", "dst")
-    }
     // hash-partition the contracted table on src BEFORE materializing it:
     // every superstep joins on src, and the label table arrives from its
     // groupBy(v) already hash-partitioned on the same key, so the join
     // itself never exchanges either side — each round's only shuffle is
     // the groupBy(v) over the pushed labels. LogicalRDD keeps the
     // checkpoint's output partitioning, so the planner reuses it per round.
-    val edges = contractedPairs
-      .repartition(col("src"))
-      .stable
+    contractedPairs.repartition(col("src")).stable
+  }
+
+  /** Min-label propagation to convergence over a contracted forest
+    * (`src`, `dst`; both directions), the path for a forest that does
+    * not fit one task.
+    *
+    * The first `floorRounds` supersteps (push labels across edges, keep
+    * the min per vertex) run as pure lineage — one plan, one
+    * materialization. After that each round materializes and counts
+    * changed labels (a join-free filter over the label table, which has
+    * one row per vertex appearing in any pair, NOT per corpus row),
+    * stopping the first round nothing improves; min-label propagation
+    * needs at most `diameter` improving rounds, and `maxRounds` only
+    * guards against a pathological non-terminating plan, not correctness.
+    *
+    * Each round's labels are localCheckpoint'ed, like the forest:
+    * without it every round replays the full upstream candidate pipeline
+    * through its lineage (measured 10× slower) and the plan tree doubles
+    * per round. This is the standard iterative-graph pattern (GraphX
+    * materializes per superstep the same way). */
+  private def propagateLabels(edges: DataFrame, floorRounds: Int,
+                              maxRounds: Int): DataFrame = {
     def superstep(labels: DataFrame): DataFrame = {
       val viaEdges = edges.join(labels, col("src") === col("v"))
         .select(col("dst").as("v"), col("lbl"))

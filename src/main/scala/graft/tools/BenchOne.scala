@@ -1,7 +1,11 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 /** Dev tool: per-query timing with live output (Bench prints only at end).
-  * runMain graft.tools.BenchOne <sfDir> [query ...] */
+  * runMain graft.tools.BenchOne <sfDir> [query ...]
+  * A name already timed in the current pass starts a new pass, and each
+  * pass after the first starts with `CorpusMemo.invalidate(spark, sfDir)`
+  * as perfbench's passes do: `q1 q2 q1 q2` times two passes that each
+  * build their memos, so a memo build's cost shows in every pass. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
@@ -28,7 +32,12 @@ object BenchOne {
       })
     // Force with the noop sink, matching graft.Bench (count() lets
     // Catalyst prune measure columns — timings then under-measure).
+    val pass = scala.collection.mutable.Set.empty[String]
     names.foreach { n =>
+      if (!pass.add(n)) {
+        graft.util.CorpusMemo.invalidate(spark, sfDir)
+        pass.clear(); pass += n
+      }
       val t0 = System.nanoTime()
       val ok = try {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)

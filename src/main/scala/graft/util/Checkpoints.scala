@@ -1,6 +1,9 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Single chokepoint for every "materialize this shared investment once"
   * site in the engine (graph edge lists, near-dup pair tables, k-means
@@ -30,23 +33,48 @@ object Checkpoints {
   private val appliedDir = new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** Materialize `df` eagerly and return a plan that re-reads the
-    * materialized blocks (lineage cut). Mode per the session confs above. */
-  def stable(df: DataFrame): DataFrame = {
-    val out = stable0(df)
-    // attach a boundedness certificate to the checkpoint's RDD so the
-    // broadcast-hint audit (graft.tools.HintAudit) can still prove what
-    // was provable about the pre-checkpoint plan after lineage is cut —
-    // without this, every memoized k-row centroid/codebook table would
-    // look like an opaque corpus-sized leaf.
-    graft.tools.HintAudit.certifyStable(df, out)
-    out
+    * materialized blocks (lineage cut). Mode per the session confs above.
+    * A frame that already reads a checkpoint is returned as is. */
+  def stable(df: DataFrame): DataFrame =
+    if (readsCheckpoint(df)) df
+    else {
+      val out = stable0(df)
+      // attach a boundedness certificate to the checkpoint's RDD so the
+      // broadcast-hint audit (graft.tools.HintAudit) can still prove what
+      // was provable about the pre-checkpoint plan after lineage is cut —
+      // without this, every memoized k-row centroid/codebook table would
+      // look like an opaque corpus-sized leaf.
+      graft.tools.HintAudit.certifyStable(df, out)
+      out
+    }
+
+  private def reliable(df: DataFrame): Boolean = df.sparkSession.conf
+    .getOption("spark.graft.checkpoint.reliable").exists(_.toBoolean)
+
+  /** `df` already reads one checkpoint of the session's mode, at most
+    * renaming or dropping its columns (e.g. a label table a kernel
+    * returns checkpointed, which a memo store stabilizes again). A second
+    * checkpoint would copy the same rows with another job, and
+    * certifying it from the cut lineage would prove less than the
+    * certificate the first one carries. */
+  private def readsCheckpoint(df: DataFrame): Boolean = {
+    val mode = reliable(df)
+    def reads(p: LogicalPlan): Boolean = p match {
+      case r: LogicalRDD =>
+        r.rdd.isCheckpointed && r.rdd.getCheckpointFile.isDefined == mode
+      case Project(list, child) =>
+        list.forall {
+          case _: Attribute | Alias(_: Attribute, _) => true
+          case _ => false
+        } && reads(child)
+      case _ => false
+    }
+    reads(df.queryExecution.analyzed)
   }
 
   private def stable0(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val reliable = spark.conf
-      .getOption("spark.graft.checkpoint.reliable").exists(_.toBoolean)
-    if (reliable) {
+    if (reliable(df)) {
       val sc = spark.sparkContext
       spark.conf.getOption("spark.graft.checkpoint.dir") match {
         case Some(dir) =>

@@ -46,6 +46,29 @@ object GraftShims {
     SQLConf.withExistingConf(sized)(CodeGenerator.compileTime)
   }
 
+  /** Measured bytes of a checkpointed RDD's stored copy: the files of a
+    * reliable checkpoint, or the memory + disk bytes the block manager
+    * holds for a local one (the block manager master is
+    * `private[spark]`). None when the RDD is not checkpointed or some
+    * partition's block is missing. */
+  def storedBytes(rdd: org.apache.spark.rdd.RDD[_]): Option[Long] =
+    rdd.getCheckpointFile match {
+      case Some(f) =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        Some(p.getFileSystem(rdd.context.hadoopConfiguration)
+          .getContentSummary(p).getLength)
+      case None if rdd.isCheckpointed =>
+        import org.apache.spark.storage.RDDBlockId
+        val blocks = org.apache.spark.SparkEnv.get.blockManager.master
+          .getStorageStatus.iterator.flatMap(_.rddBlocks)
+          .collect { case (RDDBlockId(id, part), st) if id == rdd.id =>
+            part -> (st.memSize + st.diskSize) }
+          .toMap
+        if (blocks.size == rdd.getNumPartitions) Some(blocks.values.sum)
+        else None
+      case None => None
+    }
+
   /** Whether `spark`'s jobs run on their own executor class loader
     * (`spark.sql.artifact.isolation.enabled`). Spark reads the key once
     * per session, at this call or the session's first job, whichever

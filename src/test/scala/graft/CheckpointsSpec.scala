@@ -17,6 +17,20 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(!df.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
   }
 
+  test("a frame that already reads a checkpoint is returned as is, certificate kept") {
+    import spark.implicits._
+    val first = Checkpoints.stable(spark.range(3).toDF("n"))
+    // renames and dropped columns over the checkpoint: no second copy,
+    // and the audit still sees the first checkpoint's row bound
+    val renamed = first.select($"n".as("m"))
+    assert(Checkpoints.stable(renamed) eq renamed)
+    assert(graft.tools.HintAudit.constantBounded(
+      Checkpoints.stable(renamed).queryExecution.analyzed))
+    // a computed column is new data: that frame is materialized
+    val computed = first.select(($"n" + 1).as("m"))
+    assert(!(Checkpoints.stable(computed) eq computed))
+  }
+
   test("reliable mode writes a filesystem checkpoint and reads it back") {
     import spark.implicits._
     val dir = graft.util.TempDirs.create("graft_ckpt").toString

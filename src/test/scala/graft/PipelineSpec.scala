@@ -316,12 +316,89 @@ class PipelineSpec extends AnyFunSuite {
     // chain 107-106-...-101 (diameter 6, min label at the FAR end from the
     // high ids, so a fixed small round count would mislabel) + disjoint pair
     val chain = (101L to 106L).map(v => (v, v + 1))
-    val pairs = (chain :+ (900L, 901L)).toDF("doc_a", "doc_b")
-    val got = Pipeline.minLabelComponents(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    val pairs = (chain :+ (900L, 901L)).toDF("doc_a", "doc_b").localCheckpoint()
     val want = (101L to 107L).map(_ -> 101L).toMap ++
       Map(900L -> 900L, 901L -> 900L)
-    assert(got === want)
+    // the measured width (one union-find task) and a forced superstep path
+    Seq(None, Some(4)).foreach { parts =>
+      val got = Pipeline.minLabelComponents(pairs, contractParts = parts)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(got === want, s"contractParts $parts")
+    }
+  }
+
+  /** Jobs `body` starts, counted up to a marker job (the listener bus
+    * delivers in order, so every earlier job has been seen by then). */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = "graft-pipeline-spec-marker"
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+              p.getProperty("spark.job.description") == marker)) markerSeen = true
+        else if (!markerSeen) started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen)
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("minLabelComponents width: measured bytes choose one union-find task or supersteps") {
+    import spark.implicits._
+    import graft.operators.Graph
+    // the heap model with no session floor: at 8 GB / 32 cores a task's
+    // share is 64 MB, so 1 MB of edges (36 MB in heap) fits one task and
+    // 733 MB needs 413
+    val g8 = 8L << 30
+    assert(Graph.unionFindPartitions(1, 32, g8, 1L << 20) === 1)
+    assert(Graph.unionFindPartitions(1, 32, g8, 733L << 20) === 413)
+    // measured tables, through projections and filters: a local
+    // checkpoint's stored blocks, a reliable checkpoint's files and
+    // parquet files
+    val local = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    def bytes(df: org.apache.spark.sql.DataFrame) =
+      Graph.measuredBytes(df.queryExecution.analyzed)
+    val ckpt = local.localCheckpoint(eager = true)
+    assert(bytes(ckpt.filter($"a" > 1).select($"b", $"a")).exists(_ > 0))
+    val dir = graft.util.TempDirs.create("graft_cc_width").toString
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    spark.conf.set("spark.graft.checkpoint.dir", s"$dir/ckpt")
+    try assert(bytes(graft.util.Checkpoints.stable(local)).exists(_ > 0))
+    finally spark.conf.set("spark.graft.checkpoint.reliable", "false")
+    local.write.mode("overwrite").parquet(s"$dir/pq")
+    val files = new java.io.File(s"$dir/pq").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    assert(bytes(spark.read.parquet(s"$dir/pq").select("a", "b")) === Some(files))
+    assert(Graph.contractionWidth(ckpt) === Some(1))
+    // below the budget the build is one job: the union-find task's checkpoint
+    assert(jobsOf(Pipeline.minLabelComponents(ckpt)) === 1)
+    // local rows and an explode (which can emit more rows than any
+    // estimate) are unmeasurable, so the kernel contracts first, measures
+    // the forest and still labels exactly ({0,1,2,3} joined through the
+    // exploded pairs)
+    assert(Graph.contractionWidth(local) === None)
+    val exploded = spark.range(3)
+      .select(explode(array($"id", $"id" + 1)).as("a"), $"id".as("b"))
+    assert(Graph.contractionWidth(exploded) === None)
+    assert(Pipeline.minLabelComponents(exploded).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap ===
+      (0L to 3L).map(_ -> 0L).toMap)
+    // above width 1 the superstep path keeps its loud round cap: a
+    // 200-edge chain cannot converge in 2 rounds
+    val chain = (1L to 200L).map(v => (v, v + 1)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException](Pipeline.minLabelComponents(
+      chain, floorRounds = 1, maxRounds = 2, contractParts = Some(4)))
+    assert(e.getMessage.contains("hit the 2-round cap before convergence"))
   }
 
   test("hash_sample is deterministic and a strict subset") {

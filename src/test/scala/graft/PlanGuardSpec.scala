@@ -103,7 +103,7 @@ class PlanGuardSpec extends AnyFunSuite {
     * ORDER CONTRACT (ADVICE r14): these budgets were recorded with the
     * session memos warmed in FULL-BATTERY SORTED ORDER — the order the
     * per-query tests below register and ScalaTest runs them. Several
-    * budgets (e.g. q_graph_components 3, q_copurchase 0) assume an
+    * budgets (e.g. q_graph_components 0, q_copurchase 0) assume an
     * earlier query in that order already built a CorpusMemo checkpoint,
     * truncating the censused plan at the checkpoint leaf. Consequences,
     * stated so nobody trips on them: (a) a FILTERED run
@@ -165,7 +165,7 @@ class PlanGuardSpec extends AnyFunSuite {
     // +2 in round 9: forced broadcast(drop) hint dropped (duplicate-mass-
     // linear drop list); the left-anti now shuffles both sides at tiny SF
     "q_dedup_apply" -> 4,
-    "q_dedup_clusters" -> 1,
+    "q_dedup_clusters" -> 0, // reads the one-task union-find's label checkpoint
     "q_dedup_containment" -> 1,
     "q_dedup_exact" -> 2,
     "q_dedup_funnel" -> 4,
@@ -261,9 +261,11 @@ class PlanGuardSpec extends AnyFunSuite {
     "q_split_parity" -> 11, // rides the memoized cluster split + cell TVD
     "q_gap_fill" -> 2, // one user-keyed window, no joins
     "q_mom_growth" -> 2, // corpus → month cells; lag over cells
-    "q_graph_components" -> 3, // min-label supersteps over the memoized
-                                // edge table (one join+agg per round,
-                                // rounds = component diameter)
+    "q_graph_components" -> 0, // the memoized edge table fits one union-
+                                // find task: its single-partition labels
+                                // feed both census aggregations unexchanged
+                                // (a wider edge list runs supersteps, one
+                                // join+agg per round)
     "q_keyness" -> 9, // corpus → (source,word) cells; totals re-agg cells; top-10 heap
     "q_stream_active_users" -> 1, // per-batch dedup+window state exchanges
     "q_weighted_median" -> 3, // corpus → (flag, qty) cells; windows run over cells

@@ -56,16 +56,28 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Labels of both paths over the edges checkpointed, as the memo
+    * tables the kernel labels are: the measured width (one union-find
+    * task at these sizes) and a forced width of 4 (contraction +
+    * supersteps). */
+  private def bothWidths(edges: org.apache.spark.sql.DataFrame,
+                         floorRounds: Int): Seq[(String, Map[Long, Long])] = {
+    val table = edges.localCheckpoint()
+    Seq("measured" -> None, "4" -> Some(4)).map { case (w, parts) =>
+      w -> graft.operators.Pipeline
+        .minLabelComponents(table, floorRounds, contractParts = parts)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    }
+  }
+
   test("minLabelComponents equals union-find on random graphs") {
     (1 to 4).foreach { trial =>
       // sparse random graphs over ~25 vertices; floorRounds forced to 1 so
-      // the convergence phase (not the unchecked fast path) does the work
+      // on the superstep path the convergence phase (not the unchecked
+      // fast path) does the work
       val edges = (0 until 20).map(_ =>
         (rnd.nextInt(25).toLong + 1, rnd.nextInt(25).toLong + 1))
         .filter(e => e._1 != e._2)
-      val got = graft.operators.Pipeline
-        .minLabelComponents(edges.toDF("a", "b"), floorRounds = 1)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
         val p = parent.getOrElse(x, x)
@@ -77,7 +89,9 @@ class PropertySpec extends AnyFunSuite {
       }
       val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
         .map(v => v -> find(v)).toMap
-      assert(got === want, s"trial $trial")
+      bothWidths(edges.toDF("a", "b"), floorRounds = 1).foreach { case (w, got) =>
+        assert(got === want, s"trial $trial width $w")
+      }
     }
   }
 
@@ -123,10 +137,10 @@ class PropertySpec extends AnyFunSuite {
         }
         val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
         val want = verts.map(v => v -> find(v)).toMap
-        val got = graft.operators.Pipeline
-          .minLabelComponents(edges.toDF("doc_a", "doc_b"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-        assert(got === want, s"trial $trial (v=$nV e=${edges.length})")
+        bothWidths(edges.toDF("doc_a", "doc_b"), floorRounds = 4).foreach {
+          case (w, got) =>
+            assert(got === want, s"trial $trial width $w (v=$nV e=${edges.length})")
+        }
       }
     }
   }

@@ -16,9 +16,14 @@ any run was not correct or printed no result.
 
 Query mode: pair i runs `sbt -batch "runMain graft.tools.BenchOne SFDIR
 q1 q2 ... q1 q2 ..."` in each checkout: the list twice in one JVM, so the
-second pass runs with the session, the generated classes and the
-per-corpus memos warm. It keeps each query's second `TIMING` line and
-prints the same table per query (lower is better). It exits non-zero if
+second pass runs with the session and the generated classes warm.
+BenchOne starts the second pass with `CorpusMemo.invalidate`, as
+perfbench's passes do, so the pass builds its per-corpus memos again and
+a memo-building query's time includes its build. A checkout whose
+BenchOne predates that reads the first pass's memos instead; give both
+sides the same BenchOne before comparing them. It keeps each query's
+second `TIMING` line and prints the same table per query (lower is
+better). It exits non-zero if
 any query failed or printed no timing. sbt and BenchOne read their
 settings from the environment (`COURSIER_MODE`, `SBT_OPTS`,
 `SPARK_DRIVER_MEM`, `SPARK_GRAFT_CPUS`, which defaults to 32 cores).
